@@ -843,21 +843,29 @@ def q_extract_counts(spark, sf_dir):
     )
 
 
+def _caps_summary(bucketed, key_cols):
+    """One-row capped-bucket totals (buckets_capped, pairs_avoided) of a
+    bucket frame, so starred coverage is visible in the output, never silent
+    (skew.oversized_bucket_stats)."""
+    from ocr_toolkit_spark.operators.skew import oversized_bucket_stats
+
+    return oversized_bucket_stats(bucketed, key_cols).agg(
+        F.count("*").alias("buckets_capped"),
+        F.coalesce(F.sum("pairs_avoided"), F.lit(0)).alias("pairs_avoided"),
+    )
+
+
 def q_minhash_dedup(spark, sf_dir):
     """Self-validating (r3 verdict #1): every emitted pair's Jaccard is
     recomputed from TEXT by the verify stage, so the output carries the
     bound itself (min_jaccard ≥ threshold ⇒ meets_threshold true), plus
-    the capped-bucket totals so starred coverage is driver-visible, never
-    silent (skew.oversized_bucket_stats)."""
+    the capped-bucket totals (_caps_summary)."""
     from ocr_toolkit_spark.operators.dedup import (
         jaccard_verify,
         minhash_banded_frame,
+        minhash_pairs_from_banded,
     )
-    from ocr_toolkit_spark.operators.skew import (
-        oversized_bucket_stats,
-        spread,
-        star_capped_pairs,
-    )
+    from ocr_toolkit_spark.operators.skew import spread
 
     # spread (r7): shingle build + 32 per-seed hash minima run map-side
     # before the per-doc aggregation — one task on a single-row-group
@@ -865,25 +873,15 @@ def q_minhash_dedup(spark, sf_dir):
     # candidate set and verified pairs are unchanged.
     d = spread(_docs(spark, sf_dir))
     banded = minhash_banded_frame(d, "doc_id", "text", k=5, n_hashes=32, bands=8)
-    from ocr_toolkit_spark.operators.dedup import BANDED_ROW_BYTES
-    from ocr_toolkit_spark.operators.skew import broadcast_build_fits
-
-    cand = star_capped_pairs(
-        banded, ["band", "band_hash"], "id", materialize_input=False,
-        broadcast_build=broadcast_build_fits(banded, BANDED_ROW_BYTES),
-    ).distinct()
+    cand = minhash_pairs_from_banded(banded)
     verified = jaccard_verify(cand, d, "doc_id", "text", k=5, threshold=0.5)
-    caps = oversized_bucket_stats(banded, ["band", "band_hash"]).agg(
-        F.count("*").alias("buckets_capped"),
-        F.coalesce(F.sum("pairs_avoided"), F.lit(0)).alias("pairs_avoided"),
-    )
     return verified.agg(
         F.count("*").alias("near_dup_pairs"),
         F.round(F.coalesce(F.avg("jaccard"), F.lit(0.0)), 4).alias("avg_jaccard"),
         F.round(F.coalesce(F.min("jaccard"), F.lit(1.0)), 4).alias("min_jaccard"),
         F.lit(0.5).alias("jaccard_threshold"),
         (F.coalesce(F.min("jaccard"), F.lit(1.0)) >= 0.5).alias("meets_threshold"),
-    ).crossJoin(caps)
+    ).crossJoin(_caps_summary(banded, ["band", "band_hash"]))
 
 
 def q_delta_dedup(spark, sf_dir):
@@ -947,27 +945,18 @@ def q_simhash_dedup(spark, sf_dir):
         simhash_pairs_from_pieces,
         simhash_pieces_frame,
     )
-    from ocr_toolkit_spark.operators.skew import oversized_bucket_stats, spread
+    from ocr_toolkit_spark.operators.skew import spread
 
     # spread (r7): the vectorized SimHash UDF ran in a one-task scan stage
     # on the single-row-group input; signatures are per-doc deterministic.
-    from ocr_toolkit_spark.operators.dedup import PIECES_ROW_BYTES
-    from ocr_toolkit_spark.operators.skew import broadcast_build_fits
-
     pieces = simhash_pieces_frame(spread(_docs(spark, sf_dir)), chunks=4)
-    pairs = simhash_pairs_from_pieces(
-        pieces, max_hamming=3,
-        broadcast_build=broadcast_build_fits(pieces, PIECES_ROW_BYTES))
-    caps = oversized_bucket_stats(pieces, ["chunk", "val"]).agg(
-        F.count("*").alias("buckets_capped"),
-        F.coalesce(F.sum("pairs_avoided"), F.lit(0)).alias("pairs_avoided"),
-    )
+    pairs = simhash_pairs_from_pieces(pieces, max_hamming=3)
     return pairs.agg(
         F.count("*").alias("simhash_pairs"),
         F.coalesce(F.max("hamming"), F.lit(0)).alias("max_hamming_observed"),
         F.lit(3).alias("hamming_cutoff"),
         (F.coalesce(F.max("hamming"), F.lit(0)) <= 3).alias("within_cutoff"),
-    ).crossJoin(caps)
+    ).crossJoin(_caps_summary(pieces, ["chunk", "val"]))
 
 
 def _ann_recall_report(ann, bf, k, floor):
@@ -1033,11 +1022,7 @@ def q_embedding_near_dups(spark, sf_dir):
         embedding_near_dups,
         with_vec_norm,
     )
-    from ocr_toolkit_spark.operators.skew import (
-        materialize,
-        oversized_bucket_stats,
-        spread,
-    )
+    from ocr_toolkit_spark.operators.skew import materialize, spread
 
     e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
@@ -1046,10 +1031,6 @@ def q_embedding_near_dups(spark, sf_dir):
         id_col="vec_id", vec_col="embedding", return_bucketed=True,
     )
     pairs = materialize(raw_pairs.distinct())
-    caps = oversized_bucket_stats(v, ["bucket"]).agg(
-        F.count("*").alias("buckets_capped"),
-        F.coalesce(F.sum("pairs_avoided"), F.lit(0)).alias("pairs_avoided"),
-    )
     # recall side of the bound (the lsh/ivf floor pattern): a 5-query
     # exact brute-force slice. Every SRP pair already passed the exact
     # cosine filter (⊆ exact by construction), so count equality on the
@@ -1097,7 +1078,7 @@ def q_embedding_near_dups(spark, sf_dir):
             (F.coalesce(F.min("sim"), F.lit(1.0)) >= 0.9).alias(
                 "meets_threshold"),
         )
-        .crossJoin(caps)
+        .crossJoin(_caps_summary(v, ["bucket"]))
         .crossJoin(slice_counts)
     )
 
@@ -1117,6 +1098,7 @@ def q_delta_embedding_dedup(spark, sf_dir):
 
     from ocr_toolkit_spark.operators.incremental import (
         incremental_embedding_round,
+        srp_banded_frame,
     )
     from ocr_toolkit_spark.operators.similarity import embedding_near_dups
 
@@ -1162,21 +1144,11 @@ def q_delta_embedding_dedup(spark, sf_dir):
     ip = inc_pairs.select("id_a", "id_b").distinct()
     fp = full.select("id_a", "id_b").distinct()
     pair_sym = ip.exceptAll(fp).unionAll(fp.exceptAll(ip))
-    from ocr_toolkit_spark.operators.incremental import srp_banded_frame
-    from ocr_toolkit_spark.operators.skew import DEFAULT_MAX_BUCKET
-
-    caps = (
+    caps = _caps_summary(
         srp_banded_frame(e, dim, n_bits=cfg["n_bits"], seed=cfg["seed"],
-                         materialize_frame=False)
-        .groupBy("band", "band_hash")
-        .agg(F.count("*").alias("_n"))
-        .agg(
-            F.coalesce(
-                F.sum((F.col("_n") > DEFAULT_MAX_BUCKET).cast("long")),
-                F.lit(0),
-            ).alias("buckets_capped")
-        )
-    )
+                         materialize_frame=False),
+        ["band", "band_hash"],
+    ).select("buckets_capped")
     return (
         base.agg(F.count("*").alias("base_vecs"))
         .crossJoin(delta.agg(F.count("*").alias("delta_vecs")))
@@ -1244,6 +1216,7 @@ def q_ivf_index_delta(spark, sf_dir):
         ivf_index_topk,
     )
     from ocr_toolkit_spark.operators.similarity import brute_force_topk
+    from ocr_toolkit_spark.operators.skew import materialize
 
     e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
@@ -1289,7 +1262,7 @@ def q_ivf_index_delta(spark, sf_dir):
         )
         # the report still reads the scratch index dirs — pin the rows
         # before deleting them (the q_delta_dedup precedent)
-        rep = rep.localCheckpoint(eager=True)
+        rep = materialize(rep)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return rep

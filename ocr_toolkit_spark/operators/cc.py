@@ -21,7 +21,7 @@ lengths, so convergence is O(log n) rounds independent of diameter —
 the property-tested scale path when the input is not star-guarded.
 
 Scale shape per round: one shuffle join (edges ⋈ labels on dst) + one hash
-agg (min per src) + one join back — all on node-id keys. `localCheckpoint`
+agg (min per src) + one join back — all on node-id keys. `skew.materialize`
 every round truncates the growing lineage so round N's plan does not
 re-execute rounds 1..N-1.
 """
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .skew import materialize
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -78,9 +80,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large/small-star to a fixed point: the edge set becomes
     a forest of stars (node → component min). O(log n) rounds."""
-    e = edges.localCheckpoint(eager=True)
+    e = materialize(edges)
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e2 = materialize(_small_star(_large_star(e)))
         # fixed-point check in ONE action (r3 verdict #6 — was count() +
         # exceptAll().count(), two jobs/round): both frames are distinct
         # edge sets, so equality ⟺ empty symmetric difference, computed
@@ -111,7 +113,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     algorithm: str = "hash_min",
-    materialize_input: bool = True,
 ) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component =
     min node id of the connected component. Converges early when a round
@@ -124,21 +125,15 @@ def connected_components(
     EAGERNESS: connected_components is an inherently EAGER operator — the
     fixed-point loop must run Spark actions at call time to decide
     convergence, so calling it executes the full upstream lineage
-    regardless of flags (unlike the dedup candidate generators, which are
-    plan-only until an action). `materialize_input=False` does NOT make
-    construction lazy (r4 review #3), and it is a PESSIMIZATION when the
-    result is consumed: the input projection is referenced 2–3 times
-    (edge union / nodes union), so an expensive unmaterialized lineage
-    re-executes per reference (r4 review pass 2, #1). Use False only to
-    inspect how the frame is BUILT."""
-    from .skew import materialize
-
+    (unlike the dedup candidate generators, which are plan-only until an
+    action; r4 review #3)."""
     # one materialization of the (src, dst) projection: both algorithms
     # reference it multiply (edges union + nodes scan + anti-join), and
     # `pairs` may carry an expensive unmaterialized LSH/verify lineage
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    if materialize_input:
-        e = materialize(e)
+    # (r4 review pass 2, #1)
+    e = materialize(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    )
     if algorithm == "star":
         labeled = _star_components(
             e.filter(F.col("src") != F.col("dst")).distinct(), max_iter
@@ -157,15 +152,13 @@ def connected_components(
         return labeled.unionByName(singletons)
     if algorithm != "hash_min":
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    edges = e.unionByName(
+    edges = materialize(e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = edges.localCheckpoint(eager=True)
+    ).distinct())
 
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("node")).distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iter):
@@ -174,7 +167,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(nbr_min, labels.node == nbr_min.src, "left")
             .select(
                 "node",
@@ -182,7 +175,6 @@ def connected_components(
                     F.col("label"), F.coalesce("nbr_label", "label")
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -205,11 +197,10 @@ def near_dedup_keep_first(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Dedup decision from verified near-dup pairs: every doc in a
     component except its min-id representative is dropped."""
-    cc = connected_components(pairs, materialize_input=materialize_input)
+    cc = connected_components(pairs)
     losers = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -224,7 +215,6 @@ def full_near_dedup_keep_first(
     n_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    materialize_frames: bool = True,
 ) -> DataFrame:
     """The production dedup composition: EXACT-collapse first, then the
     MinHash near-dup path over distinct texts only.
@@ -262,22 +252,14 @@ def full_near_dedup_keep_first(
     signature work depends on dup rate, doc size and near-dup config.
     Numbers, not intuition: the harness re-measures both every run."""
     from .dedup import jaccard_verify, minhash_lsh_candidates
-    from .skew import materialize
 
     # (id, md5) is narrow — materialized so the text scan + hash run once
     # across the rep groupBy, the losers join and the semi-join (each
-    # frame below is referenced twice). materialize_frames=False removes
-    # the candidate-generation checkpoint jobs, but the composition still
-    # executes eagerly overall: the CC fixed-point loop below runs actions
-    # at call time (see connected_components EAGERNESS note, r4 review #3)
-    h = df.filter(F.col(text_col).isNotNull()).select(
+    # frame below is referenced twice)
+    h = materialize(df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"), F.md5(F.col(text_col)).alias("_h")
-    )
-    if materialize_frames:
-        h = materialize(h)
-    rep = h.groupBy("_h").agg(F.min("_id").alias("_rep_id"))
-    if materialize_frames:
-        rep = materialize(rep)
+    ))
+    rep = materialize(h.groupBy("_h").agg(F.min("_id").alias("_rep_id")))
     exact_losers = (
         h.join(rep, "_h")
         .filter(F.col("_id") != F.col("_rep_id"))
@@ -287,12 +269,10 @@ def full_near_dedup_keep_first(
         rep.select(F.col("_rep_id").alias(id_col)), id_col, "left_semi"
     )
     cand = minhash_lsh_candidates(reps_df, id_col, text_col, k=k,
-                                  n_hashes=n_hashes, bands=bands,
-                                  materialize_frames=materialize_frames)
+                                  n_hashes=n_hashes, bands=bands)
     pairs = jaccard_verify(cand, reps_df, id_col, text_col, k=k,
-                           threshold=threshold,
-                           materialize_frames=materialize_frames)
-    cc = connected_components(pairs, materialize_input=materialize_frames)
+                           threshold=threshold)
+    cc = connected_components(pairs)
     near_losers = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -30,6 +30,7 @@ from .skew import (
     DEFAULT_MAX_BUCKET,
     broadcast_build_fits,
     materialize,
+    spread,
     star_capped_pairs,
 )
 
@@ -235,6 +236,22 @@ def minhash_banded_frame(
     return materialize(banded) if materialize_frame else banded
 
 
+def minhash_pairs_from_banded(
+    banded: DataFrame, max_bucket: int = DEFAULT_MAX_BUCKET
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) from a prebuilt, materialized banded
+    frame (minhash_banded_frame) — the MinHash twin of
+    simhash_pairs_from_pieces. The self-join build side is broadcast when
+    the band frame provably fits the budget (r7, skew.broadcast_build_fits):
+    the materialized frame has no stats, so without the hint the planner
+    picks a sort-merge join whose tiny shuffle AQE coalesces to ~1 task."""
+    bcast = broadcast_build_fits(banded, BANDED_ROW_BYTES)
+    return star_capped_pairs(
+        banded, ["band", "band_hash"], "id", max_bucket=max_bucket,
+        broadcast_build=bcast,
+    ).distinct()
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -243,34 +260,14 @@ def minhash_lsh_candidates(
     n_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize_frames: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) from banded MinHash buckets.
     One shuffle to bucket (explode bands → join), never O(n²): buckets
     above `max_bucket` members are star-linked to their representative
-    instead of all-paired (see operators/skew.py).
-
-    `materialize_frames=False` keeps construction fully lazy (no eager
-    checkpoint jobs at call time) — useful for plan inspection or
-    conditional branches; the default trades construction-time jobs for
-    signature-computed-once execution (r3 review #8)."""
-    banded = minhash_banded_frame(
-        df, id_col, text_col, k, n_hashes, bands,
-        materialize_frame=materialize_frames,
-    )
-    # broadcast the self-join build side when the materialized band frame
-    # provably fits the budget (r7, skew.broadcast_build_fits): the
-    # checkpointed frame has no stats, so without the hint the planner
-    # picks a sort-merge join whose tiny shuffle AQE coalesces to ~1 task.
-    bcast = materialize_frames and broadcast_build_fits(
-        banded, BANDED_ROW_BYTES)
-    return (
-        star_capped_pairs(banded, ["band", "band_hash"], "id",
-                          max_bucket=max_bucket,
-                          materialize_input=False,
-                          broadcast_build=bcast)
-        .distinct()
-    )
+    instead of all-paired (see operators/skew.py). The banded frame is
+    materialized, so the signature pipeline runs once (r3 review #8)."""
+    banded = minhash_banded_frame(df, id_col, text_col, k, n_hashes, bands)
+    return minhash_pairs_from_banded(banded, max_bucket)
 
 
 def jaccard_verify(
@@ -280,7 +277,6 @@ def jaccard_verify(
     text_col: str = "text",
     k: int = 5,
     threshold: float = 0.7,
-    materialize_frames: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs only (array set algebra).
 
@@ -290,10 +286,8 @@ def jaccard_verify(
     shingled the entire corpus to verify a handful of pairs). Both the
     candidate frame and the shingle frame are materialized: candidates
     feed three references (two id projections + the pair join) and the
-    shingle frame two (the _a and _b sides). `materialize_frames=False`
-    keeps construction lazy (plan inspection; r3 review #8)."""
-    if materialize_frames:
-        candidates = materialize(candidates)
+    shingle frame two (the _a and _b sides)."""
+    candidates = materialize(candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias("cid"))
         .unionByName(candidates.select(F.col("id_b").alias("cid")))
@@ -302,22 +296,14 @@ def jaccard_verify(
     # spread (r7): the shingle-array build for the verify runs map-side on
     # the semi-join output, which inherits the corpus scan's partitioning —
     # one task when the corpus is a single-row-group local file. The
-    # DECISION reads the source's partition count (honest from the file
-    # listing; the semi-join plan's count is a pre-AQE guess), but the
-    # repartition applies to the semi-join OUTPUT, so only the
-    # candidate-touched docs are ever shuffled — spreading the source
-    # itself re-shuffled the ENTIRE corpus text before the semi-join could
-    # prune it (measured +17% on the 1M dedup suite, r7b). No-op at real
+    # decision reads the corpus's partition count; only the semi-join
+    # output (candidate-touched docs) is repartitioned. No-op at real
     # scale.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    needed = df.join(
-        cand_ids, F.col(id_col) == F.col("cid"), "left_semi"
+    needed = spread(
+        df.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi"),
+        source=df,
     )
-    if df.rdd.getNumPartitions() * 2 <= target:  # spread's half threshold
-        needed = needed.repartition(target)
-    sh = shingle_frame(needed, id_col, text_col, k)
-    if materialize_frames:
-        sh = materialize(sh)
+    sh = materialize(shingle_frame(needed, id_col, text_col, k))
     # |A∪B| = |A|+|B|-|A∩B| — exact for the distinct shingle sets built
     # above (r7): same integers as size(array_union), so the jaccard
     # double is bit-identical, but the per-pair union-array allocation
@@ -387,11 +373,10 @@ def simhash_pieces_frame(
     id_col: str = "doc_id",
     text_col: str = "text",
     chunks: int = 4,
-    materialize_frame: bool = True,
 ) -> DataFrame:
     """(id, sig, chunk, val) — the pigeonhole bucket frame, one row per
-    (doc, signature chunk). Materialized by default: its lineage holds the
-    vectorized SimHash UDF, and both the candidate self-join and the
+    (doc, signature chunk). Materialized: its lineage holds the vectorized
+    SimHash UDF, and both the candidate self-join and the
     oversized_bucket_stats report re-reference it."""
     sig = df.select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sig")
@@ -419,23 +404,22 @@ def simhash_pieces_frame(
             )
         ).alias("chunk", "val"),
     )
-    return materialize(pieces) if materialize_frame else pieces
+    return materialize(pieces)
 
 
 def simhash_pairs_from_pieces(
     pieces: DataFrame,
     max_hamming: int = 3,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    broadcast_build: bool = False,
 ) -> DataFrame:
-    """Hamming-verified near-dup pairs from a prebuilt pieces frame
-    (simhash_pieces_frame) — exact bit_count(xor) on candidates only.
-    `broadcast_build=True` when the caller proved the pieces frame fits
-    the broadcast budget (skew.broadcast_build_fits)."""
+    """Hamming-verified near-dup pairs from a prebuilt, materialized pieces
+    frame (simhash_pieces_frame) — exact bit_count(xor) on candidates only.
+    The self-join build side is broadcast when the pieces frame provably
+    fits the budget (skew.broadcast_build_fits)."""
+    bcast = broadcast_build_fits(pieces, PIECES_ROW_BYTES)
     cand = star_capped_pairs(
         pieces, ["chunk", "val"], "id", payload_cols=("sig",),
-        max_bucket=max_bucket, materialize_input=False,
-        broadcast_build=broadcast_build,
+        max_bucket=max_bucket, broadcast_build=bcast,
     ).distinct()
     return (
         cand.withColumn(
@@ -453,7 +437,6 @@ def simhash_near_dups(
     max_hamming: int = 3,
     chunks: int = 4,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize_frames: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(sig) ≤ max_hamming.
 
@@ -464,10 +447,5 @@ def simhash_near_dups(
     Chunk buckets above `max_bucket` members are star-linked to their
     representative instead of all-paired (operators/skew.py).
     """
-    pieces = simhash_pieces_frame(
-        df, id_col, text_col, chunks, materialize_frame=materialize_frames
-    )
-    bcast = materialize_frames and broadcast_build_fits(
-        pieces, PIECES_ROW_BYTES)
-    return simhash_pairs_from_pieces(pieces, max_hamming, max_bucket,
-                                     broadcast_build=bcast)
+    pieces = simhash_pieces_frame(df, id_col, text_col, chunks)
+    return simhash_pairs_from_pieces(pieces, max_hamming, max_bucket)

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from .. import io as tio
 from .dedup import jaccard_verify, minhash_banded_frame
-from .skew import DEFAULT_MAX_BUCKET, materialize
+from .skew import DEFAULT_MAX_BUCKET, broadcast_build_fits, materialize, spread
 
 META_FILE = "_dedup_meta.json"
 
@@ -442,8 +442,8 @@ def cosine_verify(
     jaccard_verify: the vector table is semi-joined down to candidate ids
     first (only candidate embeddings are ever read), then one JVM-side
     cosine per pair. Returns (id_a, id_b, sim) with sim ≥ threshold.
-    `materialize_frames=False` keeps construction lazy (plan inspection —
-    the jaccard_verify precedent)."""
+    `materialize_frames=False` keeps construction lazy (plan inspection,
+    tools/explain_report.py)."""
     from .similarity import _norm, cosine_precomputed
 
     if materialize_frames:
@@ -458,17 +458,15 @@ def cosine_verify(
     # per-vector norm is hoisted out of the per-pair cosine — the verify
     # stage pays ONE dot traversal per pair instead of three.
     # cosine_precomputed is bit-identical to cosine (similarity.py), so the
-    # verified pair set and sims are unchanged. The spread decision reads
-    # the SOURCE's partition count but repartitions only the semi-join
-    # output — never the whole vector table (the jaccard_verify r7b
-    # lesson: spreading the source re-shuffles the full corpus before the
-    # semi-join prunes it).
-    target = vectors.sparkSession.sparkContext.defaultParallelism
-    v = vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).join(cand_ids, F.col("id") == F.col("cid"), "left_semi")
-    if vectors.rdd.getNumPartitions() * 2 <= target:  # spread's threshold
-        v = v.repartition(target)
+    # verified pair set and sims are unchanged. The decision reads the
+    # vector table's partition count; only the semi-join output is
+    # repartitioned (skew.spread `source`).
+    v = spread(
+        vectors.select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+        ).join(cand_ids, F.col("id") == F.col("cid"), "left_semi"),
+        source=vectors,
+    )
     v = v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>")))
     hint = lambda df: df  # noqa: E731
     if materialize_frames:
@@ -498,8 +496,6 @@ def cosine_verify(
         # both pair joins are sort-merge joins whose tiny shuffles AQE
         # coalesces to ~1 task — serializing the per-pair dot. Needs `dim`
         # (callers that know it pass it); unknown → no hint.
-        from .skew import broadcast_build_fits
-
         if dim is not None and broadcast_build_fits(v, dim * 4 + 96):
             hint = F.broadcast
     return (

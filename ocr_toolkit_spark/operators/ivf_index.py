@@ -56,7 +56,9 @@ from .similarity import (
     cosine_precomputed,
     make_ivf_assigner,
     train_ivf_centroids,
+    with_vec_norm,
 )
+from .skew import materialize, spread
 
 META_FILE = "_ivf_meta.json"
 QUANTIZER_FILE = "_quantizer.npy"
@@ -257,7 +259,7 @@ def build_ivf_index(
         vectors, dim, n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
     )
     assigned = _assigned(vectors, centroids, id_col, vec_col)
-    assigned = assigned.localCheckpoint(eager=True)  # assign once, use 3×
+    assigned = materialize(assigned)  # assign once, use 3×
     n = assigned.count()
     if n == 0:
         raise ValueError("build_ivf_index: empty base corpus")
@@ -310,7 +312,7 @@ def append_ivf_index(
                 "qerr": None, "qerr_ratio": None, "replayed": True}
 
     assigned = _assigned(delta_vectors, centroids, id_col, vec_col)
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = materialize(assigned)
     n = assigned.count()
     if n == 0:
         raise ValueError(
@@ -473,8 +475,6 @@ def ivf_index_topk(
         raise ValueError(f"no IVF index under {index_path}")
     centroids = load_quantizer(index_path)
     q_assign = make_ivf_assigner(centroids, n_probe=n_probe)
-    from .similarity import with_vec_norm
-    from .skew import spread
 
     # r7: norms/casts hoisted per vector (cosine_precomputed is
     # bit-identical to cosine) and the pruned index scan spread — the
@@ -488,7 +488,8 @@ def ivf_index_topk(
     ).select(
         "query_id", "_qd", "_qn",
         F.explode(q_assign(F.col("q_vec"))).alias("cell"),
-    ).localCheckpoint(eager=True)  # assign once: probed-cell list + join
+    )
+    q = materialize(q)  # assign once: probed-cell list + join
     probed = sorted(r[0] for r in q.select("cell").distinct().collect())
     v = with_vec_norm(
         spread(

@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .skew import DEFAULT_MAX_BUCKET, spread, star_capped_pairs
+from .skew import (
+    DEFAULT_MAX_BUCKET,
+    broadcast_build_fits,
+    materialize,
+    rows_at_most,
+    spread,
+    star_capped_pairs,
+)
 
 # Input-query-count ceiling for the forced broadcast of the query side.
 # Top-k serving contracts say "queries are small", but nothing used to
@@ -40,7 +47,7 @@ def _broadcast_if_small(
 ) -> DataFrame:
     """Hint `expanded` (the per-bucket/probe-expanded query frame) for
     broadcast only when the INPUT query count is provably ≤ max_rows.
-    The probe is one early-stop `limit(n+1).count()` job on the raw query
+    The probe is one bounded `skew.rows_at_most` job on the raw query
     frame — O(max_rows) regardless of the true size.
 
     `assume_small=True` skips the probe entirely (zero jobs at query
@@ -48,7 +55,7 @@ def _broadcast_if_small(
     call, which a hot serving path should not pay): the CALLER asserts the
     ≤ max_rows contract, and a violated assertion surfaces as a broadcast
     build-side OOM rather than a plan fallback."""
-    if assume_small or queries.limit(max_rows + 1).count() <= max_rows:
+    if assume_small or rows_at_most(queries, max_rows):
         return F.broadcast(expanded)
     return expanded
 
@@ -379,7 +386,6 @@ def embedding_near_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize_frames: bool = True,
     return_bucketed: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Embedding-cosine near-duplicate pairs via SRP bucket self-join +
@@ -394,8 +400,6 @@ def embedding_near_dups(
     re-bucketing (r6b review: the entry had grown an inline copy of
     this operator's whole body just to share that frame, and the two
     copies had already drifted on defaults)."""
-    from .skew import materialize
-
     bucketer = make_srp_bucketer(dim, n_bits, seed)
     # spread BEFORE the projection so the SRP matmul UDF and the per-vector
     # norm run at full parallelism (single-row-group local inputs scan as
@@ -409,26 +413,17 @@ def embedding_near_dups(
         bucketer(F.col(vec_col)).alias("bucket"),
     )
     v = v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>")))
-    materialized = materialize_frames or return_bucketed
-    if materialized:
-        v = materialize(v)  # compute SRP signatures ONCE for all uses
+    v = materialize(v)  # compute SRP signatures ONCE for all uses
     # Broadcast the self-join build side when the materialized frame is
-    # provably small (cheap count over the checkpointed rows): the
-    # checkpoint erased size stats, so without the hint the planner picks
-    # a sort-merge join whose small shuffle AQE coalesces to ~1 task —
-    # serializing every per-pair cosine. Above the budget (or when lazy),
-    # keep the shuffle join: the honest 100-TB shape.
-    bcast = False
-    if materialized:
-        from .skew import broadcast_build_fits
-
-        # float vec + id/bucket/_nrm + row overhead; bounded probe
-        bcast = broadcast_build_fits(v, dim * 4 + 96)
+    # provably small: the checkpoint erased size stats, so without the hint
+    # the planner picks a sort-merge join whose small shuffle AQE coalesces
+    # to ~1 task — serializing every per-pair cosine. Above the budget, keep
+    # the shuffle join: the honest 100-TB shape. Row estimate: float vec +
+    # id/bucket/_nrm + row overhead.
+    bcast = broadcast_build_fits(v, dim * 4 + 96)
     pairs = (
         star_capped_pairs(v, ["bucket"], "id", payload_cols=("vec", "_nrm"),
-                          max_bucket=max_bucket,
-                          materialize_input=False,
-                          broadcast_build=bcast)
+                          max_bucket=max_bucket, broadcast_build=bcast)
         .withColumn("sim", cosine_precomputed(
             F.col("vec_a").cast("array<double>"),
             F.col("vec_b").cast("array<double>"),

@@ -1,8 +1,21 @@
-"""Degenerate-bucket guard for LSH-family candidate self-joins.
+"""The physical-decision layer: every operator asks this module, and only
+this module, three questions.
 
-Every bucketed near-dup scheme here (MinHash bands, SimHash chunks, SRP
-embedding buckets) generates candidates with a self-equi-join on bucket
-keys.  That is the right 100-TB shape — EXCEPT when one bucket is
+- **Materialize?** `materialize(df)` computes a multiply-referenced frame
+  once and stores its rows (`localCheckpoint(eager=True)`); no other module
+  checkpoints.
+- **Spread?** `spread(df, source=None)` repartitions a map-heavy frame to
+  the session's default parallelism when its source scans as at most
+  half that many partitions.
+- **Broadcast?** `broadcast_build_fits(df, est_row_bytes)` gates the
+  build-side hint of the LSH bucket self-joins; it and the top-k query
+  gate both decide from `rows_at_most(df, n)`, a bounded
+  `limit(n + 1).count() <= n` probe.
+
+It also owns the degenerate-bucket guard for LSH-family candidate
+self-joins. Every bucketed near-dup scheme here (MinHash bands, SimHash
+chunks, SRP embedding buckets) generates candidates with a self-equi-join
+on bucket keys. That is the right 100-TB shape — EXCEPT when one bucket is
 degenerate: a boilerplate band shared by m documents yields m² pairs inside
 a single join key.  At web scale m can be millions, so one hot key melts
 the stage while every other task finishes in seconds (classic skew: AQE can
@@ -36,32 +49,36 @@ from pyspark.sql import functions as F
 DEFAULT_MAX_BUCKET = 256
 
 # Build-side byte budget for the LSH-family bucket self-joins (r7, guide
-# §3.1): materialized (localCheckpoint) frames carry NO size statistics, so
-# the planner can never pick the broadcast join itself; when a cheap count
-# of the checkpointed frame proves the build side fits well under executor
-# memory, the caller hints it explicitly (star_capped_pairs
+# §3.1): materialized frames carry NO size statistics, so the planner can
+# never pick the broadcast join itself; when a bounded probe of the
+# materialized frame proves the build side fits well under executor
+# memory, the operator hints it explicitly (star_capped_pairs
 # broadcast_build) and the pair-generate+verify stage runs shuffle-free at
 # the probe side's parallelism. Above the budget the shuffle self-join
 # stays — the honest 100-TB shape.
 BROADCAST_BUILD_MAX_BYTES = 128 * 1024 * 1024
 
 
+def rows_at_most(df: DataFrame, n: int) -> bool:
+    """True when `df` provably holds at most `n` rows — one early-stop
+    `limit(n+1).count()` job, decision-equivalent to a full count
+    (count <= n  <=>  limit(n+1).count() <= n) but bounded: a frame far over
+    `n` stops scanning after ~n rows instead of paying a full pass (a full
+    count() of an 8M-row banded frame measured ~1 s per call at 1M docs,
+    r7b)."""
+    return df.limit(n + 1).count() <= n
+
+
 def broadcast_build_fits(materialized_df: DataFrame, est_row_bytes: int) -> bool:
     """True when a MATERIALIZED frame provably fits the broadcast-build
-    budget. Only call on checkpointed frames (the probe then scans stored
-    rows, not a recompute of the signature pipeline).
-
-    The probe is an early-stop `limit(cap+1).count()`, decision-equivalent
-    to a full count (count <= cap  <=>  limit(cap+1).count() <= cap) but
-    bounded: a frame far over the budget stops scanning after ~cap rows
-    instead of paying a full pass — a full count() of an 8M-row banded
-    frame measured ~1 s per call at 1M docs (r7b), and at real scale an
-    unbounded probe over state-sized frames would be a whole extra pass."""
+    budget (`rows_at_most` the budget's row count). Only call on
+    materialized frames: the probe then scans stored rows, not a recompute
+    of the signature pipeline."""
     cap = BROADCAST_BUILD_MAX_BYTES // max(1, est_row_bytes)
-    return materialized_df.limit(cap + 1).count() <= cap
+    return rows_at_most(materialized_df, cap)
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
     """Scale-adaptive parallelism floor for map-heavy stages (r7, guide §2.5
     "input skew" / §6 input split size).
 
@@ -73,16 +90,26 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     few-MB input is orders of magnitude cheaper than the serialized
     compute it unblocks.
 
-    Scale safety: the repartition fires ONLY when the input has less than
+    Scale safety: the repartition fires ONLY when the input has at most
     HALF the session's default parallelism (the pathology this fixes is a
     1-task scan; a 26-of-32-partition input is ~80% utilized and not worth
     a shuffle — r7b: the half threshold stops the guard from re-shuffling
     a 1M-row 26-partition corpus for a 23% parallelism gain). At real
     scale a table scan already carries >= cores splits, so this is a no-op
     there — never a payload shuffle of a big table. `getNumPartitions` is
-    computed from the file listing; no job runs."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 <= target:
+    computed from the file listing; no job runs.
+
+    `source` (default: `df` itself) is the frame whose partition count
+    DECIDES, while the repartition applies to `df`. The verify operators
+    pass the scanned table as `source` and its candidate semi-join as
+    `df`: the table's count is honest from the file listing (the
+    semi-join's is a pre-AQE guess), and only the candidate-touched rows
+    are ever shuffled — spreading the table itself re-shuffled the ENTIRE
+    corpus before the semi-join could prune it (measured +17% on the 1M
+    dedup suite, r7b)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    decider = df if source is None else source
+    if decider.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 
@@ -115,29 +142,25 @@ def star_capped_pairs(
     id_col: str = "id",
     payload_cols: tuple[str, ...] = (),
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize_input: bool = True,
     broadcast_build: bool = False,
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b) from a bucket self-join with the
     oversized-bucket star guard.  Payload columns are carried through as
     `<name>_a` / `<name>_b` (e.g. signatures for Hamming verification).
 
-    The input is materialized by default (see `materialize`): this function
-    fans `df` out four ways, and every LSH-family caller hands it a frame
-    whose lineage contains the expensive signature pipeline.
+    This function fans `df` out four ways, so callers hand it a
+    materialized frame (see `materialize`) — every LSH-family bucket frame
+    carries the expensive signature pipeline in its lineage.
 
     `broadcast_build=True` (r7, guide §3.1): hint the b-side of the
-    self-join for broadcast. A materialized (localCheckpoint) input has NO
-    size statistics, so the planner treats it as huge and picks a
-    sort-merge join whose tiny shuffle AQE then coalesces down to a
-    handful of tasks — serializing the per-pair verify work that runs
-    inside the join stage. With the build side broadcast, pair generation
-    AND verification run at the probe side's parallelism with no exchange
-    at all. Callers enable it only when the frame is provably small
-    (embedding_near_dups counts the materialized frame first); the
+    self-join for broadcast. A materialized input has NO size statistics,
+    so the planner treats it as huge and picks a sort-merge join whose
+    tiny shuffle AQE then coalesces down to a handful of tasks —
+    serializing the per-pair verify work that runs inside the join stage.
+    With the build side broadcast, pair generation AND verification run at
+    the probe side's parallelism with no exchange at all. Operators enable
+    it only when `broadcast_build_fits` proved the frame small; the
     default stays the shuffle join — the honest 100-TB shape."""
-    if materialize_input:
-        df = materialize(df)
     # One aggregation finds the oversized buckets; its output is TINY
     # (≤ rows/max_bucket keys), so both the anti-join (drop big-bucket rows
     # from the all-pairs side) and the star join run as broadcast joins under

@@ -25,6 +25,12 @@ from ocr_toolkit_spark.functions.pages import parse_pages
 
 REF = Path("/root/reference/ocr_toolkit")
 
+# The reference checkout is optional: without it there is nothing to run
+# parity against (engine-vs-oracle equality stays covered by
+# test_checked_in_golden.py).
+pytestmark = pytest.mark.skipif(
+    not REF.exists(), reason="reference checkout absent")
+
 # The reference tree is UNTRUSTED public content; these tests execute small
 # units of it for parity evidence. Pin the exact bytes that are allowed to
 # run (ADVICE r2): any change to the files aborts the test instead of
