@@ -76,10 +76,15 @@ def write_bucketed(
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
+    """The lineage table, or None when there is none yet. A missing path is
+    decided here, not by a failing Spark read: that read logs a listener
+    stack trace on every first run."""
+    if not os.path.exists(path):
+        return None  # first run: no lineage table yet
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     except Exception:
-        return None  # first run: no lineage table yet
+        return None  # unreadable table
 
 
 # --- snapshot log (Iceberg snapshot-commit / time-travel emulation) ----------

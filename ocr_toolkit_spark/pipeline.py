@@ -11,6 +11,12 @@ mechanics the reference lacks (SURVEY.md §2.5 E5 — no checkpointing there):
 3. **Skew salting**: AQE cannot split a single giant row, so documents whose
    span count exceeds a threshold get an explicit salt and the repartition is
    on (partition_id, salt) — heavy docs of one bucket spread across tasks.
+   The repartition carries no count, so AQE sizes the kernel stage from the
+   shuffle bytes: each Python task has a fixed cost (~200 ms wall on a 4-core
+   box, whatever its batch), so a small run gets a few large tasks instead of
+   `spark.sql.shuffle.partitions` small ones, while a large run keeps the
+   initial count. The coalesced tasks are balanced by bytes, so the salted
+   giants still spread. `run_extraction(parallelism=N)` pins the count.
 4. **Extract**: ONE Arrow-batched stage (operators/extract.py).
 5. **Commit**: dynamic-partition-overwrite data write with run metrics
    OBSERVED during the write (`Dataset.observe` — the Iceberg snapshot-
@@ -149,6 +155,22 @@ def salt_oversized(
     )
 
 
+def kernel_input(
+    docs: DataFrame,
+    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
+    salt_k: int = DEFAULT_SALT_K,
+    parallelism: int | None = None,
+) -> DataFrame:
+    """The extraction kernel's input: salt oversized docs, repartition on
+    (partition_id, salt) and keep (doc_id, spans). Without `parallelism` the
+    exchange has no count, so AQE coalesces it to the data (module docstring,
+    step 3); `parallelism` pins the task count."""
+    docs = salt_oversized(docs, salt_threshold, salt_k)
+    keys = ("partition_id", "salt")
+    docs = docs.repartition(parallelism, *keys) if parallelism else docs.repartition(*keys)
+    return docs.select("doc_id", "spans")
+
+
 def run_extraction(
     spark: SparkSession,
     input_path: str,
@@ -163,6 +185,10 @@ def run_extraction(
     parallelism: int | None = None,
     doc_budget_ms: float | None = None,
 ) -> RunStats:
+    """Extract the uncommitted partitions of `input_path` into `output_path`
+    and commit them (module docstring, steps 1-5). `parallelism` pins the
+    kernel stage's task count; by default AQE sizes it from the shuffle
+    bytes (`kernel_input`)."""
     docs = with_partition_id(tio.read_documents(spark, input_path), n_buckets)
 
     # committed = lineage ∪ snapshot-owned (reconcile_committed docstring:
@@ -208,13 +234,9 @@ def run_extraction(
     # doc_id-only pruned scan (partition_id is a function of doc_id).
     part_counts = docs.select("partition_id")
 
-    docs = salt_oversized(docs, salt_threshold, salt_k)
-    shuffle_n = parallelism or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = docs.repartition(shuffle_n, "partition_id", "salt")
-
     extracted = extract_spans(
-        docs.select("doc_id", "spans"), with_images, pages,
-        doc_budget_ms=doc_budget_ms,
+        kernel_input(docs, salt_threshold, salt_k, parallelism),
+        with_images, pages, doc_budget_ms=doc_budget_ms,
     )
     # partition_id is recomputed from doc_id (deterministic hash) rather than
     # threaded through the Arrow stage — keeps the UDF schema minimal

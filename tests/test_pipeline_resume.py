@@ -802,3 +802,25 @@ def test_resume_boundary_and_heal_provenance_r6c(spark, tmpdir_path):
     assert owners == {"0": "r0"}  # no None-valued ghost for 9
     assert tio.retained_partitions(t2) == {"0"}
     assert tio.snapshots(t2)[0]["partitions"] == {"0": "r0"}
+
+
+def test_read_lineage_missing_path_skips_spark(spark, tmpdir_path):
+    """A first run has no lineage table: read_lineage answers None from the
+    filesystem without a Spark read (a failing read logs a listener stack
+    trace on every fresh table); an existing table still reads."""
+    touched: list[str] = []
+
+    class NoSpark:
+        def __getattr__(self, name):
+            touched.append(name)
+            raise AttributeError(name)
+
+    lineage = os.path.join(tmpdir_path, "lineage")
+    assert tio.read_lineage(NoSpark(), lineage) is None
+    assert touched == []
+
+    write_corpus(os.path.join(tmpdir_path, "docs.parquet"), n_docs=50, seed=7)
+    run_extraction(spark, os.path.join(tmpdir_path, "docs.parquet"),
+                   os.path.join(tmpdir_path, "out"), lineage, run_id="first")
+    lin = tio.read_lineage(spark, lineage)
+    assert lin.filter("partition_id = -1 and run_id = 'first'").count() == 1

@@ -30,14 +30,10 @@ def corpus_path(tmp_path_factory):
 
 def test_extraction_is_one_python_stage(spark, corpus_path):
     from ocr_toolkit_spark.operators.extract import extract_spans
-    from ocr_toolkit_spark.pipeline import salt_oversized, with_partition_id
+    from ocr_toolkit_spark.pipeline import kernel_input, with_partition_id
 
     docs = with_partition_id(spark.read.parquet(corpus_path))
-    pipe = extract_spans(
-        salt_oversized(docs).repartition(8, "partition_id", "salt")
-        .select("doc_id", "spans")
-    )
-    assert_single_python_stage(pipe)
+    assert_single_python_stage(extract_spans(kernel_input(docs)))
 
 
 def test_scan_pruning_and_pushdown(spark):

@@ -29,7 +29,7 @@ def main() -> int:
     import __spark_entry__ as em
     from ocr_toolkit_spark.session import get_spark
     from ocr_toolkit_spark.operators.extract import extract_spans
-    from ocr_toolkit_spark.pipeline import salt_oversized, with_partition_id
+    from ocr_toolkit_spark.pipeline import kernel_input, with_partition_id
 
     spark = get_spark(app_name="explain_report", master="local[4]")
 
@@ -44,15 +44,12 @@ def main() -> int:
     corpus = os.path.join(d, "docs.parquet")
     write_corpus(corpus, n_docs=200, seed=42)
     docs = with_partition_id(tio.read_documents(spark, corpus))
-    pipe = extract_spans(
-        salt_oversized(docs).repartition(8, "partition_id", "salt")
-        .select("doc_id", "spans")
-    )
     sections.append((
         "Extraction pipeline",
         "ONE MapInArrow stage; scan reads only (doc_id, spans); the only "
-        "exchange is the explicit salt repartition.",
-        plan_of(pipe),
+        "exchange is the salt repartition, which carries no count, so AQE "
+        "sizes the kernel stage from its shuffle bytes.",
+        plan_of(extract_spans(kernel_input(docs))),
     ))
 
     # column pruning + filter pushdown on a driver table
