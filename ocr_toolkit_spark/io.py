@@ -12,6 +12,14 @@ emulates the needed semantics:
   metadata) AFTER the data write, so a crash between the two re-processes the
   partition on resume — safe under overwrite semantics.
 
+Every snapshot-committed table (extraction output, streaming sink, dedup
+signature states, IVF index) runs the same commit protocol, and its steps
+live here only: claim a partition id (`next_partition_id`, replay via
+`find_run_snapshot`), write it (`write_new_partition` /
+`overwrite_partitions`), publish (`snapshot_commit`, `publish_exclusive` for
+pinned side files), read committed partitions only (`owned_partitions`,
+`read_extracted_as_of`).
+
 With an Iceberg catalog configured, swap these for `writeTo(...).overwrite...`
 / `.append()`; nothing else in the engine changes.
 """
@@ -20,7 +28,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,15 +43,40 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(DOCUMENTS_SCHEMA).parquet(path)
 
 
-def write_extracted(df: DataFrame, path: str) -> None:
-    """Per-partition idempotent write: only partitions present in `df` are
-    replaced; previously committed partitions are untouched."""
+def overwrite_partitions(
+    df: DataFrame, path: str, *partition_cols: str
+) -> None:
+    """Dynamic partition overwrite: only the partitions present in `df` are
+    replaced; every other partition under `path` is untouched."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
+        .partitionBy(*partition_cols)
         .parquet(path)
     )
+
+
+def write_new_partition(
+    df: DataFrame, path: str, pid: int, *partition_cols: str
+) -> None:
+    """Write a partition the log does not own yet: every row of `df` carries
+    `partition_cols[0] == pid`. The target dir is cleared first. Dynamic
+    overwrite alone is keyed on ALL partition columns, so with a nested
+    layout (`ingest_id=N/cell=M`) a crashed earlier writer's sub-dirs that
+    `df` does not cover would survive and be committed with it; a legacy
+    nested first attempt under a flat key survives the same way. The clear
+    only ever removes debris: a claimed id is uncommitted by construction
+    (writers replay through the log before they reach a write)."""
+    shutil.rmtree(
+        os.path.join(path, f"{partition_cols[0]}={pid}"), ignore_errors=True
+    )
+    overwrite_partitions(df, path, *partition_cols)
+
+
+def write_extracted(df: DataFrame, path: str) -> None:
+    """Per-partition idempotent write: only partitions present in `df` are
+    replaced; previously committed partitions are untouched."""
+    overwrite_partitions(df, path, "partition_id")
 
 
 def read_extracted(spark: SparkSession, path: str) -> DataFrame:
@@ -191,6 +226,72 @@ def partitions_as_of(table_path: str, snapshot_id: int) -> dict[str, str]:
         else:  # legacy cumulative-only record
             parts = dict(rec["partitions"])
     return parts
+
+
+def owned_partitions(table_path: str) -> list[int]:
+    """Sorted partition ids the log's tip owns — what a committed-only
+    reader may see; [] before the first commit."""
+    tip = latest_snapshot_id(table_path)
+    if not tip:
+        return []
+    return sorted(int(p) for p in partitions_as_of(table_path, tip))
+
+
+def next_partition_id(table_path: str) -> int:
+    """The id a writer claims for a new partition: one past the highest
+    owned id (0 for a fresh table). Every table that grows one partition
+    per round (signature states, the IVF index, their N-into-1 rewrites)
+    allocates here. Two drivers appending to one table at the same tip
+    pick the same id, and dynamic overwrite lets one silently replace the
+    other's rows: appends to one table must not run concurrently until
+    this allocation reserves the id."""
+    return max(owned_partitions(table_path), default=-1) + 1
+
+
+def count_parquet_files(table_path: str, partition_col: str,
+                        pids: list[int]) -> int:
+    """Parquet files under the given `partition_col=N` dirs, nested
+    sub-partitions included — the compaction before/after figure."""
+    n = 0
+    for pid in pids:
+        pdir = os.path.join(table_path, f"{partition_col}={pid}")
+        for _root, _dirs, files in os.walk(pdir):
+            n += sum(1 for f in files if f.endswith(".parquet"))
+    return n
+
+
+def publish_exclusive(path: str, data: bytes) -> bool:
+    """Create `path` holding `data` only if it does not exist yet — the
+    claim primitive behind snapshot commits and pinned side files. The
+    bytes go to a uniquely named tmp file beside it (uuid: a pid alone is
+    not unique across threads of one driver, and a shared tmp name lets a
+    concurrent writer truncate the inode between write and link), then
+    `os.link` publishes it: atomic and create-exclusive on POSIX, so
+    readers never see a half-written file. Returns True when this call
+    created the file, False when another writer got there first; the
+    caller decides what a lost race means."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def read_meta(table_path: str, name: str) -> dict | None:
+    """A table's pinned JSON side file (`_dedup_meta.json`,
+    `_ivf_meta.json`), None while it is absent."""
+    try:
+        with open(os.path.join(table_path, name)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
 
 
 def snapshots(table_path: str) -> list[dict]:
@@ -365,13 +466,12 @@ def snapshot_commit(
     cumulative map → ≤ CHECKPOINT_EVERY + 1 reads, amortized O(1)/commit).
 
     Concurrency: optimistic, Iceberg-style. The snapshot file is published
-    with `os.link` (atomic create-exclusive on POSIX): if a concurrent
-    writer already claimed the same snapshot_id, the link fails and we
+    with `publish_exclusive` (atomic create-exclusive): if a concurrent
+    writer already claimed the same snapshot_id, the publish fails and we
     retry on top of the new tip — neither commit is lost (r3 review #4: a
     plain tmp+os.replace silently clobbered the loser). Readers never
     observe a half-written file."""
     d = _snapshot_dir(table_path)
-    os.makedirs(d, exist_ok=True)
     for _ in range(50):
         parent_id = latest_snapshot_id(table_path)
         sid = parent_id + 1
@@ -397,21 +497,9 @@ def snapshot_commit(
             _fold_delta(parts, delta)  # checkpoints embed the FOLDED map:
             snap["partitions"] = parts  # no None tombstones survive here
         final = os.path.join(d, f"snap-{sid:08d}.json")
-        # uuid: pid alone is not unique across THREADS of one driver —
-        # a shared tmp name lets a concurrent commit truncate the inode
-        # between write and link (r3 review round 2)
-        import uuid as _uuid
-
-        tmp = os.path.join(d, f".snap-{_uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-        try:
-            os.link(tmp, final)  # atomic create-exclusive publish
+        if publish_exclusive(final, json.dumps(snap).encode()):
             return snap
-        except FileExistsError:
-            continue  # lost the race: re-list the log, retry on new parent
-        finally:
-            os.unlink(tmp)
+        # lost the race: re-list the log, retry on the new parent
     raise RuntimeError(
         f"snapshot_commit: could not claim a snapshot id under {d} "
         "after 50 attempts"
@@ -561,9 +649,6 @@ def sweep_orphan_partitions(
     race; keep retention above the longest plausible write→commit gap.
     Runs driver-side only (os.walk over one table root — no Spark job).
     """
-    import shutil
-    import time
-
     if not os.path.isdir(table_path):
         return []
     if partition_col is None:
@@ -651,8 +736,6 @@ def compact_extracted(
     path: str,
     run_id: str,
     partition_ids: list[int] | None = None,
-    files_per_partition: int = 1,
-    sort_cols: tuple[str, ...] | None = None,
     partition_col: str | None = None,
 ) -> dict:
     """Small-file compaction — the Iceberg `rewriteDataFiles` analog and
@@ -661,23 +744,23 @@ def compact_extracted(
     footer read at scan time; the optimal file is 100 MB–1 GB).
 
     Rewrites the given partitions (default: every partition committed as
-    of the latest snapshot) into `files_per_partition` files each via
-    repartition on the partition column + dynamic overwrite, then commits
-    a snapshot claiming the rewritten partitions for `run_id`. Row content
-    is IDENTICAL before and after, so earlier snapshots' time-travel
-    reads still return the same rows — only the file layout changed (the
+    of the latest snapshot) into one file each via repartition on the
+    partition column + dynamic overwrite, then commits a snapshot
+    claiming the rewritten partitions for `run_id`. Row content is
+    IDENTICAL before and after, so earlier snapshots' time-travel reads
+    still return the same rows — only the file layout changed (the
     Parquet-emulation honesty note: real Iceberg would keep the old files
     for old snapshots; here old snapshots see the same rows in new
     files). Returns {partitions, files_before, files_after}.
 
-    `sort_cols` sorts rows WITHIN each output file — the Iceberg
+    Rows are sorted WITHIN each output file — the Iceberg
     sort-order-rewrite analog: parquet row-group min/max statistics on
     the sort key become tight, so point lookups and range scans on it
-    prune row groups instead of reading whole files. Default (None) is
-    layout-aware: `("doc_id",)` for data tables, `("band", "band_hash",
-    "id")` for ingest_id-partitioned signature-state tables (tight stats
-    on the bucket key let the delta round's touched-bucket probe prune
-    row groups). Pass `()` to skip sorting.
+    prune row groups instead of reading whole files. The sort key follows
+    the layout: `doc_id` for data tables, `(band, band_hash, id)` for
+    ingest_id-partitioned signature-state tables (tight stats on the
+    bucket key let the delta round's touched-bucket probe prune row
+    groups).
 
     `partition_col` defaults to auto-detect from the physical layout:
     "partition_id" for batch-pipeline tables, "batch_id" for
@@ -693,17 +776,18 @@ def compact_extracted(
     """
     if partition_col is None:
         partition_col = detect_partition_col(path)
-    if sort_cols is None:
-        sort_cols = (
-            ("band", "band_hash", "id")
-            if partition_col == "ingest_id"
-            else ("doc_id",)
-        )
-    tip = latest_snapshot_id(path)
+    sort_cols = (
+        ("band", "band_hash", "id")
+        if partition_col == "ingest_id"
+        else ("doc_id",)
+    )
+    owned = owned_partitions(path)
     if partition_ids is None:
-        if not tip:
-            raise ValueError(f"no snapshots under {path}: nothing to compact")
-        partition_ids = sorted(int(p) for p in partitions_as_of(path, tip))
+        if not owned:
+            raise ValueError(
+                f"no committed partitions under {path}: nothing to compact"
+            )
+        partition_ids = owned
     pids = [int(p) for p in partition_ids]
     if partition_col != "partition_id":
         # nested second-level partitioning under the primary key:
@@ -735,54 +819,34 @@ def compact_extracted(
         # depths under one root and break partition discovery — require
         # the full migration. Current flat tables can compact any subset.
         nested = "partition_id" in inner_keys
-        committed = {int(p) for p in partitions_as_of(path, tip)} if tip else set()
-        if nested and committed - set(pids):
+        missing = set(owned) - set(pids)
+        if nested and missing:
             raise ValueError(
                 f"streaming table {path} has the legacy nested layout "
                 f"({partition_col}=N/partition_id=M); compaction must "
                 "rewrite ALL committed batches in one migration "
-                f"(missing: {sorted(committed - set(pids))}) — a partial "
+                f"(missing: {sorted(missing)}) — a partial "
                 "rewrite would mix flat and nested layouts under the same "
                 "root and break partition discovery"
             )
 
-    def count_files() -> int:
-        n = 0
-        for pid in pids:
-            pdir = os.path.join(path, f"{partition_col}={pid}")
-            for _root, _dirs, files in os.walk(pdir):
-                n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
-
-    files_before = count_files()
-    df = spark.read.parquet(path).filter(
-        F.col(partition_col).isin(pids)
+    files_before = count_parquet_files(path, partition_col, pids)
+    # one output file per partition: repartition on the partition column so
+    # each task writes exactly one partition's file — no cross-partition
+    # file fragments
+    compacted = (
+        spark.read.parquet(path)
+        .filter(F.col(partition_col).isin(pids))
+        .repartition(len(pids), partition_col)
+        .sortWithinPartitions(partition_col, *sort_cols)
     )
-    # one output file per (partition, slot): repartition on the partition
-    # column (+ a slot for files_per_partition > 1) so each task writes
-    # exactly one partition's file — no cross-partition file fragments
-    if files_per_partition == 1:
-        compacted = df.repartition(len(pids), partition_col)
-    else:
-        compacted = df.withColumn(
-            "_slot", F.pmod(F.xxhash64("doc_id"), F.lit(files_per_partition))
-        ).repartition(
-            len(pids) * files_per_partition, partition_col, "_slot"
-        ).drop("_slot")
-    if sort_cols:
-        compacted = compacted.sortWithinPartitions(partition_col, *sort_cols)
-    (
-        compacted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    overwrite_partitions(compacted, path, partition_col)
     snapshot_commit(path, run_id, pids, operation="replace")
     return {
         "partitions": len(pids),
         "partition_col": partition_col,
         "files_before": files_before,
-        "files_after": count_files(),
+        "files_after": count_parquet_files(path, partition_col, pids),
     }
 
 
@@ -813,7 +877,7 @@ def table_report(path: str) -> dict:
     # tip but still referenced by retained history (merge/compaction
     # sources): kept for time travel, reclaimable only after expiry.
     tip = latest_snapshot_id(path)
-    owned_tip = set(map(str, partitions_as_of(path, tip))) if tip else set()
+    owned_tip = {str(p) for p in owned_partitions(path)}
     retained = retained_partitions(path) if tip else set()
     orphans = sorted(
         name for name in parts if name.split("=", 1)[1] not in retained

@@ -18,6 +18,11 @@ machinery as the extraction output — io.py); each ingest round:
    read for candidate docs only);
 4. appends the new banded rows as the next ingest partition + snapshot.
 
+The table-commit steps (ingest-id allocation, replay by run_id, the
+partition write, the snapshot publish, the committed-only read, the
+config pin's create-exclusive publish) are io.py's; this module only
+decides what to write and when.
+
 Equivalence contract (pinned by tests/test_incremental_dedup.py):
 
 - With no bucket over `max_bucket`, the UNION of per-round delta pairs
@@ -58,43 +63,24 @@ from .skew import DEFAULT_MAX_BUCKET, broadcast_build_fits, materialize, spread
 META_FILE = "_dedup_meta.json"
 
 
-def _meta_path(state_path: str) -> str:
-    return os.path.join(state_path, META_FILE)
-
-
 def signature_state_meta(state_path: str) -> dict | None:
-    try:
-        with open(_meta_path(state_path)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    return tio.read_meta(state_path, META_FILE)
 
 
 def _check_or_write_meta(state_path: str, cfg: dict) -> None:
     """Pin the state's config, creating `_dedup_meta.json` on first use.
 
-    Cross-process atomic (r5 verdict #3): creation publishes via `os.link`
-    (create-exclusive on POSIX) — two first-ever rounds racing on an empty
-    state dir cannot both win; the loser's FileExistsError falls through
-    to the read-back verify below, so a racing round with a DIFFERENT
-    config raises instead of silently clobbering the pin. Same claim
-    discipline as io.snapshot_commit."""
+    Cross-process atomic (r5 verdict #3): creation goes through
+    io.publish_exclusive — two first-ever rounds racing on an empty state
+    dir cannot both win; the loser falls through to the read-back verify
+    below, so a racing round with a DIFFERENT config raises instead of
+    silently clobbering the pin."""
     existing = signature_state_meta(state_path)
     if existing is None:
-        os.makedirs(state_path, exist_ok=True)
-        import uuid as _uuid
-
-        tmp = os.path.join(
-            state_path, f".{META_FILE}.{_uuid.uuid4().hex}.tmp"
+        # a lost race is fine here: the verify below reads the winner's pin
+        tio.publish_exclusive(
+            os.path.join(state_path, META_FILE), json.dumps(cfg).encode()
         )
-        with open(tmp, "w") as f:
-            json.dump(cfg, f)
-        try:
-            os.link(tmp, _meta_path(state_path))  # atomic create-exclusive
-        except FileExistsError:
-            pass  # lost the race — verify the winner's config below
-        finally:
-            os.unlink(tmp)
         existing = signature_state_meta(state_path)
     if existing != cfg:
         # wording covers every state kind pinned here (minhash rounds,
@@ -111,11 +97,10 @@ def read_signature_state(spark: SparkSession, state_path: str) -> DataFrame | No
     """(id, band, band_hash, ingest_id) for every committed ingest, or None
     before the first round.
 
-    COMMITTED ingests only: the read filters `ingest_id` to the snapshot
-    log's ownership map (`io.partitions_as_of` at the tip — the
-    read_extracted_as_of discipline). A crash between the parquet write
-    and snapshot_commit leaves a fully-written but UNCOMMITTED ingest
-    directory; a plain directory read would let those bands leak into
+    COMMITTED ingests only: io.read_extracted_as_of at the log's tip
+    filters `ingest_id` to the snapshot log's ownership map. A crash
+    between the parquet write and snapshot_commit leaves a fully-written
+    but UNCOMMITTED ingest directory; a plain directory read would let those bands leak into
     candidate generation (inflating bucket stats exactly like the replay
     bug ADVICE r5 #2 fixed) until the retry overwrites them. The filter
     lands on the physical partition column, so exclusion happens at
@@ -123,9 +108,8 @@ def read_signature_state(spark: SparkSession, state_path: str) -> DataFrame | No
     tip = tio.latest_snapshot_id(state_path)
     if tip == 0:
         return None
-    committed = [int(p) for p in tio.partitions_as_of(state_path, tip)]
-    return spark.read.parquet(state_path).filter(
-        F.col("ingest_id").isin(committed)
+    return tio.read_extracted_as_of(
+        spark, state_path, tip, partition_col="ingest_id"
     )
 
 
@@ -166,23 +150,15 @@ def append_signatures(banded: DataFrame, state_path: str, run_id: str) -> int:
             "a zero-row ingest snapshot makes the state unreadable "
             "(tip>0 with no parquet files). Skip the round instead."
         )
-    tip = tio.latest_snapshot_id(state_path)
-    if tip:
-        snap = tio.find_run_snapshot(state_path, run_id)
-        if snap:
-            # this round already committed; its ingest id is its claim
-            return tio.claimed_partition(snap)
-        owners = tio.partitions_as_of(state_path, tip)
-        nxt = max(int(p) for p in owners) + 1
-    else:
-        nxt = 0
-    (
+    snap = tio.find_run_snapshot(state_path, run_id)
+    if snap:
+        # this round already committed; its ingest id is its claim
+        return tio.claimed_partition(snap)
+    nxt = tio.next_partition_id(state_path)
+    tio.write_new_partition(
         banded.select("id", "band", "band_hash")
-        .withColumn("ingest_id", F.lit(nxt))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_id")
-        .parquet(state_path)
+        .withColumn("ingest_id", F.lit(nxt)),
+        state_path, nxt, "ingest_id",
     )
     tio.snapshot_commit(state_path, run_id, [nxt])
     return nxt
@@ -193,7 +169,6 @@ def delta_candidate_pairs(
     state_banded: DataFrame | None,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     materialize_frames: bool = True,
-    assume_new_materialized: bool = False,
 ) -> DataFrame:
     """Candidate pairs touching at least one NEW doc: new×(old ∪ new)
     within each bucket, star-capped like the batch path.
@@ -205,13 +180,11 @@ def delta_candidate_pairs(
     never a state-table shuffle. With an empty state this degenerates to
     exactly star_capped_pairs over the new frame (round 0 == batch run).
 
-    `assume_new_materialized=True` skips re-checkpointing a frame the
-    caller already materialized (incremental_dedup_round builds the banded
-    frame materialized so append_signatures reuses the same rows —
-    re-checkpointing it here would re-store every row and run an extra
-    job for nothing; same precedent as similarity.assume_small_queries)."""
-    if materialize_frames and not assume_new_materialized:
-        new_banded = materialize(new_banded)
+    `new_banded` is read three times, so callers hand over a materialized
+    frame (see skew.materialize) — the rounds build it materialized and
+    append_signatures reuses the same rows. `materialize_frames=False`
+    keeps the union and oversized-bucket frames lazy as well (plan
+    inspection, empty rounds)."""
     new_t = new_banded.select(
         "id", "band", "band_hash", F.lit(True).alias("_new")
     )
@@ -329,8 +302,7 @@ def incremental_dedup_round(
                      "threshold": threshold, "max_bucket": max_bucket}
     )
     state = read_signature_state(spark, state_path)
-    cand = delta_candidate_pairs(banded, state, max_bucket=max_bucket,
-                                 assume_new_materialized=True)
+    cand = delta_candidate_pairs(banded, state, max_bucket=max_bucket)
     pairs = jaccard_verify(
         cand, corpus_df, id_col, text_col, k=k, threshold=threshold
     )
@@ -364,7 +336,6 @@ def dedup_extracted_changes(
     Cursor discipline: callers advance from_snapshot to to_snapshot after
     a successful round; a cursor older than the table's expiry boundary
     raises in read_extracted_changes (stale-cursor loudness)."""
-    from .. import io as tio
     from ..pipeline import render_markdown_col
 
     changed = tio.read_extracted_changes(
@@ -565,8 +536,7 @@ def incremental_embedding_round(
          "max_bucket": max_bucket},
     )
     state = read_signature_state(spark, state_path)
-    cand = delta_candidate_pairs(banded, state, max_bucket=max_bucket,
-                                 assume_new_materialized=True)
+    cand = delta_candidate_pairs(banded, state, max_bucket=max_bucket)
     pairs = cosine_verify(cand, corpus_vecs, threshold, id_col, vec_col,
                           dim=dim)
     pairs = materialize(pairs)  # compute before the state append mutates
@@ -598,10 +568,10 @@ def compact_signature_state(
     spark: SparkSession,
     state_path: str,
     run_id: str,
-    files_per_partition: int = 1,
 ) -> dict:
-    """Rewrite each ingest partition's small files (io.compact_extracted
-    with partition_col='ingest_id'), sorted by (band, band_hash, id) so
+    """Rewrite each ingest partition's small files into one
+    (io.compact_extracted with partition_col='ingest_id'), sorted by
+    (band, band_hash, id) so
     parquet row-group min/max stats on the bucket key become tight — the
     delta round's touched-bucket probe then prunes row groups instead of
     reading whole ingest files. Rows are identical before and after
@@ -612,12 +582,7 @@ def compact_signature_state(
     if tio.latest_snapshot_id(state_path) == 0:
         raise ValueError(f"no signature state under {state_path}")
     return tio.compact_extracted(
-        spark,
-        state_path,
-        run_id,
-        partition_col="ingest_id",
-        files_per_partition=files_per_partition,
-        sort_cols=("band", "band_hash", "id"),
+        spark, state_path, run_id, partition_col="ingest_id"
     )
 
 
@@ -625,15 +590,14 @@ def merge_signature_state(
     spark: SparkSession,
     state_path: str,
     run_id: str,
-    n_files: int = 1,
 ) -> dict:
     """Collapse every committed ingest partition into ONE — the partition-
     count answer compact_signature_state does not give. Per-ingest file
     compaction keeps the directory count growing one partition per round
     forever; at 100 TB the state's touched-bucket probe eventually pays a
     footer read per ingest per round. After the merge the probe reads one
-    partition with `n_files` files sorted on (band, band_hash, id), so
-    row-group stats prune tightly.
+    partition with one file sorted on (band, band_hash, id), so row-group
+    stats prune tightly.
 
     Semantics untouched: rows are identical (the bucket reps are min-id
     over unchanged ids), replay idempotence survives because
@@ -672,8 +636,7 @@ def merge_signature_state(
             f"merge_signature_state: state under {state_path} has no "
             "committed rows — nothing to merge"
         )
-    tip = tio.latest_snapshot_id(state_path)
-    owners = sorted(int(p) for p in tio.partitions_as_of(state_path, tip))
+    owners = tio.owned_partitions(state_path)
     if len(owners) == 1:
         # already merged: a 1→1 rewrite would append another replace
         # snapshot and another historical directory per invocation (r6c
@@ -683,15 +646,12 @@ def merge_signature_state(
         # count within the one partition is compact_signature_state's
         # job, not merge's.
         return {"ingests_before": 1, "new_ingest": owners[0], "noop": True}
-    new_pid = owners[-1] + 1
-    (
+    new_pid = tio.next_partition_id(state_path)
+    tio.write_new_partition(
         state.withColumn("ingest_id", F.lit(new_pid))
-        .repartition(n_files)
-        .sortWithinPartitions("band", "band_hash", "id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_id")
-        .parquet(state_path)
+        .repartition(1)
+        .sortWithinPartitions("band", "band_hash", "id"),
+        state_path, new_pid, "ingest_id",
     )
     tio.snapshot_commit(
         state_path, run_id, [new_pid],
@@ -903,12 +863,7 @@ def _apply_gc_rewrite(
         r[0] for r in keep_rows.select("ingest_id").distinct().collect()
     }
     if nonempty:
-        (
-            keep_rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_id")
-            .parquet(state_path)
-        )
+        tio.overwrite_partitions(keep_rows, state_path, "ingest_id")
     for pid in pids:
         if pid not in nonempty:
             # dynamic overwrite cannot write an empty partition; a

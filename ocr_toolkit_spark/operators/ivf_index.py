@@ -27,11 +27,14 @@ other table here (io.py):
   and exact cosine re-ranks inside.
 
 The two-level layout is deliberate: writes replace exactly their own
-`ingest_id=N` subtree (the dir is cleared first — dynamic overwrite alone
-is keyed on (ingest_id, cell) and would leave a crashed writer's
-uncovered cells behind) WITHOUT clobbering other ingests' rows in the
-same cell (a cell-only layout would), while the nested `cell=`
-directories still give scans partition pruning on probes.
+`ingest_id=N` subtree (io.write_new_partition clears the dir first —
+dynamic overwrite alone is keyed on (ingest_id, cell) and would leave a
+crashed writer's uncovered cells behind) WITHOUT clobbering other
+ingests' rows in the same cell (a cell-only layout would), while the
+nested `cell=` directories still give scans partition pruning on probes.
+Ingest-id allocation, the replay check, the committed-only read and the
+create-exclusive pin are io.py's table-commit steps, shared with the
+signature states.
 
 Reference analog: none — the reference has no vector search; this mirrors
 the public FAISS IVF design (train-once quantizer, append-only inverted
@@ -42,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+from io import BytesIO
 
 import numpy as np
 import pandas as pd
@@ -70,16 +74,8 @@ class IvfDriftError(RuntimeError):
     instead."""
 
 
-def _meta_path(p: str) -> str:
-    return os.path.join(p, META_FILE)
-
-
 def ivf_index_meta(index_path: str) -> dict | None:
-    try:
-        with open(_meta_path(index_path)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    return tio.read_meta(index_path, META_FILE)
 
 
 def load_quantizer(index_path: str) -> np.ndarray:
@@ -101,9 +97,9 @@ def _same_meta(a: dict, b: dict) -> bool:
 
 
 def _pin_files(index_path: str, meta: dict, centroids: np.ndarray) -> None:
-    """Publish quantizer + meta atomically (os.link create-exclusive, the
-    io.snapshot_commit discipline): two racing first builds cannot
-    interleave halves of quantizer and meta.
+    """Publish quantizer + meta atomically (io.publish_exclusive, the
+    snapshot-commit primitive): two racing first builds cannot interleave
+    halves of quantizer and meta.
 
     A retry AFTER a crash between this pin and ingest 0's snapshot
     commit lands here with the files already present (r6b review: the
@@ -113,34 +109,25 @@ def _pin_files(index_path: str, meta: dict, centroids: np.ndarray) -> None:
     float-mean reproducibility) is tolerated so the retry can proceed to
     commit ingest 0; a DIFFERENT pin still raises loudly — that is a
     genuinely different index, not a crashed copy of this one."""
-    import uuid as _uuid
-
-    os.makedirs(index_path, exist_ok=True)
-    for name, write in (
-        (QUANTIZER_FILE, lambda f: np.save(f, centroids)),
-        (META_FILE, lambda f: f.write(json.dumps(meta))),
-    ):
-        dest = os.path.join(index_path, name)
-        tmp = os.path.join(index_path, f".{name}.{_uuid.uuid4().hex}.tmp")
-        mode = "wb" if name.endswith(".npy") else "w"
-        with open(tmp, mode) as f:
-            write(f)
-        try:
-            os.link(tmp, dest)
-        except FileExistsError as e:
-            if name == QUANTIZER_FILE:
-                same = np.array_equal(np.load(dest), centroids)
-            else:
-                with open(dest) as g:
-                    same = _same_meta(json.load(g), meta)
-            if not same:
-                raise ValueError(
-                    f"IVF index at {index_path} already initialized with "
-                    "a DIFFERENT quantizer/config — rebuild into a fresh "
-                    "path or append to the existing index"
-                ) from e
-        finally:
-            os.unlink(tmp)
+    npy = BytesIO()
+    np.save(npy, centroids)
+    same = (
+        tio.publish_exclusive(
+            os.path.join(index_path, QUANTIZER_FILE), npy.getvalue()
+        )
+        or np.array_equal(load_quantizer(index_path), centroids)
+    ) and (
+        tio.publish_exclusive(
+            os.path.join(index_path, META_FILE), json.dumps(meta).encode()
+        )
+        or _same_meta(ivf_index_meta(index_path), meta)
+    )
+    if not same:
+        raise ValueError(
+            f"IVF index at {index_path} already initialized with "
+            "a DIFFERENT quantizer/config — rebuild into a fresh "
+            "path or append to the existing index"
+        )
 
 
 def _mean_qerr(assigned: DataFrame, centroids: np.ndarray,
@@ -185,33 +172,17 @@ def _assigned(vectors: DataFrame, centroids: np.ndarray,
     )
 
 
-def _clear_uncommitted_ingest(index_path: str, ingest_id: int) -> None:
-    """Remove a target ingest dir before (re)writing it. Dynamic overwrite
-    here is keyed on (ingest_id, cell) — NOT ingest_id alone — so a
-    crashed prior writer's cells that the current data does not cover
-    would survive the overwrite and be committed as part of this ingest
-    (r6c review: a retry with a different delta, or an append reusing a
-    crashed compaction's partition id, served never-committed vectors).
-    The target is uncommitted by construction: committed ingests are
-    never rewritten — every writer replays via the snapshot log before
-    reaching a write — so the delete only ever removes orphan debris."""
-    import shutil
-
-    shutil.rmtree(
-        os.path.join(index_path, f"ingest_id={ingest_id}"),
-        ignore_errors=True,
-    )
-
-
 def _write_ingest(assigned: DataFrame, index_path: str, ingest_id: int,
                   run_id: str) -> None:
-    _clear_uncommitted_ingest(index_path, ingest_id)
-    (
-        assigned.withColumn("ingest_id", F.lit(ingest_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_id", "cell")
-        .parquet(index_path)
+    # io.write_new_partition clears the whole ingest dir first: a crashed
+    # prior writer's cells the current data does not cover would otherwise
+    # survive the (ingest_id, cell)-keyed overwrite and be committed with
+    # this ingest (r6c review: a retry with a different delta, or an
+    # append reusing a crashed compaction's id, served never-committed
+    # vectors)
+    tio.write_new_partition(
+        assigned.withColumn("ingest_id", F.lit(ingest_id)),
+        index_path, ingest_id, "ingest_id", "cell",
     )
     tio.snapshot_commit(index_path, run_id, [ingest_id])
 
@@ -335,10 +306,7 @@ def append_ivf_index(
             "longer fits the data. Rebuild the index (re-train) instead "
             "of appending."
         )
-    owners = tio.partitions_as_of(
-        index_path, tio.latest_snapshot_id(index_path)
-    )
-    nxt = max(int(p) for p in owners) + 1
+    nxt = tio.next_partition_id(index_path)
     _write_ingest(assigned, index_path, nxt, run_id)
     return {"ingest_id": nxt, "n_vectors": n, "qerr": round(qerr, 6),
             "qerr_ratio": round(ratio, 4)}
@@ -355,9 +323,8 @@ def read_ivf_index(spark: SparkSession, index_path: str) -> DataFrame:
     tip = tio.latest_snapshot_id(index_path)
     if tip == 0:
         raise ValueError(f"no committed IVF index under {index_path}")
-    committed = [int(p) for p in tio.partitions_as_of(index_path, tip)]
-    return spark.read.parquet(index_path).filter(
-        F.col("ingest_id").isin(committed)
+    return tio.read_extracted_as_of(
+        spark, index_path, tip, partition_col="ingest_id"
     )
 
 
@@ -365,7 +332,6 @@ def compact_ivf_index(
     spark: SparkSession,
     index_path: str,
     run_id: str,
-    remove_old_dirs: bool = False,
 ) -> dict:
     """Merge every committed ingest into ONE new ingest partition while
     preserving the nested `cell=` probe-pruning layout — the index-aware
@@ -383,19 +349,14 @@ def compact_ivf_index(
     ONE atomic snapshot claims it and DE-OWNS the sources
     (snapshot_commit remove_partition_ids, operation="replace") — no
     snapshot ever shows both copies. The de-owned source dirs are KEPT
-    by default (r6b review: deleting them broke time-travel reads at
+    (r6b review: deleting them broke time-travel reads at
     pre-compaction snapshots that retained history still resolves);
     they become sweepable once expire_snapshots drops that history —
     sweep_orphan_partitions' retained-history boundary then reclaims
-    them. `remove_old_dirs=True` deletes them immediately for callers
-    who have already expired (or never need) pre-compaction history.
-    Run quiesced (no concurrent append/query), like every compaction
+    them. Run quiesced (no concurrent append/query), like every compaction
     here; incremental consumers skip the "replace" snapshot. Idempotent
     on run_id via the log history, like append_ivf_index."""
-    import shutil
-
-    tip = tio.latest_snapshot_id(index_path)
-    if tip == 0:
+    if tio.latest_snapshot_id(index_path) == 0:
         raise ValueError(f"no committed IVF index under {index_path}")
     snap = tio.find_run_snapshot(
         index_path, run_id, operation="replace", require_removal=True
@@ -403,20 +364,10 @@ def compact_ivf_index(
     if snap:
         return {"new_ingest": tio.claimed_partition(snap), "replayed": True}
 
-    owners = sorted(int(p) for p in tio.partitions_as_of(index_path, tip))
-    new_pid = owners[-1] + 1
-
-    def count_files(pids) -> int:
-        # files a probe at the then-current tip must open (owned dirs
-        # only — retained-but-de-owned history is never probed)
-        n = 0
-        for pid in pids:
-            pdir = os.path.join(index_path, f"ingest_id={pid}")
-            for _root, _dirs, files in os.walk(pdir):
-                n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
-
-    files_before = count_files(owners)
+    owners = tio.owned_partitions(index_path)
+    # files a probe at the then-current tip must open (owned dirs only —
+    # retained-but-de-owned history is never probed)
+    files_before = tio.count_parquet_files(index_path, "ingest_id", owners)
     rows = read_ivf_index(spark, index_path)
     n_cells = int(ivf_index_meta(index_path)["n_centroids"])
     if len(owners) == 1 and files_before <= n_cells:
@@ -427,32 +378,25 @@ def compact_ivf_index(
         # so the noop is what makes repeated --compact-index idempotent)
         return {"ingests_before": 1, "new_ingest": owners[0],
                 "noop": True, "files_before": files_before}
-    _clear_uncommitted_ingest(index_path, new_pid)
-    (
+    new_pid = tio.next_partition_id(index_path)
+    tio.write_new_partition(
         rows.withColumn("ingest_id", F.lit(new_pid))
         .repartition(n_cells, "cell")  # ≈ one file per cell directory
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_id", "cell")
-        .parquet(index_path)
+        .sortWithinPartitions("cell", "vec_id"),
+        index_path, new_pid, "ingest_id", "cell",
     )
     tio.snapshot_commit(
         index_path, run_id, [new_pid],
         operation="replace", remove_partition_ids=owners,
     )
-    if remove_old_dirs:
-        for pid in owners:
-            shutil.rmtree(
-                os.path.join(index_path, f"ingest_id={pid}"),
-                ignore_errors=True,
-            )
     return {
         "ingests_before": len(owners),
         "new_ingest": new_pid,
         "deowned": owners,  # historical until expiry, then sweepable
         "files_before": files_before,
-        "files_after": count_files([new_pid]),
+        "files_after": tio.count_parquet_files(
+            index_path, "ingest_id", [new_pid]
+        ),
     }
 
 

@@ -56,8 +56,15 @@ def get_spark(
         # parquet writes default to zstd (guide §6; r7): interleaved A/B on
         # the bench's extract_write shape (4 reps each) measured zstd equal
         # to snappy within noise (5.71 vs 5.84 s median) at 1.75× smaller
-        # output (93 vs 163 MB) — same result as the r6 streaming-sink
-        # measurement. Smaller files = less downstream scan I/O at scale.
+        # output (93 vs 163 MB). Smaller files = less downstream scan I/O
+        # at scale. The streaming sink (stream_extract_committed) writes
+        # with this codec too; BENCH/sink_size.json measured why: a 100k-doc
+        # flat batch file overflows parquet's 1 MB dictionary page on
+        # out_spans.text, and snappy's PLAIN fallback balloons the table
+        # (363 MB vs 158 MB zstd for the same batch; 3.68 GB vs ~1.6 GB at
+        # 1M) at equal write/read times. Capping maxRecordsPerFile at ~2k
+        # rows keeps files inside the dictionary page (36–54 MB) but costs
+        # ~50 files per batch dir, so the sink does not cap.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))

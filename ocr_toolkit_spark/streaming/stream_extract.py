@@ -9,6 +9,10 @@ from the lineage table.
 `Trigger.AvailableNow` (the `availableNow=True` option) drains everything
 currently available and stops — the streaming analog of an idempotent batch
 catch-up run, suitable for cron-style incremental processing at scale.
+
+`stream_extract_committed` lands each micro-batch through io.py's
+table-commit steps (replay by run_id, uncommitted-dir clear + partition
+write, snapshot publish), like every other snapshot-committed table.
 """
 
 from __future__ import annotations
@@ -62,8 +66,6 @@ def stream_extract_committed(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     n_buckets: int = 64,
-    codec: str = "zstd",
-    max_records_per_file: int | None = None,
 ) -> StreamingQuery:
     """Streaming extraction with SNAPSHOT COMMITS: every micro-batch lands
     as one snapshot in the output table's log — the Iceberg streaming-
@@ -75,13 +77,13 @@ def stream_extract_committed(
 
     - the data write partitions by batch_id (FLAT layout — partition_id
       rides as a stored column, schema-identical to the batch pipeline's
-      output rows) with dynamic overwrite, so a REPLAYED batch (crash
-      before the checkpoint advanced) replaces exactly its own directory
-      — never duplicates. Flat-by-batch also means compaction preserves
-      the layout: a post-compaction table accepts new batches without
-      mixing directory depths (review r5 #1), and each micro-batch writes
-      one file per task instead of one per (task, bucket) — fewer, larger
-      files;
+      output rows) through io.write_new_partition, so a REPLAYED batch
+      (crash before the checkpoint advanced) replaces exactly its own
+      directory — never duplicates. Flat-by-batch also means compaction
+      preserves the layout: a post-compaction table accepts new batches
+      without mixing directory depths (review r5 #1), and each micro-batch
+      writes one file per task instead of one per (task, bucket) — fewer,
+      larger files;
     - the snapshot log claims the batch id under THIS STREAM's identity
       — the checkpoint's QUERY ID (Spark persists it in
       `<checkpoint>/metadata`; it survives restarts of the same
@@ -110,20 +112,8 @@ def stream_extract_committed(
     `read_extracted_changes(..., partition_col="batch_id")` reads just the
     batches an incremental consumer hasn't seen; `expire_snapshots` prunes
     history. The snapshot 'partition' dimension here is the BATCH — the
-    streaming analog of the batch pipeline's bucket partitions.
-
-    Sink encoding (r5 verdict #6, measured in BENCH/sink_size.json): the
-    default codec is **zstd** — on the redundant fixture corpus a
-    100k-doc flat file overflows parquet's 1 MB dictionary page on
-    out_spans.text and snappy's PLAIN fallback balloons the table
-    (363 MB vs 158 MB zstd for the same batch; 3.68 GB vs ~1.6 GB at
-    1M), while write/read times are equal within noise and zstd also
-    compresses mostly-unique real text better than snappy.
-    `max_records_per_file` stays an opt-in knob: capping at ~2k rows/file
-    keeps every file inside the dictionary page (36–54 MB for the same
-    batch) but costs ~50 files per batch directory — the file-count
-    growth the flat layout exists to avoid — so it is for extreme-
-    redundancy corpora only."""
+    streaming analog of the batch pipeline's bucket partitions. Files are
+    written with the session's parquet codec (zstd, session.py)."""
     import hashlib
     import json as _json
     import os
@@ -187,28 +177,14 @@ def stream_extract_committed(
                 "fresh table"
             )
         # crash-after-data-write, before-commit replay: the first attempt's
-        # files exist but no snapshot owns them. Dynamic overwrite at
-        # batch_id granularity replaces the whole directory, but a legacy
-        # NESTED first attempt (batch_id=b/partition_id=m) or foreign
-        # debris would survive alongside flat files → drop the uncommitted
-        # batch directory before rewriting.
-        import shutil
-
-        bdir = os.path.join(output_dir, f"batch_id={b}")
-        if os.path.isdir(bdir):
-            shutil.rmtree(bdir)
-        out = with_partition_id(df, n_buckets).withColumn(
-            "batch_id", F.lit(b)
+        # files exist but no snapshot owns them; a legacy NESTED first
+        # attempt (batch_id=b/partition_id=m) or foreign debris would
+        # survive a flat overwrite, so the uncommitted batch dir is
+        # cleared before the rewrite (io.write_new_partition)
+        tio.write_new_partition(
+            with_partition_id(df, n_buckets).withColumn("batch_id", F.lit(b)),
+            output_dir, b, "batch_id",
         )
-        w = (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", codec)
-            .partitionBy("batch_id")
-        )
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(output_dir)
         tio.snapshot_commit(output_dir, run_id, [b])
 
     writer = (
