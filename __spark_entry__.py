@@ -228,9 +228,8 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_event_windows(spark, sf_dir):
-    """Tumbling event-time windows in batch — the batch twin of the
-    streaming watermarked aggregation (streaming/stream_stats.py); the
-    watermark is a no-op in batch mode, semantics otherwise identical."""
+    """Tumbling event-time windows in batch
+    (streaming/stream_stats.windowed_event_counts)."""
     from ocr_toolkit_spark.streaming.stream_stats import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events").filter(F.col("ts") < "2024-01-04")
@@ -1184,7 +1183,7 @@ def q_media_features(spark, sf_dir):
         ),
         F.encode("text", "utf-8").alias("payload"),
     )
-    feats = extract_media_features(media, use_stub=True)
+    feats = extract_media_features(media)
     return (
         feats.groupBy("media_type")
         .agg(

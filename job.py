@@ -7,9 +7,10 @@ Usage:
         [--buckets 64] [--salt-threshold 500]
 
 Distributed replacement for the reference `ocr-convert` CLI
-(/root/reference/ocr_toolkit/cli/convert.py). Prints the per-method summary
-(the analog of the reference's ProcessingStats report, stats.py:28-85) and a
-one-line JSON result.
+(`ocr_toolkit/cli/convert.py`). Prints a one-line JSON result; its `report`
+is pipeline.run_report over the output table: the conversion summary
+(success rate, per-doc time, failure top-k) and the per-method counts (the
+analog of the reference's ProcessingStats report, stats.py:28-85).
 """
 
 from __future__ import annotations
@@ -429,7 +430,7 @@ def main(argv: list[str] | None = None) -> int:
                 "--dedup-delta, --dedup-delta-embed, --state-gc or "
                 "--table-report)")
 
-    from ocr_toolkit_spark.pipeline import extraction_stats, run_extraction
+    from ocr_toolkit_spark.pipeline import run_extraction, run_report
     from ocr_toolkit_spark.session import get_spark
     from ocr_toolkit_spark import io as tio
 
@@ -447,24 +448,21 @@ def main(argv: list[str] | None = None) -> int:
         salt_threshold=args.salt_threshold,
         doc_budget_ms=args.doc_budget_ms,
     )
-    result = tio.read_extracted(spark, args.output)
-    summary = extraction_stats(result)
-    summary.show(truncate=False)
-    n_docs = result.count()
-    n_failed = result.filter(~result.success).count()
+    report = run_report(tio.read_extracted(spark, args.output))
     print(
         json.dumps(
             {
                 "run_id": run_id,
                 "partitions_processed": stats.partitions_processed,
                 "partitions_skipped": stats.partitions_skipped,
-                "docs": n_docs,
-                "failed_docs": n_failed,
+                "docs": report["docs"],
+                "failed_docs": report["failed"],
+                "report": report,
             }
         )
     )
     spark.stop()
-    return 1 if n_docs == 0 else 0
+    return 1 if report["docs"] == 0 else 0
 
 
 if __name__ == "__main__":

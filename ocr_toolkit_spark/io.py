@@ -87,29 +87,6 @@ def append_lineage(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-) -> None:
-    """Bucketed external table (the Parquet analog of Iceberg's
-    `bucket(N, col)` partition transform): both sides of a recurring join
-    written with the same bucket spec join WITHOUT a shuffle — the exchange
-    is paid once at write time, then every downstream join/aggregation on
-    the bucket key is co-located. This is the 100-TB answer for join keys
-    used repeatedly (doc_id enrichments, media_ref attachments)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
     """The lineage table, or None when there is none yet. A missing path is
     decided here, not by a failing Spark read: that read logs a listener

@@ -64,18 +64,6 @@ def normalize_text(t: Column) -> Column:
     )
 
 
-def exact_dedup_keep_first(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Representative-per-group dedup: keep min(id) per exact text hash.
-    min_by avoids a window sort — single hash aggregation."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("h"))
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("group_size"))
-        .drop("h")
-    )
-
-
 # --- shingles / MinHash LSH ---------------------------------------------------
 
 

@@ -1,13 +1,11 @@
 """Multimodal column plumbing: opaque `binary` media + typed metadata.
 
 Images/audio/video ride as `binary` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-`mapInPandas` stages. The image/audio codec libraries are NOT in this
-container, so the codec call itself is stubbed behind
-`DETERMINISTIC_FAKE` (seed-free, content-derived — stable across runs) or
-raises NotImplementedError when a real decode is demanded; everything
-Spark-side — schema, batch shape, partitioning, UDF signatures — is real
-and tested.
+per-item feature extraction runs as one Arrow-batched `mapInPandas` stage.
+No image/audio/video codec library is installed, so the decode call is a
+deterministic content-derived stub (`_decode_stub`, stable across runs);
+everything Spark-side — schema, batch shape, partitioning, UDF signature —
+is real and tested. There is no resize or frame-sampling stage.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -66,24 +63,16 @@ def _decode_stub(payload: bytes, media_type: str) -> np.ndarray:
     return (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
 
 
-def real_decode(payload: bytes, media_type: str) -> np.ndarray:
-    raise NotImplementedError(
-        "media codecs (PIL/ffmpeg/torchaudio) are not installed in this "
-        "environment; use the deterministic stub path"
-    )
-
-
-def extract_media_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """media table → per-item feature rows. One Arrow-batched stage; the
     decode call is per item (codecs are per-buffer by nature) but hashing
     and feature packing stay NumPy-vectorized."""
-    decode = _decode_stub if use_stub else real_decode
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]
             feats = [
-                decode(p if p is not None else b"", mt)
+                _decode_stub(p if p is not None else b"", mt)
                 for p, mt in zip(payloads, pdf["media_type"])
             ]
             yield pd.DataFrame(
@@ -103,127 +92,3 @@ def extract_media_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
         fn, FEATURES_SCHEMA
     )
 
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField("resized", T.BooleanType(), False),
-    ]
-)
-
-
-def resize_images(df: DataFrame, max_side: int = 512,
-                  use_stub: bool = True) -> DataFrame:
-    """Image resize stage: binary in → binary out, bounded dimensions.
-
-    STUB decode/encode (no PIL in this container): the stub treats metadata
-    width/height as authoritative, scales them to fit `max_side`, and passes
-    the payload through untouched; the Spark-side contract — schema, Arrow
-    batching, null handling — is the real deliverable. Swap `_resize_one`
-    for a PIL call in deployment."""
-
-    def _resize_one(payload: bytes, w: int, h: int) -> tuple[int, int, bytes, bool]:
-        if not use_stub:
-            raise NotImplementedError("PIL not available in this environment")
-        if w <= 0 or h <= 0:
-            return 0, 0, payload or b"", False
-        scale = min(1.0, max_side / max(w, h))
-        return int(w * scale), int(h * scale), payload or b"", scale < 1.0
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                _resize_one(p, int(w or 0), int(h or 0))
-                for p, w, h in zip(pdf["payload"], pdf["width"], pdf["height"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "width": pd.Series([o[0] for o in out], dtype="int32"),
-                    "height": pd.Series([o[1] for o in out], dtype="int32"),
-                    "payload": [o[2] for o in out],
-                    "resized": [o[3] for o in out],
-                }
-            )
-
-    src = df.select(
-        "media_ref",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        "payload",
-    )
-    return src.mapInPandas(fn, RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("ts_ms", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), False),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 16, use_stub: bool = True) -> DataFrame:
-    """Video frame sampling: one media row → N frame rows (a flatMap-shaped
-    mapInPandas; output batches may be larger than input batches — the
-    schema/batch contract is what a real ffmpeg-backed version would use).
-
-    STUB: frames are deterministic content-addressed slices of the payload
-    at the sampled timestamps; a real deployment decodes with ffmpeg."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, tss, frames = [], [], [], []
-            for ref, payload, dur in zip(
-                pdf["media_ref"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if not use_stub:
-                    raise NotImplementedError("ffmpeg not available")
-                payload = payload or b""
-                n = min(max_frames, max(int(dur or 0) // every_ms, 0))
-                for i in range(n):
-                    ts = i * every_ms
-                    h = hashlib.sha256(
-                        payload + ts.to_bytes(4, "little")
-                    ).digest()[:16]
-                    refs.append(ref)
-                    idxs.append(i)
-                    tss.append(ts)
-                    frames.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pd.Series(refs, dtype=object),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "ts_ms": pd.Series(tss, dtype="int32"),
-                    "frame": pd.Series(frames, dtype=object),
-                }
-            )
-
-    src = df.select(
-        "media_ref", "payload", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return src.mapInPandas(fn, FRAMES_SCHEMA)
-
-
-def join_media_to_spans(extracted: DataFrame, media: DataFrame) -> DataFrame:
-    """Explode image spans out of extraction output and attach media rows —
-    the seam between the text pipeline and the media pipeline.
-
-    No broadcast hint (r1 review item #5): at pipeline scale the media table
-    is the BIG side — binary payloads dwarf the span rows — so forcing a
-    BroadcastExchange on it is a driver OOM at 100 TB.  A plain equi-join on
-    media_ref lets AQE pick BHJ when the media batch is actually small and
-    fall back to shuffle join (with skew splitting) when it is not."""
-    img = (
-        extracted.select("doc_id", F.explode("out_spans").alias("s"))
-        .filter(F.col("s.kind") == "image")
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"),
-                F.col("s.order").alias("order"))
-    )
-    return img.join(media, "media_ref", "left")

@@ -56,6 +56,8 @@ DEFAULT_BUCKETS = 64
 # fixture skew slice generates 2k-8k-span docs vs a ~6-span median
 DEFAULT_SALT_THRESHOLD = 500
 DEFAULT_SALT_K = 8
+# distinct error strings listed in run_report's top_errors
+TOP_ERRORS = 10
 
 
 @dataclass
@@ -324,20 +326,7 @@ def render_markdown_col() -> "F.Column":
     )
 
 
-def with_markdown(extracted: DataFrame) -> DataFrame:
-    return extracted.withColumn("markdown", render_markdown_col())
-
-
-def with_output_quality(extracted: DataFrame) -> DataFrame:
-    """T10 quality scoring over the rendered output (quality_evaluator.py:
-    46-126) — the distributed version of per-file post-scoring, via the
-    layered with_quality (each primitive once per row)."""
-    from .operators.textstats import with_quality
-
-    return with_quality(with_markdown(extracted), "markdown")
-
-
-def run_report(extracted: DataFrame, top_k_errors: int = 10) -> dict:
+def run_report(extracted: DataFrame) -> dict:
     """A2 — the one-call conversion summary, the distributed analog of the
     reference's end-of-run report (cli/convert.py:553-625: success rate,
     avg per-doc time, throughput) plus a failure top-k by error string.
@@ -385,7 +374,7 @@ def run_report(extracted: DataFrame, top_k_errors: int = 10) -> dict:
             {"error": r["error"], "docs": r["n"]}
             for r in extracted.filter(~F.col("success"))
             .groupBy("error").agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), F.asc("error")).limit(top_k_errors)
+            .orderBy(F.desc("n"), F.asc("error")).limit(TOP_ERRORS)
             .collect()
         ],
     }

@@ -6,7 +6,7 @@ landing under the documents directory are extracted exactly once, with
 Spark's checkpointing providing the resume semantics the batch path gets
 from the lineage table.
 
-`Trigger.AvailableNow` (the `availableNow=True` option) drains everything
+Both sinks run `Trigger.AvailableNow`: each start drains everything
 currently available and stops — the streaming analog of an idempotent batch
 catch-up run, suitable for cron-style incremental processing at scale.
 
@@ -40,21 +40,19 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     with_images: bool = True,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """documents stream → extraction stage → parquet sink, exactly-once via
     the checkpoint. Stateless per document, so no watermark is needed; the
     mapInArrow stage is streaming-safe (no cross-batch state)."""
     extracted = extract_spans(read_documents_stream(spark, input_dir), with_images)
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_committed(
@@ -63,7 +61,6 @@ def stream_extract_committed(
     output_dir: str,
     checkpoint_dir: str,
     with_images: bool = True,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     n_buckets: int = 64,
 ) -> StreamingQuery:
@@ -187,39 +184,10 @@ def stream_extract_committed(
         )
         tio.snapshot_commit(output_dir, run_id, [b])
 
-    writer = (
+    return (
         extracted.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_method_counts(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-) -> tuple[StreamingQuery, str]:
-    """Running per-method doc counts as an in-memory table — the streaming
-    analog of the reference's ProcessingStats accumulator (stats.py:28-85).
-    Complete-mode aggregation; returns (query, table_name). Metrics-only
-    schema: the spans are never read, so they are never returned/converted
-    (include_spans=False, measured 1.8× at 1M docs)."""
-    extracted = extract_spans(read_documents_stream(spark, input_dir),
-                              include_spans=False)
-    counts = extracted.groupBy("method").agg(
-        F.count("*").alias("docs"),
-        F.sum(F.col("success").cast("int")).alias("succeeded"),
-    )
-    name = "stream_method_counts"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    return q, name

@@ -1,44 +1,24 @@
-"""Watermarked event-time windowed aggregation — the late-data pattern.
+"""Event-time windowed aggregation over the driver `events` table shape.
 
-The reference is strictly batch (SURVEY.md §2.6); this is the engine's
-streaming-analytics leg over an event stream (the driver `events` table
-shape): tumbling event-time windows with a watermark bounding how late a
-row may arrive and still update its window's state. Append output mode
-emits each window exactly once — when the watermark passes the window end —
-so the sink is idempotent and the state store stays bounded (Spark drops
-window state older than the watermark; without it, 10^12-event state grows
-forever).
+The reference is strictly batch (SURVEY.md §2.6). `windowed_event_counts` is
+the batch twin of a streaming event-time rollup: tumbling 10-minute windows
+per event_type, which the `event_windows` entry query (`__spark_entry__.py`)
+runs over the events table. There is no streaming sink for it; the
+streaming legs are streaming/stream_extract.py and streaming/stream_dedup.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from ..schema import EVENTS_SCHEMA
-
-
-def read_events_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+WINDOW = "10 minutes"
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling event-time window counts per event_type. Rows later than
-    `watermark` behind the max seen event time are dropped; rows within it
-    update their window before it finalizes."""
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling event-time window counts and value sums per event_type."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum("value").alias("total_value"),
@@ -50,78 +30,4 @@ def windowed_event_counts(
             "n_events",
             "total_value",
         )
-    )
-
-
-def session_event_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked per-user SESSION windows (native `session_window`
-    merging state): a session finalizes once the watermark passes its
-    close (last event + gap), so state per user is one open session, not
-    unbounded history. The batch twin is operators/sessions.sessionize —
-    fuzz-pinned equal to the native operator away from the exact-gap
-    boundary (tests/test_operators.py::TestSessionizeVsNative)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def stream_session_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> StreamingQuery:
-    """Event files → watermarked session windows → parquet sink, append
-    mode: each closed session row is written exactly once; the checkpoint
-    resumes open-session state across availableNow drains."""
-    agg = session_event_counts(read_events_stream(spark, input_dir), gap,
-                               watermark)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_windowed_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> StreamingQuery:
-    """Event files → watermarked windowed counts → parquet sink, append mode:
-    a window row is WRITTEN exactly once, when the watermark passes the
-    window end. Re-running with the same checkpoint resumes the watermark
-    and window state — the cron-style incremental rollup shape (each
-    availableNow drain picks up new files, finalizes what the advancing
-    watermark allows, and appends only those rows)."""
-    agg = windowed_event_counts(
-        read_events_stream(spark, input_dir), window, watermark
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

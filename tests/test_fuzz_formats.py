@@ -34,12 +34,15 @@ def test_pipeline_quality_over_rendered_output(spark, tmpdir_path):
 
     from ocr_toolkit_spark.fixtures import generate_documents, write_corpus
     from ocr_toolkit_spark.operators.extract import extract_spans
-    from ocr_toolkit_spark.pipeline import with_output_quality
+    from ocr_toolkit_spark.operators.textstats import with_quality
+    from ocr_toolkit_spark.pipeline import render_markdown_col
 
     corpus = os.path.join(tmpdir_path, "docs.parquet")
     write_corpus(corpus, n_docs=200, seed=777)
     docs = dict(generate_documents(200, 777))
-    q = with_output_quality(extract_spans(spark.read.parquet(corpus)))
+    rendered = extract_spans(spark.read.parquet(corpus)).withColumn(
+        "markdown", render_markdown_col())
+    q = with_quality(rendered, "markdown")
     for r in q.select("doc_id", "markdown", "total_score",
                       "error_penalty").collect():
         g = oracle.extract_document(r["doc_id"], docs[r["doc_id"]])

@@ -26,12 +26,6 @@ class TestDedup:
         r = exact_dedup_stats(dup_docs).collect()[0]
         assert r.total_docs == 6 and r.distinct_texts == 5 and r.duplicate_docs == 1
 
-    def test_keep_first(self, spark, dup_docs):
-        from ocr_toolkit_spark.operators.dedup import exact_dedup_keep_first
-
-        kept = {r.doc_id for r in exact_dedup_keep_first(dup_docs).collect()}
-        assert 1 in kept and 2 not in kept and len(kept) == 5
-
     def test_normalized(self, spark, dup_docs):
         from ocr_toolkit_spark.operators.dedup import normalize_text
 
@@ -468,28 +462,6 @@ class TestMultimodal:
         # deterministic: same payload → same feature
         again = {r.media_ref: r for r in extract_media_features(df).collect()}
         assert again["m1"].feature == feats["m1"].feature
-
-    def test_real_decode_is_stubbed(self):
-        from ocr_toolkit_spark.operators.multimodal import real_decode
-
-        with pytest.raises(NotImplementedError):
-            real_decode(b"", "image")
-
-    def test_join_media_to_spans(self, spark):
-        from ocr_toolkit_spark.fixtures import generate_documents, to_arrow
-        from ocr_toolkit_spark.operators.extract import extract_spans
-        from ocr_toolkit_spark.operators.multimodal import join_media_to_spans
-        import pyarrow.parquet as pq
-        import tempfile, os
-
-        docs = generate_documents(80, 42)
-        d = tempfile.mkdtemp()
-        pq.write_table(to_arrow(docs), os.path.join(d, "docs.parquet"))
-        extracted = extract_spans(spark.read.parquet(os.path.join(d, "docs.parquet")))
-        media = spark.createDataFrame([("none", "image", None)],
-                                      "media_ref string, media_type string, payload binary")
-        joined = join_media_to_spans(extracted, media)
-        assert joined.filter(F.col("media_ref") != "").count() > 0
 
 
 class TestWithCompareMethodsEquality:

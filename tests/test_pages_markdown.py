@@ -82,14 +82,14 @@ class TestMarkdownRender:
         import pyarrow.parquet as pq
 
         from ocr_toolkit_spark.operators.extract import extract_spans
-        from ocr_toolkit_spark.pipeline import with_markdown
+        from ocr_toolkit_spark.pipeline import render_markdown_col
 
         docs = generate_documents(120, 42)
         d = tempfile.mkdtemp()
         pq.write_table(to_arrow(docs), os.path.join(d, "docs.parquet"))
-        out = with_markdown(
-            extract_spans(spark.read.parquet(os.path.join(d, "docs.parquet")))
-        )
+        out = extract_spans(
+            spark.read.parquet(os.path.join(d, "docs.parquet"))
+        ).withColumn("markdown", render_markdown_col())
         got = {r.doc_id: r.markdown for r in out.select("doc_id", "markdown").collect()}
         for doc_id, spans in docs:
             exp = oracle.render_markdown(oracle.extract_document(doc_id, spans))

@@ -132,51 +132,6 @@ def test_assume_small_queries_skips_probe_and_broadcasts(spark):
         sorted(map(tuple, gated.collect()))
 
 
-def test_media_join_not_unconditionally_broadcast(spark, corpus_path):
-    """r1 review item #5: the media table (binary payloads) is the BIG side
-    at pipeline scale — join_media_to_spans must not carry a broadcast hint;
-    the optimized logical plan must show no ResolvedHint on the media side."""
-    from ocr_toolkit_spark.operators.extract import extract_spans
-    from ocr_toolkit_spark.operators.multimodal import join_media_to_spans
-
-    docs = spark.read.parquet(corpus_path)
-    extracted = extract_spans(docs)
-    media = spark.createDataFrame(
-        [("m0", b"\x00" * 8)], "media_ref string, payload binary")
-    joined = join_media_to_spans(extracted, media)
-    qe = joined._jdf.queryExecution()
-    assert "ResolvedHint" not in qe.analyzed().toString()
-    assert "strategy=broadcast" not in qe.optimizedPlan().toString()
-
-
-def test_bucketed_join_is_exchange_free(spark, corpus_path, tmp_path_factory):
-    """io.write_bucketed: two tables bucketed on the join key must join with
-    ZERO Exchange operators — the write-once/join-many co-location the
-    north_rule's bucket-partitioned Iceberg table provides at 100 TB."""
-    from ocr_toolkit_spark import io as tio
-
-    base = str(tmp_path_factory.mktemp("bucketed"))
-    docs = spark.read.parquet(corpus_path).select("doc_id", "spans")
-    left = docs.select("doc_id", F.size("spans").alias("n_spans"))
-    right = docs.select("doc_id", F.lit(1).alias("flag"))
-    tio.write_bucketed(left, "bk_left", f"{base}/l", ["doc_id"], n_buckets=8)
-    tio.write_bucketed(right, "bk_right", f"{base}/r", ["doc_id"], n_buckets=8)
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at test scale AQE would broadcast the tiny side; force the SMJ
-        # path the join takes at cluster scale to show bucket co-location
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("bk_left").join(spark.table("bk_right"), "doc_id")
-        plan = formatted_plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert j.count() == left.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
 def test_lsh_bucket_frames_materialized(spark):
     """r2 review #1: star_capped_pairs fans its input out four ways, so the
     expensive signature pipeline (shingle explode + 32-seed hash agg for

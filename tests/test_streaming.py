@@ -259,158 +259,6 @@ def test_legacy_nested_streaming_table_compaction_migrates(spark, tmpdir_path):
             assert not any(i.startswith("partition_id=") for i in inner)
 
 
-def test_watermarked_window_late_data(spark, tmpdir_path):
-    """Watermark semantics, exactly: a window finalizes (appends) once the
-    watermark passes its end; late rows WITHIN the watermark still count;
-    rows later than the watermark are dropped."""
-    import datetime as dt
-
-    import pyarrow as pa
-
-    from ocr_toolkit_spark.streaming.stream_stats import (
-        stream_windowed_event_counts)
-
-    def ev(eid, minute, second, etype, value):
-        return {
-            "event_id": eid,
-            "ts": dt.datetime(2024, 1, 1, 10, minute, second),
-            "user_id": 1,
-            "event_type": etype,
-            "value": float(value),
-            "props": "{}",
-        }
-
-    schema = pa.schema([
-        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-        ("user_id", pa.int64()), ("event_type", pa.string()),
-        ("value", pa.float64()), ("props", pa.string()),
-    ])
-
-    def write(name, rows):
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=schema),
-            os.path.join(in_dir, name))
-
-    in_dir = os.path.join(tmpdir_path, "events")
-    os.makedirs(in_dir)
-    ckpt = os.path.join(tmpdir_path, "ckpt_w")
-
-    out_dir = os.path.join(tmpdir_path, "win_out")
-
-    def drain():
-        q = stream_windowed_event_counts(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(600)
-        try:
-            rows = spark.read.parquet(out_dir).collect()
-        except Exception:  # nothing finalized yet → no files
-            return {}
-        return {(r.window_start.minute, r.event_type): r for r in rows}
-
-    # run 1: three A + one B inside window [10:00, 10:10); watermark after
-    # the run = 10:05 - 10m = 09:55 → nothing finalized yet
-    write("f1.parquet", [ev(1, 0, 30, "A", 1), ev(2, 3, 0, "A", 2),
-                         ev(3, 5, 0, "A", 3), ev(4, 5, 1, "B", 10)])
-    assert drain() == {}
-
-    # run 2: a LATE A at 10:07 — within the 09:55 watermark, so it is
-    # accepted and updates the open window; the 10:30 event advances the
-    # watermark to 10:20, and availableNow's trailing no-data batch then
-    # finalizes [10:00, 10:10) within this same drain.
-    write("f2.parquet", [ev(5, 7, 0, "A", 4), ev(6, 30, 0, "A", 100)])
-    rows = drain()
-    a = rows[(0, "A")]
-    assert a.n_events == 4, "late-but-within-watermark row must count"
-    assert a.total_value == 1 + 2 + 3 + 4
-    assert rows[(0, "B")].n_events == 1 and rows[(0, "B")].total_value == 10
-    assert not any(start >= 30 for start, _ in rows)  # 10:30 window open
-
-    # run 3: a TOO-LATE A at 10:05:30 — its window is already closed and its
-    # state evicted (watermark 10:20), so it must NOT reopen or duplicate
-    # the emitted row; the 10:45 event moves the watermark to 10:35, which
-    # still leaves [10:30, 10:40) open.
-    write("f3.parquet", [ev(7, 5, 30, "A", 1000), ev(8, 45, 0, "A", 5)])
-    rows3 = drain()
-    assert rows3[(0, "A")].n_events == 4, "too-late row must be dropped"
-    assert rows3[(0, "A")].total_value == 10
-    assert len([k for k in rows3 if k[0] == 0]) == 2  # no duplicate appends
-    assert not any(start >= 30 for start, _ in rows3)
-
-
-def test_streaming_method_counts(spark, tmpdir_path):
-    from ocr_toolkit_spark.streaming.stream_extract import streaming_method_counts
-
-    docs = generate_documents(80, 7)
-    in_dir = os.path.join(tmpdir_path, "in")
-    os.makedirs(in_dir)
-    pq.write_table(to_arrow(docs), os.path.join(in_dir, "a.parquet"))
-
-    q, table = streaming_method_counts(
-        spark, in_dir, os.path.join(tmpdir_path, "ckpt2"))
-    q.awaitTermination(600)
-    rows = {r.method: r.docs for r in spark.sql(f"select * from {table}").collect()}
-    assert sum(rows.values()) == len(docs)
-    assert "text" in rows
-
-
-def test_streaming_session_windows(spark, tmpdir_path):
-    """Per-user session windows in a stream: a session appends exactly
-    once, when the watermark passes its close (last event + gap); within-
-    gap events merge; too-late events neither reopen nor duplicate."""
-    import datetime as dt
-
-    import pyarrow as pa
-
-    from ocr_toolkit_spark.streaming.stream_stats import stream_session_counts
-
-    schema = pa.schema([
-        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-        ("user_id", pa.int64()), ("event_type", pa.string()),
-        ("value", pa.float64()), ("props", pa.string()),
-    ])
-
-    def ev(eid, hour, minute, user=1):
-        return {"event_id": eid,
-                "ts": dt.datetime(2024, 1, 1, hour, minute, 0),
-                "user_id": user, "event_type": "A", "value": 1.0,
-                "props": "{}"}
-
-    in_dir = os.path.join(tmpdir_path, "sess_events")
-    os.makedirs(in_dir)
-    ckpt = os.path.join(tmpdir_path, "sess_ckpt")
-    out_dir = os.path.join(tmpdir_path, "sess_out")
-
-    def write(name, rows):
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                       os.path.join(in_dir, name))
-
-    def drain():
-        q = stream_session_counts(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(600)
-        try:
-            rows = spark.read.parquet(out_dir).collect()
-        except Exception:
-            return []
-        return sorted(
-            (r.user_id, r.session_start.hour, r.session_start.minute,
-             r.session_end.hour, r.session_end.minute, r.n_events)
-            for r in rows)
-
-    # three events 10 min apart → ONE merged session [10:00, 10:50);
-    # watermark after the drain (10:20 - 30m = 09:50) keeps it open
-    write("s1.parquet", [ev(1, 10, 0), ev(2, 10, 10), ev(3, 10, 20)])
-    assert drain() == []
-
-    # a 12:00 event advances the watermark to 11:30 > 10:50 → the first
-    # session finalizes with all three events; 12:00's session stays open
-    write("s2.parquet", [ev(4, 12, 0)])
-    assert drain() == [(1, 10, 0, 10, 50, 3)]
-
-    # too-late event (10:05, before the 11:30 watermark) is dropped — no
-    # reopen, no duplicate; 13:30 closes the 12:00 session
-    write("s3.parquet", [ev(5, 10, 5), ev(6, 13, 30)])
-    assert drain() == [(1, 10, 0, 10, 50, 3), (1, 12, 0, 12, 30, 1)]
-
-
 def test_committed_sink_r6c_guards(spark, tmpdir_path):
     """r6c review fixes, pinned: (1) a wiped-and-recreated checkpoint at
     the SAME path fails loudly on the colliding batch id instead of
