@@ -1097,7 +1097,6 @@ def q_delta_embedding_dedup(spark, sf_dir):
 
     from ocr_toolkit_spark.operators.incremental import (
         incremental_embedding_round,
-        srp_banded_frame,
     )
     from ocr_toolkit_spark.operators.similarity import embedding_near_dups
 
@@ -1136,18 +1135,17 @@ def q_delta_embedding_dedup(spark, sf_dir):
     # precedent)
     shutil.rmtree(state, ignore_errors=True)
 
-    full = embedding_near_dups(
-        e, dim=dim, threshold=0.9, n_bits=cfg["n_bits"], seed=42,
-        id_col="vec_id", vec_col="embedding",
+    # the batch run's bucket frame is the rounds' bucketing too (SRP
+    # table 0 = make_srp_bucketer(dim, n_bits, seed)), so the caps report
+    # reads it instead of bucketing the corpus a second time
+    full, bucketed = embedding_near_dups(
+        e, dim=dim, threshold=0.9, n_bits=cfg["n_bits"], seed=cfg["seed"],
+        id_col="vec_id", vec_col="embedding", return_bucketed=True,
     )
     ip = inc_pairs.select("id_a", "id_b").distinct()
     fp = full.select("id_a", "id_b").distinct()
     pair_sym = ip.exceptAll(fp).unionAll(fp.exceptAll(ip))
-    caps = _caps_summary(
-        srp_banded_frame(e, dim, n_bits=cfg["n_bits"], seed=cfg["seed"],
-                         materialize_frame=False),
-        ["band", "band_hash"],
-    ).select("buckets_capped")
+    caps = _caps_summary(bucketed, ["bucket"]).select("buckets_capped")
     return (
         base.agg(F.count("*").alias("base_vecs"))
         .crossJoin(delta.agg(F.count("*").alias("delta_vecs")))

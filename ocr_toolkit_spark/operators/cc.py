@@ -14,11 +14,8 @@ small cliques, and oversized boilerplate buckets arrive STAR-SHAPED from
 operators/skew.py (diameter ≤ 2), so propagation converges in 2–3 rounds
 regardless of corpus size.
 
-For GENERAL graphs with long chains, `algorithm="star"` switches to the
-alternating large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", 2014): each round halves chain
-lengths, so convergence is O(log n) rounds independent of diameter —
-the property-tested scale path when the input is not star-guarded.
+Chains are not this workload's shape: a graph whose diameter exceeds
+`max_iter` raises instead of returning wrong labels.
 
 Scale shape per round: one shuffle join (edges ⋈ labels on dst) + one hash
 agg (min per src) + one join back — all on node-id keys. `skew.materialize`
@@ -34,124 +31,27 @@ from pyspark.sql import functions as F
 from .skew import materialize
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round: for every node u, connect each strictly-larger
-    neighbor to min(Γ(u) ∪ {u}). Input/output: undirected edge list."""
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    m = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("m"))
-        .withColumn("m", F.least("m", "src"))
-    )
-    return (
-        sym.join(m, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: orient edges large→small; for every node u,
-    connect u and all its smaller neighbors to the minimum of them."""
-    o = (
-        edges.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    m = o.groupBy("src").agg(F.min("dst").alias("m"))
-    nbrs = (
-        o.join(m, "src")
-        .filter(F.col("dst") != F.col("m"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-    centers = m.select("src", F.col("m").alias("dst"))
-    return nbrs.unionByName(centers).filter(
-        F.col("src") != F.col("dst")
-    ).distinct()
-
-
-def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Alternating large/small-star to a fixed point: the edge set becomes
-    a forest of stars (node → component min). O(log n) rounds."""
-    e = materialize(edges)
-    for _ in range(max_iter):
-        e2 = materialize(_small_star(_large_star(e)))
-        # fixed-point check in ONE action (r3 verdict #6 — was count() +
-        # exceptAll().count(), two jobs/round): both frames are distinct
-        # edge sets, so equality ⟺ empty symmetric difference, computed
-        # as two anti-joins unioned under a limit(1)
-        sym_diff = e2.join(e, ["src", "dst"], "left_anti").unionByName(
-            e.join(e2, ["src", "dst"], "left_anti")
-        )
-        same = sym_diff.limit(1).count() == 0
-        e = e2
-        if same:
-            roots = e.select(F.col("dst").alias("node")).distinct().withColumn(
-                "component", F.col("node")
-            )
-            return (
-                e.select(F.col("src").alias("node"),
-                         F.col("dst").alias("component"))
-                .unionByName(roots)
-                .distinct()
-            )
-    raise RuntimeError(
-        f"star connected components did not converge in {max_iter} rounds"
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    algorithm: str = "hash_min",
 ) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component =
     min node id of the connected component. Converges early when a round
     changes nothing; raises if max_iter rounds were not enough.
-
-    `algorithm`: "hash_min" (default — rounds = diameter; right for the
-    star-guarded near-dup graphs) or "star" (large-star/small-star,
-    O(log n) rounds; use for general graphs with long chains).
 
     EAGERNESS: connected_components is an inherently EAGER operator — the
     fixed-point loop must run Spark actions at call time to decide
     convergence, so calling it executes the full upstream lineage
     (unlike the dedup candidate generators, which are plan-only until an
     action; r4 review #3)."""
-    # one materialization of the (src, dst) projection: both algorithms
-    # reference it multiply (edges union + nodes scan + anti-join), and
-    # `pairs` may carry an expensive unmaterialized LSH/verify lineage
-    # (r4 review pass 2, #1)
+    # one materialization of the (src, dst) projection: the symmetric edge
+    # union references it twice, and `pairs` may carry an expensive
+    # unmaterialized LSH/verify lineage (r4 review pass 2, #1)
     e = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     )
-    if algorithm == "star":
-        labeled = _star_components(
-            e.filter(F.col("src") != F.col("dst")).distinct(), max_iter
-        )
-        # nodes whose ONLY appearance is a self-pair were dropped with the
-        # self-loop filter; restore them as their own singleton component
-        # (contract: every node appearing in `pairs` — r3 review #2)
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        singletons = nodes.join(
-            labeled.select("node"), "node", "left_anti"
-        ).withColumn("component", F.col("node"))
-        return labeled.unionByName(singletons)
-    if algorithm != "hash_min":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     edges = materialize(e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct())

@@ -188,10 +188,9 @@ def minhash_banded_frame(
     k: int = 5,
     n_hashes: int = 64,
     bands: int = 16,
-    materialize_frame: bool = True,
 ) -> DataFrame:
     """(id, band, band_hash) — the LSH bucket frame, one row per (doc,
-    band). Materialized by default: this frame's lineage holds the whole
+    band). Materialized: this frame's lineage holds the whole
     signature pipeline and downstream consumers (candidate self-join AND
     the oversized_bucket_stats report) reference it multiple times, so
     computing it once is the difference between one signature pass and
@@ -221,7 +220,7 @@ def minhash_banded_frame(
             )
         ).alias("band", "band_hash"),
     )
-    return materialize(banded) if materialize_frame else banded
+    return materialize(banded)
 
 
 def minhash_pairs_from_banded(

@@ -168,7 +168,6 @@ def delta_candidate_pairs(
     new_banded: DataFrame,
     state_banded: DataFrame | None,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize_frames: bool = True,
 ) -> DataFrame:
     """Candidate pairs touching at least one NEW doc: new×(old ∪ new)
     within each bucket, star-capped like the batch path.
@@ -182,9 +181,9 @@ def delta_candidate_pairs(
 
     `new_banded` is read three times, so callers hand over a materialized
     frame (see skew.materialize) — the rounds build it materialized and
-    append_signatures reuses the same rows. `materialize_frames=False`
-    keeps the union and oversized-bucket frames lazy as well (plan
-    inspection, empty rounds)."""
+    append_signatures reuses the same rows. The union of touched state
+    rows and new rows is materialized here (its checkpoint job carries
+    the broadcast semi-join), and so is the tiny oversized-bucket frame."""
     new_t = new_banded.select(
         "id", "band", "band_hash", F.lit(True).alias("_new")
     )
@@ -206,17 +205,15 @@ def delta_candidate_pairs(
         allb = touched_old.select(
             "id", "band", "band_hash", F.lit(False).alias("_new")
         ).unionByName(new_t)
-    if materialize_frames:
-        allb = materialize(allb)
+    allb = materialize(allb)
 
     stats = allb.groupBy("band", "band_hash").agg(
         F.count("*").alias("_n"),
         F.min("id").alias("_rep"),
         F.min(F.when(~F.col("_new"), F.col("id"))).alias("_old_rep"),
     )
-    big = stats.filter(F.col("_n") > max_bucket)
-    if materialize_frames:
-        big = materialize(big)  # tiny; referenced three times below
+    # tiny; referenced three times below
+    big = materialize(stats.filter(F.col("_n") > max_bucket))
 
     big_keys = big.select("band", "band_hash")
     small_all = allb.join(big_keys, ["band", "band_hash"], "left_anti")
@@ -245,6 +242,15 @@ def delta_candidate_pairs(
     return pairs_small.unionByName(pairs_star).unionByName(bridges).distinct()
 
 
+def _empty_pairs(banded: DataFrame, score_col: str) -> DataFrame:
+    """The verified-pairs columns (id_a, id_b, <score_col>) over an EMPTY
+    banded frame: a projection of its zero rows, so no job runs."""
+    return banded.select(
+        F.col("id").alias("id_a"), F.col("id").alias("id_b"),
+        F.lit(None).cast("double").alias(score_col),
+    )
+
+
 def incremental_dedup_round(
     spark: SparkSession,
     new_df: DataFrame,
@@ -258,7 +264,6 @@ def incremental_dedup_round(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    commit: bool = True,
 ) -> DataFrame:
     """One ingest round: signatures for the new docs, delta candidates vs
     state, exact Jaccard verification, state append. Returns the verified
@@ -266,8 +271,11 @@ def incremental_dedup_round(
 
     `corpus_df` must contain the texts of old + new docs (the union
     table); verification semi-joins it down to candidate ids, so only
-    candidate texts are ever shingled. Set commit=False for a dry run
-    (state unchanged).
+    candidate texts are ever shingled.
+
+    An empty delta returns an empty pairs frame, projected from the empty
+    banded frame with no verify plan, and leaves the state and its meta
+    untouched.
 
     Replay note: with a deterministic `run_id`, re-running a round whose
     commit already landed appends NOTHING (append_signatures is
@@ -287,11 +295,7 @@ def incremental_dedup_round(
         # later read_signature_state fail (tip>0 but no parquet files to
         # infer a schema from). Return an empty verified-pairs frame with
         # the exact output schema; state and meta untouched.
-        return jaccard_verify(
-            delta_candidate_pairs(banded, None, max_bucket=max_bucket,
-                                  materialize_frames=False),
-            corpus_df, id_col, text_col, k=k, threshold=threshold,
-        )
+        return _empty_pairs(banded, "jaccard")
     # the full equivalence-relevant config is pinned, not just the
     # signature params: a threshold or cap change between rounds silently
     # voids the union==full-re-run contract just as surely as a band
@@ -307,8 +311,7 @@ def incremental_dedup_round(
         cand, corpus_df, id_col, text_col, k=k, threshold=threshold
     )
     pairs = materialize(pairs)  # compute before the state append mutates
-    if commit:
-        append_signatures(banded, state_path, run_id)
+    append_signatures(banded, state_path, run_id)
     return pairs
 
 
@@ -372,7 +375,6 @@ def srp_banded_frame(
     n_tables: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize_frame: bool = True,
 ) -> DataFrame:
     """(id, band, band_hash) for embeddings: band = SRP table index,
     band_hash = that table's signed-random-projection bucket — the
@@ -396,29 +398,29 @@ def srp_banded_frame(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return materialize(out) if materialize_frame else out
+    return materialize(out)
 
 
 def cosine_verify(
     candidates: DataFrame,
     vectors: DataFrame,
     threshold: float,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize_frames: bool = True,
-    dim: int | None = None,
-    require_all_ids: bool = False,
 ) -> DataFrame:
     """Exact-cosine verification of candidate pairs — the embedding
     jaccard_verify: the vector table is semi-joined down to candidate ids
     first (only candidate embeddings are ever read), then one JVM-side
     cosine per pair. Returns (id_a, id_b, sim) with sim ≥ threshold.
-    `materialize_frames=False` keeps construction lazy (plan inspection,
-    tools/explain_report.py)."""
+
+    The pair joins are INNER: a candidate id missing from `vectors` drops
+    its pairs. That is the contract for REPLAY rounds, which verify
+    against their own round's corpus and return a subset
+    (test_embedding_delta_union_equals_full)."""
     from .similarity import _norm, cosine_precomputed
 
-    if materialize_frames:
-        candidates = materialize(candidates)
+    candidates = materialize(candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias("cid"))
         .unionByName(candidates.select(F.col("id_b").alias("cid")))
@@ -438,37 +440,15 @@ def cosine_verify(
         ).join(cand_ids, F.col("id") == F.col("cid"), "left_semi"),
         source=vectors,
     )
-    v = v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>")))
-    hint = lambda df: df  # noqa: E731
-    if materialize_frames:
-        v = materialize(v)
-        # opt-in loud refusal (r7, ADVICE r6 #5): the pair joins below are
-        # INNER — a candidate id missing from `vectors` silently drops its
-        # pairs. That drop IS the contract for REPLAY rounds (a replayed
-        # round verifies against its own round's corpus and returns a
-        # subset — test_embedding_delta_union_equals_full), so the check
-        # must stay off by default; callers that guarantee old+new-union
-        # coverage can opt in and get a loud failure instead of a quietly
-        # smaller pair set.
-        if require_all_ids:
-            n_resolved = v.count()
-            n_cand_ids = cand_ids.count()
-            if n_resolved < n_cand_ids:
-                raise ValueError(
-                    f"cosine_verify: only {n_resolved} of {n_cand_ids} "
-                    "distinct candidate ids resolve in the vector table — "
-                    "candidates reference vectors the caller did not pass "
-                    "(the vector side must cover every id in the candidate "
-                    "pairs). Refusing to silently drop their pairs."
-                )
-        # broadcast the (candidate-touched) vector side when provably
-        # small (r7, skew.broadcast_build_fits — a bounded early-stop
-        # probe): checkpointed frames have no stats, so without the hint
-        # both pair joins are sort-merge joins whose tiny shuffles AQE
-        # coalesces to ~1 task — serializing the per-pair dot. Needs `dim`
-        # (callers that know it pass it); unknown → no hint.
-        if dim is not None and broadcast_build_fits(v, dim * 4 + 96):
-            hint = F.broadcast
+    v = materialize(
+        v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>"))))
+    # broadcast the (candidate-touched) vector side when provably small
+    # (r7, skew.broadcast_build_fits — a bounded early-stop probe):
+    # checkpointed frames have no stats, so without the hint both pair
+    # joins are sort-merge joins whose tiny shuffles AQE coalesces to ~1
+    # task — serializing the per-pair dot.
+    hint = (F.broadcast if broadcast_build_fits(v, dim * 4 + 96)
+            else lambda df: df)
     return (
         candidates.join(
             hint(v.select(F.col("id").alias("id_a"), F.col("vec").alias("_va"),
@@ -503,7 +483,6 @@ def incremental_embedding_round(
     max_bucket: int = DEFAULT_MAX_BUCKET,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    commit: bool = True,
 ) -> DataFrame:
     """One embedding ingest round: SRP buckets for the new vectors only,
     delta candidates vs the persisted bucket state (the state is scanned
@@ -516,19 +495,16 @@ def incremental_embedding_round(
     similarity.embedding_near_dups on the union corpus (n_tables=1), each
     pair emitted by the round ingesting max(a, b). Config is pinned in
     the state's meta — the `kind` field keeps an embedding state and a
-    minhash state from ever silently mixing. Replay, empty-round, crash,
-    and maintenance behavior are inherited verbatim from the shared
-    machinery (append_signatures / gc via bands)."""
+    minhash state from ever silently mixing. Replay, crash and
+    maintenance behavior are inherited verbatim from the shared machinery
+    (append_signatures / gc via bands); an empty delta returns an empty
+    (id_a, id_b, sim) frame like the minhash round's, state untouched."""
     banded = srp_banded_frame(
         new_vecs, dim, n_bits=n_bits, seed=seed, n_tables=n_tables,
         id_col=id_col, vec_col=vec_col,
     )
     if banded.isEmpty():
-        return cosine_verify(
-            delta_candidate_pairs(banded, None, max_bucket=max_bucket,
-                                  materialize_frames=False),
-            corpus_vecs, threshold, id_col, vec_col,
-        )
+        return _empty_pairs(banded, "sim")
     _check_or_write_meta(
         state_path,
         {"kind": "srp", "dim": dim, "n_bits": n_bits, "seed": seed,
@@ -537,11 +513,9 @@ def incremental_embedding_round(
     )
     state = read_signature_state(spark, state_path)
     cand = delta_candidate_pairs(banded, state, max_bucket=max_bucket)
-    pairs = cosine_verify(cand, corpus_vecs, threshold, id_col, vec_col,
-                          dim=dim)
+    pairs = cosine_verify(cand, corpus_vecs, threshold, dim, id_col, vec_col)
     pairs = materialize(pairs)  # compute before the state append mutates
-    if commit:
-        append_signatures(banded, state_path, run_id)
+    append_signatures(banded, state_path, run_id)
     return pairs
 
 

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque `binary` media + typed metadata.
 
-Images/audio/video ride as `binary` columns with a typed metadata struct;
-per-item feature extraction runs as one Arrow-batched `mapInPandas` stage.
+Images/audio/video ride as `binary` payload columns keyed by (media_ref,
+media_type); per-item feature extraction runs as one Arrow-batched `mapInPandas` stage.
 No image/audio/video codec library is installed, so the decode call is a
 deterministic content-derived stub (`_decode_stub`, stable across runs);
 everything Spark-side — schema, batch shape, partitioning, UDF signature —
@@ -18,26 +18,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("codec", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURES_SCHEMA = T.StructType(
     [

@@ -6,7 +6,7 @@ landing under the documents directory are extracted exactly once, with
 Spark's checkpointing providing the resume semantics the batch path gets
 from the lineage table.
 
-Both sinks run `Trigger.AvailableNow`: each start drains everything
+The sink runs `Trigger.AvailableNow`: each start drains everything
 currently available and stops — the streaming analog of an idempotent batch
 catch-up run, suitable for cron-style incremental processing at scale.
 
@@ -32,27 +32,6 @@ def read_documents_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    with_images: bool = True,
-) -> StreamingQuery:
-    """documents stream → extraction stage → parquet sink, exactly-once via
-    the checkpoint. Stateless per document, so no watermark is needed; the
-    mapInArrow stage is streaming-safe (no cross-batch state)."""
-    extracted = extract_spans(read_documents_stream(spark, input_dir), with_images)
-    return (
-        extracted.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_extract_committed(

@@ -183,27 +183,27 @@ def test_state_side_is_broadcast_semi_join(spark, tmpdir_path):
     """Scale shape: the candidate plan must reduce the state table with a
     broadcast LEFT-SEMI join on the delta's bucket keys — the state is
     scanned (narrow) but NEVER shuffled, so per-round cost tracks the
-    delta size, not the corpus."""
+    delta size, not the corpus. Read from the plans the operator actually
+    ran: the semi-join executes inside the checkpoint of the union of
+    touched state rows and new rows."""
     from ocr_toolkit_spark.operators.dedup import minhash_banded_frame
+    from ocr_toolkit_spark.plans import executed_plans
 
     rows, _ = _corpus(12, 30, 5, 5)
     df = spark.createDataFrame(rows, "doc_id int, text string")
     state = os.path.join(tmpdir_path, "sigstate")
-    banded = minhash_banded_frame(df, k=3, n_hashes=32, bands=8,
-                                  materialize_frame=False)
-    append_signatures(banded, state, "r0")
+    append_signatures(minhash_banded_frame(df, k=3, n_hashes=32, bands=8),
+                      state, "r0")
 
     new_rows, _ = _corpus(13, 5, 0, 0, start_id=5000)
     new_df = spark.createDataFrame(new_rows, "doc_id int, text string")
-    new_banded = minhash_banded_frame(new_df, k=3, n_hashes=32, bands=8,
-                                      materialize_frame=False)
-    cand = delta_candidate_pairs(
-        new_banded, read_signature_state(spark, state),
-        materialize_frames=False)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan
-    semi_lines = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
-    assert any("Broadcast" in ln for ln in semi_lines)
+    new_banded = minhash_banded_frame(new_df, k=3, n_hashes=32, bands=8)
+    state_df = read_signature_state(spark, state)
+    plans = executed_plans(
+        spark, lambda: delta_candidate_pairs(new_banded, state_df))
+    semi = [p for p in plans if "LeftSemi" in p]
+    assert semi, plans
+    assert any("BroadcastHashJoin LeftSemi BuildRight" in p for p in semi)
 
 
 def test_dedup_extracted_changes_composition(spark, tmpdir_path):
@@ -333,8 +333,7 @@ def test_empty_delta_round_is_a_noop(spark, tmpdir_path):
     assert read_signature_state(spark, state).count() == n
 
     # the low-level guard also refuses an explicit empty append
-    ebanded = minhash_banded_frame(empty, k=3, n_hashes=32, bands=8,
-                                   materialize_frame=False)
+    ebanded = minhash_banded_frame(empty, k=3, n_hashes=32, bands=8)
     with pytest.raises(ValueError, match="EMPTY banded frame"):
         append_signatures(ebanded, state, "r-bad")
 

@@ -83,39 +83,36 @@ class TestConnectedComponents:
         with _pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iter=2)
 
-    def test_star_algorithm_equals_hash_min_on_random_graphs(self, spark):
-        """large-star/small-star (general-graph path, r2 review #10) must
-        produce identical components to hash-min on random graphs."""
+    def test_hash_min_equals_union_find_on_random_graphs(self, spark):
+        """Hash-min labels equal a Python union-find's min-id components
+        on random graphs (self-loops and repeated edges included)."""
         import random as _random
 
         from ocr_toolkit_spark.operators.cc import connected_components
+
+        def union_find(edges):
+            parent = {}
+
+            def find(x):
+                parent.setdefault(x, x)
+                while parent[x] != x:
+                    x = parent[x]
+                return x
+
+            for a, b in edges:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+            return {x: find(x) for x in parent}
 
         rng = _random.Random(17)
         for trial in range(3):
             n = 40
             edges = [(rng.randrange(n), rng.randrange(n))
                      for _ in range(rng.randrange(10, 50))]
-            edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
             pairs = spark.createDataFrame(edges, "id_a int, id_b int")
-            a = {r.node: r.component
-                 for r in connected_components(pairs, max_iter=40).collect()}
-            b = {r.node: r.component
-                 for r in connected_components(
-                     pairs, algorithm="star").collect()}
-            assert a == b, (trial, edges)
-
-    def test_star_algorithm_converges_on_long_chain(self, spark):
-        """A 200-node chain needs ~200 hash-min rounds but only O(log n)
-        alternating star rounds — the scale property the general path is
-        for."""
-        from ocr_toolkit_spark.operators.cc import connected_components
-
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(200)], "id_a int, id_b int")
-        got = {r.node: r.component
-               for r in connected_components(
-                   chain, algorithm="star", max_iter=12).collect()}
-        assert got == {i: 0 for i in range(201)}
+            got = {r.node: r.component
+                   for r in connected_components(pairs, max_iter=40).collect()}
+            assert got == union_find(edges), (trial, edges)
 
     def test_star_guard_output_is_a_star(self, spark):
         """skew.py invariant the hash-min fast-converge claim rests on: an
@@ -509,17 +506,15 @@ class TestWithCompareMethodsEquality:
 class TestR3ReviewFixes:
     def test_star_keeps_self_loop_only_nodes(self, spark):
         """A node whose only appearance is a self-pair must still appear
-        in the star output as its own singleton component (contract:
-        every node appearing in pairs)."""
+        in the output as its own singleton component (contract: every node
+        appearing in pairs)."""
         from ocr_toolkit_spark.operators.cc import connected_components
 
         pairs = spark.createDataFrame(
             [(5, 5), (1, 2)], "id_a int, id_b int")
-        a = {r.node: r.component
-             for r in connected_components(pairs).collect()}
-        b = {r.node: r.component
-             for r in connected_components(pairs, algorithm="star").collect()}
-        assert a == b == {1: 1, 2: 1, 5: 5}
+        got = {r.node: r.component
+               for r in connected_components(pairs).collect()}
+        assert got == {1: 1, 2: 1, 5: 5}
 
     def test_with_quality_rescoring_replaces_and_keeps_user_cols(self, spark):
         """Re-scoring a frame that already carries quality columns must

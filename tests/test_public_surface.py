@@ -1,14 +1,14 @@
 """Every public package function has a production caller: a top-level
-public `def` under ocr_toolkit_spark/ is named by a non-test source other
-than its own definition: the package, job.py, __spark_entry__.py,
-bench.py, tools/, perfbench/ or BENCH/. The scan is by name over the
-source text, so a mention in another module's prose also counts.
-The allow-list names the few functions kept on purpose without a caller."""
+public `def` under ocr_toolkit_spark/ is used by name in a non-test source
+other than its own definition: the package, job.py, __spark_entry__.py,
+bench.py, tools/, perfbench/ or BENCH/. A use is an AST `Name` or
+`Attribute` node or an imported name, so a mention in a docstring,
+comment or string does not count. The allow-list names the few functions
+kept on purpose without a caller."""
 
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -19,6 +19,14 @@ ALLOWED = {
         "the streaming-dedup driver; giving it a caller needs a new job.py "
         "flag, so tests drive it",
     "oracle.py::render_markdown": "the test oracle's markdown renderer",
+    "oracle.py::quality_score":
+        "the oracle's quality formula; tests compare the engine's to it",
+    "operators/similarity.py::cosine":
+        "the plain cosine that cosine_precomputed hoists; tests build the "
+        "exact all-pairs truth with it",
+    "operators/textstats.py::compare_methods":
+        "the column-level method-comparison spec; tests check "
+        "with_compare_methods against it",
     "plans/checks.py::*":
         "plan-assertion helpers for tests and tools/explain_report.py",
 }
@@ -33,26 +41,37 @@ def _non_test_sources() -> list[Path]:
     return files
 
 
+def _used_names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) for every name the module uses: `Name` and `Attribute`
+    nodes and the names it imports."""
+    out = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.append((n.id, n.lineno))
+        elif isinstance(n, ast.Attribute):
+            out.append((n.attr, n.lineno))
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out += [(a.name.rsplit(".", 1)[-1], n.lineno) for a in n.names]
+    return out
+
+
 def _uncalled(allowed: dict[str, str]) -> list[str]:
-    texts = {p: p.read_text() for p in _non_test_sources()}
+    trees = {p: ast.parse(p.read_text()) for p in _non_test_sources()}
+    used = {p: _used_names(t) for p, t in trees.items()}
     out = []
     for p in sorted(PKG.rglob("*.py")):
         rel = p.relative_to(PKG).as_posix()
         if f"{rel}::*" in allowed:
             continue
-        lines = texts[p].splitlines()
-        for node in ast.parse(texts[p]).body:
+        for node in trees[p].body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             if node.name.startswith("_") or f"{rel}::{node.name}" in allowed:
                 continue
-            # this module minus the function's own definition, and every
-            # other non-test source
-            own = "\n".join(lines[:node.lineno - 1]
-                            + lines[node.end_lineno:])
-            word = re.compile(rf"\b{node.name}\b")
-            if not any(word.search(own if q == p else t)
-                       for q, t in texts.items()):
+            # uses inside the function's own definition do not count
+            if not any(name == node.name and not (
+                           q == p and node.lineno <= line <= node.end_lineno)
+                       for q, names in used.items() for name, line in names):
                 out.append(f"{rel}::{node.name}")
     return out
 

@@ -8,41 +8,6 @@ import pyarrow.parquet as pq
 from ocr_toolkit_spark.fixtures import generate_documents, to_arrow
 
 
-def test_stream_extract_availablenow(spark, tmpdir_path):
-    from ocr_toolkit_spark.streaming.stream_extract import stream_extract
-
-    docs = generate_documents(120, 42)
-    in_dir = os.path.join(tmpdir_path, "in")
-    os.makedirs(in_dir)
-    half = len(docs) // 2
-    pq.write_table(to_arrow(docs[:half]), os.path.join(in_dir, "a.parquet"))
-    pq.write_table(to_arrow(docs[half:]), os.path.join(in_dir, "b.parquet"))
-
-    out_dir = os.path.join(tmpdir_path, "out")
-    ckpt = os.path.join(tmpdir_path, "ckpt")
-    q = stream_extract(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(600)
-
-    result = spark.read.parquet(out_dir)
-    assert result.count() == len(docs)
-    assert result.select("doc_id").distinct().count() == len(docs)
-
-    # restart with the same checkpoint: nothing new → no duplicates
-    q2 = stream_extract(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(600)
-    assert spark.read.parquet(out_dir).count() == len(docs)
-
-    # a new file lands → only it is processed (incremental ingest)
-    extra = [(f"extra-{i}", [{"kind": "text", "text": f"new doc {i}",
-                              "media_ref": "", "offset": 0}]) for i in range(5)]
-    pq.write_table(to_arrow(extra), os.path.join(in_dir, "c.parquet"))
-    q3 = stream_extract(spark, in_dir, out_dir, ckpt)
-    q3.awaitTermination(600)
-    final = spark.read.parquet(out_dir)
-    assert final.count() == len(docs) + 5
-    assert final.filter("doc_id like 'extra-%'").count() == 5
-
-
 def test_stream_extract_committed_snapshots(spark, tmpdir_path):
     """Streaming ingest with snapshot commits (r4): every micro-batch is
     one snapshot; restarts neither duplicate data nor re-commit snapshots;
@@ -103,6 +68,9 @@ def test_stream_extract_committed_snapshots(spark, tmpdir_path):
                                      partition_col="batch_id")
     assert inc.count() == 5
     assert inc.filter("doc_id like 'extra-%'").count() == 5
+    final = spark.read.parquet(out)
+    assert final.count() == len(docs) + 5
+    assert final.select("doc_id").distinct().count() == len(docs) + 5
 
     # stream-identity guard: a FRESH checkpoint pointed at this table
     # restarts batch ids at 0, which a different identity already owns —
