@@ -110,8 +110,7 @@ def main() -> int:
     out["rebuild"] = {"sec": round(time.time() - t0, 2),
                       "steal_pct": round(steal_pct(c0, cpu_stat()), 1)}
 
-    bf = brute_force_topk(union, queries, k=10,
-                          assume_small_queries=True)
+    bf = brute_force_topk(union, queries, k=10)
     bf_rows = bf.select("query_id", "neighbor_id").collect()
     bf_set = {(r.query_id, r.neighbor_id) for r in bf_rows}
 

@@ -15,9 +15,9 @@ Per cycle:
    cursor stays inside the retained window, so it never goes stale);
 4. `table_report` tracks the small-file buildup that motivates step 5.
 
-After all cycles: `compact_extracted` (auto-detects the batch_id layout,
-flattens batch_id=N/partition_id=M to one file per batch) and a
-post-compaction full-count identity check.
+After all cycles: `compact_extracted` (auto-detects the flat batch_id
+layout, rewrites each batch to one file) and a post-compaction
+full-count identity check.
 
 Prints one JSON object; results land in BENCH/lifecycle.json.
 

@@ -8,9 +8,11 @@ emulates the needed semantics:
 - `write_extracted` uses dynamic partition overwrite (the Parquet analog of
   Iceberg `overwritePartitions()`): re-running a partition replaces its files
   instead of duplicating them → idempotent per-partition commits.
-- `append_lineage` appends small commit records (the analog of snapshot
-  metadata) AFTER the data write, so a crash between the two re-processes the
-  partition on resume — safe under overwrite semantics.
+- a commit runs data write → `snapshot_commit` → `append_lineage`. A crash
+  after the data write re-processes the partition on resume (safe under
+  overwrite semantics); a crash between snapshot and lineage leaves a
+  snapshot-owned partition with no lineage row, which
+  `pipeline.reconcile_committed` treats as committed and heals.
 
 Every snapshot-committed table (extraction output, streaming sink, dedup
 signature states, IVF index) runs the same commit protocol, and its steps
@@ -31,6 +33,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,9 +66,9 @@ def write_new_partition(
     `partition_cols[0] == pid`. The target dir is cleared first. Dynamic
     overwrite alone is keyed on ALL partition columns, so with a nested
     layout (`ingest_id=N/cell=M`) a crashed earlier writer's sub-dirs that
-    `df` does not cover would survive and be committed with it; a legacy
-    nested first attempt under a flat key survives the same way. The clear
-    only ever removes debris: a claimed id is uncommitted by construction
+    `df` does not cover would survive and be committed with it; any
+    sub-dir debris under a flat key survives the same way. The clear only
+    ever removes debris: a claimed id is uncommitted by construction
     (writers replay through the log before they reach a write)."""
     shutil.rmtree(
         os.path.join(path, f"{partition_cols[0]}={pid}"), ignore_errors=True
@@ -105,13 +108,14 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
 # readers pin a snapshot id and never see partial commits; `VERSION AS OF n`
 # reads history. This emulation keeps an append-only JSON log under
 # `<table>/_snapshots/` — one file per commit. Each file stores the DELTA
-# (this commit's partition_id → run_id claims); every CHECKPOINT_EVERY-th
-# snapshot (and snapshot 1) additionally embeds the full cumulative
-# `partitions` map, so state reconstruction folds at most CHECKPOINT_EVERY
-# delta files from the nearest checkpoint (r3 verdict #4 / ADVICE: the old
-# cumulative-per-file log made commits and reads O(n) file reads and the log
-# O(n²) bytes). Commits read NO snapshot files except on checkpoint commits
-# (amortized O(1)); the snapshot id is claimed from a directory listing.
+# (this commit's partition_id → run_id claims) and the `operation`; every
+# CHECKPOINT_EVERY-th snapshot additionally embeds the full cumulative
+# `partitions` map (snapshot 1 needs none: its delta is its full map), so
+# state reconstruction folds at most CHECKPOINT_EVERY delta files from the
+# nearest checkpoint. Commits read NO snapshot files except on checkpoint
+# commits (amortized O(1)); the snapshot id is claimed from a directory
+# listing. Every log walk reads through `_records`, which refuses a record
+# without a delta instead of folding it.
 # The time-travel read prunes partitions on the physical partition column at
 # file-listing time, exactly like Iceberg manifest pruning. With a real
 # catalog these functions become `writeTo(...).append()` /
@@ -125,8 +129,16 @@ def _snapshot_dir(table_path: str) -> str:
 
 
 def _read_snap(d: str, snapshot_id: int) -> dict:
+    """One log record. A record without `delta` was not written by
+    `snapshot_commit`: it is refused, never folded as some other layout."""
     with open(os.path.join(d, f"snap-{snapshot_id:08d}.json")) as f:
-        return json.load(f)
+        rec = json.load(f)
+    if "delta" not in rec:
+        raise ValueError(
+            f"snapshot {snapshot_id} in {d} has no delta: not a record "
+            "this engine writes"
+        )
+    return rec
 
 
 def _snapshot_ids(table_path: str) -> list[int]:
@@ -148,6 +160,36 @@ def latest_snapshot_id(table_path: str) -> int:
     return ids[-1] if ids else 0
 
 
+def _records(table_path: str, ids: Iterable[int]) -> Iterator[tuple[int, dict]]:
+    """(id, record) for each snapshot id in `ids`, in the order given —
+    the one reader every log walk goes through. A missing id raises
+    ValueError naming it."""
+    d = _snapshot_dir(table_path)
+    for sid in ids:
+        try:
+            rec = _read_snap(d, sid)
+        except FileNotFoundError:
+            raise ValueError(f"no snapshot {sid} under {table_path}") from None
+        yield sid, rec
+
+
+def _start_map(table_path: str, sid: int, rec: dict) -> dict[str, str]:
+    """The full ownership map at the first record of a walk: a checkpoint
+    embeds it, and snapshot 1's delta is it (folded, never dict()'d, so a
+    de-own entry cannot leak in as an owned partition). Any other record
+    cannot start a fold."""
+    if "partitions" in rec:
+        return dict(rec["partitions"])
+    if sid != 1:
+        raise ValueError(
+            f"snapshot {sid} under {table_path} is neither a checkpoint "
+            "nor snapshot 1: no fold can start there"
+        )
+    parts: dict[str, str] = {}
+    _fold_delta(parts, rec["delta"])
+    return parts
+
+
 def _fold_delta(parts: dict, delta: dict) -> None:
     """Fold one snapshot's delta into a cumulative ownership map. A None
     run_id DE-OWNS the partition (the Iceberg delete-manifest analog):
@@ -167,41 +209,14 @@ def partitions_as_of(table_path: str, snapshot_id: int) -> dict[str, str]:
     """Cumulative {partition_id: owning run_id} AS OF a snapshot, folding
     deltas forward from the nearest checkpoint at or below it — reads at
     most CHECKPOINT_EVERY + 1 files regardless of log length. Raises
-    ValueError if the snapshot does not exist."""
-    d = _snapshot_dir(table_path)
-    if snapshot_id < 1 or not os.path.isdir(d):
+    ValueError if the snapshot, or a log file its fold needs, is missing."""
+    if snapshot_id < 1:
         raise ValueError(f"no snapshot {snapshot_id} under {table_path}")
     start = max((snapshot_id // CHECKPOINT_EVERY) * CHECKPOINT_EVERY, 1)
-    try:
-        base = _read_snap(d, start)
-    except FileNotFoundError:
-        raise ValueError(f"no snapshot {snapshot_id} under {table_path}")
-    # checkpoint files (and legacy cumulative-format files) carry the full
-    # map; snapshot 1's delta folds into an empty map. Membership test,
-    # not truthiness: a legacy base with an EMPTY partitions map must fold
-    # to {}, not KeyError on the absent delta (r4 review #4). FOLD the
-    # delta case rather than dict() it (r6c review: a None-valued de-own
-    # entry in snapshot 1 would otherwise leak through as an owned
-    # partition and into checkpoint embeds).
-    if "partitions" in base:
-        parts = dict(base["partitions"])
-    else:
-        parts = {}
-        _fold_delta(parts, base["delta"])
-    for sid in range(start + 1, snapshot_id + 1):
-        try:
-            rec = _read_snap(d, sid)
-        except FileNotFoundError:
-            # name the ACTUALLY missing file: for an interior hole the
-            # requested id may well exist on disk (r4 review pass 2, #3)
-            raise ValueError(
-                f"no snapshot {snapshot_id} under {table_path}: "
-                f"log file for snapshot {sid} is missing"
-            )
-        if "delta" in rec:
-            _fold_delta(parts, rec["delta"])
-        else:  # legacy cumulative-only record
-            parts = dict(rec["partitions"])
+    recs = _records(table_path, range(start, snapshot_id + 1))
+    parts = _start_map(table_path, *next(recs))
+    for _sid, rec in recs:
+        _fold_delta(parts, rec["delta"])
     return parts
 
 
@@ -273,44 +288,22 @@ def read_meta(table_path: str, name: str) -> dict | None:
 
 def snapshots(table_path: str) -> list[dict]:
     """Full history, oldest first, each record carrying its cumulative
-    `partitions` map (reconstructed in ONE pass over the log): {snapshot_id,
-    parent_id, run_id, committed_ms, delta, partitions}. O(n) by nature —
-    for the common 'what is committed now' question use
-    `latest_snapshot_id` + `partitions_as_of` instead."""
-    d = _snapshot_dir(table_path)
+    `partitions` map (reconstructed in ONE pass over the log):
+    {snapshot_id, parent_id, run_id, committed_ms, delta, operation,
+    partitions}. O(n) by nature — for the common 'what is committed now'
+    question use `latest_snapshot_id` + `partitions_as_of` instead."""
     ids = _snapshot_ids(table_path)
     if not ids:
         return []
-    # start at the min EXISTING id (r4 review #6: scanning from 1 after a
-    # deep expiry did O(expired) exception-driven failed opens per call)
-    snaps = []
-    parts: dict[str, str] = {}
-    for sid in range(ids[0], ids[-1] + 1):
-        try:
-            rec = _read_snap(d, sid)
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot log under {table_path} has a hole at {sid}"
-            )
-        if not snaps:
-            # first retained record must carry full state: a checkpoint or
-            # legacy record (embedded partitions) or snapshot 1 (delta IS
-            # the full map) — expire_snapshots guarantees this
-            if "partitions" in rec:
-                parts = dict(rec["partitions"])
-            elif sid == 1:
-                parts = {}
-                _fold_delta(parts, rec["delta"])  # never dict(): de-own
-                # entries in snapshot 1 must fold away (r6c review)
-            else:
-                raise ValueError(
-                    f"snapshot log under {table_path} starts at "
-                    f"non-checkpoint {sid} after expiry"
-                )
-        elif "delta" in rec:
-            _fold_delta(parts, rec["delta"])
-        else:  # legacy cumulative-only record
-            parts = dict(rec["partitions"])
+    # walk from the min EXISTING id: its record must carry full state (a
+    # checkpoint, or snapshot 1) — expire_snapshots guarantees this
+    recs = _records(table_path, range(ids[0], ids[-1] + 1))
+    sid, rec = next(recs)
+    parts = _start_map(table_path, sid, rec)
+    rec["partitions"] = dict(parts)
+    snaps = [rec]
+    for _sid, rec in recs:
+        _fold_delta(parts, rec["delta"])
         rec["partitions"] = dict(parts)
         snaps.append(rec)
     return snaps
@@ -329,41 +322,18 @@ def retained_partitions(table_path: str) -> set[str]:
     split, at partition granularity. One O(retained-log) driver-side
     pass; maintenance-only (reads stay on latest_snapshot_id +
     partitions_as_of)."""
-    d = _snapshot_dir(table_path)
     ids = _snapshot_ids(table_path)
     if not ids:
         return set()
-    # one raw pass, no per-record cumulative-map copies (r6c review:
-    # snapshots() deep-copies the folded map into EVERY record — O(log ×
-    # partitions) dict churn this union never needed). The union over
+    # one raw pass, no per-record cumulative-map copies: the union over
     # retained snapshots = the first retained record's full key set plus
-    # every CLAIM key in later deltas: a de-own never shrinks it (the
-    # earlier retained snapshot still references the id), an upsert only
-    # adds.
-    seen: set[str] = set()
-    for n, sid in enumerate(range(ids[0], ids[-1] + 1)):
-        try:
-            rec = _read_snap(d, sid)
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot log under {table_path} has a hole at {sid}"
-            )
-        if n == 0:
-            if "partitions" in rec:
-                seen.update(rec["partitions"])
-            elif sid == 1:
-                seen.update(
-                    p for p, r in rec["delta"].items() if r is not None
-                )
-            else:
-                raise ValueError(
-                    f"snapshot log under {table_path} starts at "
-                    f"non-checkpoint {sid} after expiry"
-                )
-        elif "delta" in rec:
-            seen.update(p for p, r in rec["delta"].items() if r is not None)
-        else:  # legacy cumulative-only record
-            seen.update(rec["partitions"])
+    # every CLAIM key in later deltas (a de-own never shrinks it — the
+    # earlier retained snapshot still references the id; an upsert only
+    # adds)
+    recs = _records(table_path, range(ids[0], ids[-1] + 1))
+    seen = set(_start_map(table_path, *next(recs)))
+    for _sid, rec in recs:
+        seen.update(p for p, r in rec["delta"].items() if r is not None)
     return seen
 
 
@@ -381,30 +351,19 @@ def find_run_snapshot(
     nothing. `require_removal=True` additionally demands a de-own entry
     (merge/compaction commits carry them; a plain rewrite does not).
 
-    Legacy cumulative-only records (no `delta`) never match: they
-    predate the claim discipline and cannot prove which partition a
-    run claimed. The expiry boundary contract: only retained history is
-    scanned, so replay idempotence holds exactly as long as retention
-    exceeds the retry horizon — replaying a round whose snapshot has
-    been EXPIRED re-executes it (documented at append_signatures and
-    pinned by test_expiry_window_and_boundary)."""
-    d = _snapshot_dir(table_path)
-    # raw newest-first scan (r6c review: this runs at the START of every
-    # append/merge/GC round, and routing it through snapshots() paid a
-    # deep copy of the cumulative partition map into every record for a
-    # lookup that only reads run_id/operation/delta). run_ids commit at
-    # most once (that is what this gate enforces), so first match wins.
-    for sid in reversed(_snapshot_ids(table_path)):
-        rec = _read_snap(d, sid)
-        if rec["run_id"] != run_id:
+    The expiry boundary contract: only retained history is scanned, so
+    replay idempotence holds exactly as long as retention exceeds the
+    retry horizon — replaying a round whose snapshot has been EXPIRED
+    re-executes it (documented at append_signatures and pinned by
+    test_expiry_window_and_boundary)."""
+    # raw newest-first scan: this runs at the START of every
+    # append/merge/GC round and only reads run_id/operation/delta. run_ids
+    # commit at most once (that is what this gate enforces), so first
+    # match wins.
+    for _sid, rec in _records(table_path, reversed(_snapshot_ids(table_path))):
+        if rec["run_id"] != run_id or rec["operation"] != operation:
             continue
-        if rec.get("operation", "append") != operation:
-            continue
-        if not rec.get("delta"):
-            continue  # legacy cumulative-only record
-        if require_removal and not any(
-            v is None for v in rec["delta"].values()
-        ):
+        if require_removal and None not in rec["delta"].values():
             continue
         return rec
     return None
@@ -488,9 +447,9 @@ def changed_partitions_between(
 ) -> dict[str, str]:
     """Partitions whose ownership changed in (from_snapshot, to_snapshot]
     — the Iceberg incremental-scan analog, {partition_id: new owning
-    run_id}. Folds only the delta files in the interval (plus one
-    checkpoint fold when a legacy cumulative record needs diffing).
-    from_snapshot=0 means 'since the beginning'."""
+    run_id}: the claims of every non-"replace" snapshot in the interval,
+    read from the delta files of that interval only. from_snapshot=0
+    means 'since the beginning'."""
     if to_snapshot < from_snapshot:
         raise ValueError(
             f"to_snapshot {to_snapshot} < from_snapshot {from_snapshot}"
@@ -500,44 +459,19 @@ def changed_partitions_between(
     # (r4 review pass 2, #2)
     if to_snapshot > latest_snapshot_id(table_path):
         raise ValueError(f"no snapshot {to_snapshot} under {table_path}")
-    d = _snapshot_dir(table_path)
     changed: dict[str, str] = {}
-    cur: dict[str, str] | None = None  # running cumulative, for legacy recs
-    for sid in range(from_snapshot + 1, to_snapshot + 1):
-        try:
-            rec = _read_snap(d, sid)
-        except FileNotFoundError:
-            raise ValueError(f"no snapshot {sid} under {table_path}")
-        if "delta" in rec:
-            # "replace" snapshots (compaction) rearrange files but preserve
-            # rows — invisible to data-level incremental consumers (the
-            # Iceberg incremental scan reads appends only). Ownership folds
-            # still include them via partitions_as_of.
-            if rec.get("operation", "append") != "replace":
-                # removals (None) are ownership events, not row changes —
-                # incremental data consumers never see them
-                changed.update(
-                    {p: r for p, r in rec["delta"].items() if r is not None}
-                )
-            if cur is not None:
-                _fold_delta(cur, rec["delta"])
-        else:
-            # legacy cumulative-only record: its claim set is the diff vs
-            # the state BEFORE it — not its full map, which would report
-            # the whole table as changed (r4 review #2)
-            if cur is None:
-                cur = (
-                    partitions_as_of(table_path, from_snapshot)
-                    if from_snapshot >= 1
-                    else {}
-                )
-                # replay this interval's earlier deltas into the base
-                cur.update(changed)
-            claims = {
-                p: r for p, r in rec["partitions"].items() if cur.get(p) != r
-            }
-            changed.update(claims)
-            cur = dict(rec["partitions"])
+    for _sid, rec in _records(
+        table_path, range(from_snapshot + 1, to_snapshot + 1)
+    ):
+        # "replace" snapshots (compaction) rearrange files but preserve
+        # rows — invisible to data-level incremental consumers (the
+        # Iceberg incremental scan reads appends only); removals (None)
+        # are ownership events, not row changes. Ownership folds still
+        # include both via partitions_as_of.
+        if rec["operation"] != "replace":
+            changed.update(
+                {p: r for p, r in rec["delta"].items() if r is not None}
+            )
     return changed
 
 
@@ -634,8 +568,8 @@ def sweep_orphan_partitions(
     if tip == 0:
         # no snapshot log → no ownership map → EVERY partition would
         # classify as an orphan and the sweep would delete the whole
-        # table (r6c review: legacy lineage-committed tables and plain
-        # partitioned parquet reach here via detect_partition_col).
+        # table (plain partitioned parquet with no log reaches here via
+        # detect_partition_col).
         # Loud refusal over guessing, like every maintenance op here.
         raise ValueError(
             f"sweep_orphan_partitions: no snapshot log under "
@@ -741,15 +675,14 @@ def compact_extracted(
 
     `partition_col` defaults to auto-detect from the physical layout:
     "partition_id" for batch-pipeline tables, "batch_id" for
-    stream_extract_committed tables. Streaming (batch_id) tables have TWO
-    extra rules, both enforced: (1) the rewrite must cover EVERY committed
-    batch — the nested `batch_id=N/partition_id=M` layout is flattened to
-    `batch_id=N/` files (partition_id becomes a stored column), and a
-    partial rewrite would leave conflicting directory structures that
-    break parquet partition discovery; (2) compact only a QUIESCED stream:
-    the rewritten batch ids are re-claimed under this `run_id`, so a
-    crashed in-flight batch replayed after compaction fails loudly on the
-    sink's identity guard instead of clobbering rewritten files.
+    stream_extract_committed tables (flat: partition_id is a stored
+    column), "ingest_id" for signature states. This rewrite is
+    single-level, so a table that nests partition dirs under its key
+    (the IVF index's `ingest_id=N/cell=M`) is refused rather than
+    flattened. Compact a streaming table only when QUIESCED: the
+    rewritten batch ids are re-claimed under this `run_id`, so a crashed
+    in-flight batch replayed after compaction fails loudly on the sink's
+    identity guard instead of clobbering rewritten files.
     """
     if partition_col is None:
         partition_col = detect_partition_col(path)
@@ -758,13 +691,12 @@ def compact_extracted(
         if partition_col == "ingest_id"
         else ("doc_id",)
     )
-    owned = owned_partitions(path)
     if partition_ids is None:
-        if not owned:
+        partition_ids = owned_partitions(path)
+        if not partition_ids:
             raise ValueError(
                 f"no committed partitions under {path}: nothing to compact"
             )
-        partition_ids = owned
     pids = [int(p) for p in partition_ids]
     if partition_col != "partition_id":
         # nested second-level partitioning under the primary key:
@@ -778,11 +710,10 @@ def compact_extracted(
             and os.path.isdir(os.path.join(path, name, inner))
         }
         # the IVF index nests ingest_id=N/cell=M where `cell` is a LIVE
-        # pruning dimension (probes prune cell dirs at listing time);
-        # this single-level rewrite would flatten it and silently destroy
-        # probe pruning — refuse (r6; an index-aware rewrite would
-        # partition by both levels)
-        if inner_keys - {"partition_id"}:
+        # pruning dimension (probes prune cell dirs at listing time); this
+        # single-level rewrite would flatten it and silently destroy probe
+        # pruning — refuse any nested layout
+        if inner_keys:
             raise ValueError(
                 f"table {path} nests {sorted(inner_keys)} under "
                 f"{partition_col}=; compact_extracted would flatten that "
@@ -790,21 +721,6 @@ def compact_extracted(
                 "(the IVF index table keeps cell= as a live probe-pruning "
                 "dimension; use operators.ivf_index.compact_ivf_index / "
                 "job.py --compact-index, which preserves it)"
-            )
-        # legacy nested layout (batch_id=N/partition_id=M, pre-r5 sink):
-        # compaction FLATTENS, so a partial rewrite would mix directory
-        # depths under one root and break partition discovery — require
-        # the full migration. Current flat tables can compact any subset.
-        nested = "partition_id" in inner_keys
-        missing = set(owned) - set(pids)
-        if nested and missing:
-            raise ValueError(
-                f"streaming table {path} has the legacy nested layout "
-                f"({partition_col}=N/partition_id=M); compaction must "
-                "rewrite ALL committed batches in one migration "
-                f"(missing: {sorted(missing)}) — a partial "
-                "rewrite would mix flat and nested layouts under the same "
-                "root and break partition discovery"
             )
 
     files_before = count_parquet_files(path, partition_col, pids)
@@ -839,8 +755,7 @@ def table_report(path: str) -> dict:
             pdir = os.path.join(path, name)
             if not os.path.isdir(pdir):
                 continue
-            # recursive walk: streaming tables nest batch_id=N/partition_id=M,
-            # and exactly those are the most prone to small-file buildup
+            # recursive walk: the IVF index nests ingest_id=N/cell=M
             n_files, n_bytes = 0, 0
             for root, _dirs, files in os.walk(pdir):
                 for f in files:

@@ -711,10 +711,11 @@ def gc_signature_state(
     if tio.find_run_snapshot(state_path, run_id, operation="delete"):
         if os.path.isdir(repair_dir):
             return spark.read.parquet(repair_dir)
-        # legacy GC (pre-persistence): fully applied, repair unknown
+        # committed delete whose repair dir is gone (removed, or a run
+        # that never persisted one): fully applied, repair unknown
         raise ValueError(
             f"GC run '{run_id}' already committed to {state_path} "
-            "but its repair pairs were not persisted (pre-r6b run) — "
+            "but its repair pairs were not persisted (no _gc repair dir) — "
             "they cannot be recomputed from the post-GC state"
         )
     tomb = tombstones.toDF("id")

@@ -39,23 +39,13 @@ from .skew import (
 MAX_BROADCAST_QUERIES = 20_000
 
 
-def _broadcast_if_small(
-    queries: DataFrame,
-    expanded: DataFrame,
-    max_rows: int,
-    assume_small: bool = False,
-) -> DataFrame:
+def _broadcast_if_small(queries: DataFrame, expanded: DataFrame) -> DataFrame:
     """Hint `expanded` (the per-bucket/probe-expanded query frame) for
-    broadcast only when the INPUT query count is provably ≤ max_rows.
-    The probe is one bounded `skew.rows_at_most` job on the raw query
-    frame — O(max_rows) regardless of the true size.
-
-    `assume_small=True` skips the probe entirely (zero jobs at query
-    construction — r3 verdict #9: the probe ran eagerly on every top-k
-    call, which a hot serving path should not pay): the CALLER asserts the
-    ≤ max_rows contract, and a violated assertion surfaces as a broadcast
-    build-side OOM rather than a plan fallback."""
-    if assume_small or rows_at_most(queries, max_rows):
+    broadcast only when the INPUT query count is provably
+    ≤ MAX_BROADCAST_QUERIES. The probe is one bounded `skew.rows_at_most`
+    job on the raw query frame — O(MAX_BROADCAST_QUERIES) regardless of
+    the true size."""
+    if rows_at_most(queries, MAX_BROADCAST_QUERIES):
         return F.broadcast(expanded)
     return expanded
 
@@ -110,8 +100,6 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
-    assume_small_queries: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k per query. The query side is broadcast only when
     provably small (see MAX_BROADCAST_QUERIES)."""
@@ -134,8 +122,7 @@ def brute_force_topk(
         "v_vec", "_vd", "_vn",
     )
     scored = (
-        v.join(_broadcast_if_small(queries, q, max_broadcast_queries,
-                                   assume_small_queries),
+        v.join(_broadcast_if_small(queries, q),
                F.col("neighbor_id") != F.col("query_id"))
         .withColumn("sim", F.floor(
             cosine_precomputed(F.col("_qd"), F.col("_vd"),
@@ -185,8 +172,6 @@ def lsh_topk(
     n_tables: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
-    assume_small_queries: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's SRP bucket, exact
     cosine re-rank inside buckets. Cost per query drops from N to
@@ -239,9 +224,7 @@ def lsh_topk(
     ).select("query_id", "_qd", "_qn", "tb.tbl", "tb.bucket")
 
     scored = (
-        v.join(_broadcast_if_small(queries, q, max_broadcast_queries,
-                                   assume_small_queries),
-               ["tbl", "bucket"])
+        v.join(_broadcast_if_small(queries, q), ["tbl", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("sim", F.round(
             cosine_precomputed(F.col("_qd"), F.col("_vd"),
@@ -328,8 +311,6 @@ def ivf_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
-    assume_small_queries: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k: inverted-file cells from a sampled spherical
     k-means quantizer; queries probe their `n_probe` nearest cells; exact
@@ -360,8 +341,7 @@ def ivf_topk(
         F.explode(q_assign(F.col("q_vec"))).alias("cell"),
     )
     scored = (
-        v.join(_broadcast_if_small(queries, q, max_broadcast_queries,
-                                   assume_small_queries), "cell")
+        v.join(_broadcast_if_small(queries, q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("sim", F.round(
             cosine_precomputed(F.col("_qd"), F.col("_vd"),

@@ -128,7 +128,7 @@ def reconcile_committed(
     # provenance for healing: the LAST append-operation claim per pid
     appenders: dict[int, str] = {}
     for rec in tio.snapshots(output_path):
-        if rec.get("operation", "append") != "append" or not rec.get("delta"):
+        if rec["operation"] != "append":
             continue
         for p, r in rec["delta"].items():
             if r is not None:

@@ -70,13 +70,13 @@ def stream_extract_committed(
       advance; the check reads the log's retained HISTORY via
       io.find_run_snapshot, so a later maintenance re-claim such as
       compaction's "replace" cannot make a legitimate replay look
-      foreign and wedge the stream — r6c review). A batch id owned by a
-      DIFFERENT identity raises: a fresh checkpoint pointed at an
-      existing table must fail loudly, not silently skip or clobber
-      committed batches — and deriving identity from the query id (not
-      the checkpoint PATH, the pre-r6c bug) means a wiped-and-recreated
-      checkpoint at the SAME path also fails loudly instead of silently
-      dropping every batch id that collides with old history.
+      foreign and wedge the stream — r6c review). A batch id owned by
+      any other run id raises: a fresh checkpoint pointed at an existing
+      table must fail loudly, not silently skip or clobber committed
+      batches — and because the identity is the query id, not the
+      checkpoint PATH, a wiped-and-recreated checkpoint at the SAME path
+      also fails loudly instead of silently dropping every batch id that
+      collides with old history.
 
     - EMPTY micro-batches commit nothing (r6c review): claiming a batch
       id whose dynamic overwrite wrote zero files would leave a tip>0
@@ -118,32 +118,18 @@ def stream_extract_committed(
     def commit_batch(df: DataFrame, batch_id: int) -> None:
         b = int(batch_id)
         run_id = f"stream-{stream_identity()}-batch-{b}"
-        # legacy identity (pre-r6 upgrade path — ADVICE r6 #4): batches
-        # committed before the query-id identity switch carry a run_id
-        # derived from the checkpoint PATH hash; a crash-window replay
-        # after upgrading must recognize those as its own, not raise the
-        # foreign-owner error against a healthy stream.
-        legacy_run_id = (
-            "stream-"
-            + hashlib.sha256(
-                os.path.abspath(checkpoint_dir).encode()
-            ).hexdigest()[:12]
-            + f"-batch-{b}"
-        )
         if df.isEmpty():
             return  # never claim a batch id with zero files under it
         # replay check against retained HISTORY, not the tip owner: a
         # maintenance re-claim (compaction "replace") must not make a
         # legitimate crash-window replay look foreign (r6c review)
-        if tio.find_run_snapshot(output_dir, run_id) or tio.find_run_snapshot(
-            output_dir, legacy_run_id
-        ):
+        if tio.find_run_snapshot(output_dir, run_id):
             return  # replayed batch, already durable in data AND log
         tip = tio.latest_snapshot_id(output_dir)
         owner = (
             tio.partitions_as_of(output_dir, tip).get(str(b)) if tip else None
         )
-        if owner in (run_id, legacy_run_id):
+        if owner == run_id:
             return  # ours (history pruned past the snapshot): a replay
         if owner is not None:
             raise RuntimeError(
@@ -153,10 +139,9 @@ def stream_extract_committed(
                 "fresh table"
             )
         # crash-after-data-write, before-commit replay: the first attempt's
-        # files exist but no snapshot owns them; a legacy NESTED first
-        # attempt (batch_id=b/partition_id=m) or foreign debris would
-        # survive a flat overwrite, so the uncommitted batch dir is
-        # cleared before the rewrite (io.write_new_partition)
+        # files exist but no snapshot owns them; debris the flat overwrite
+        # would not reach is cleared with the uncommitted batch dir
+        # (io.write_new_partition)
         tio.write_new_partition(
             with_partition_id(df, n_buckets).withColumn("batch_id", F.lit(b)),
             output_dir, b, "batch_id",

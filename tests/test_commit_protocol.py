@@ -66,3 +66,37 @@ def test_partition_ids_follow_the_tip(tmpdir_path):
                         remove_partition_ids=[0, 1])
     assert tio.owned_partitions(t) == [2]
     assert tio.next_partition_id(t) == 3
+
+
+def test_log_records_have_one_format(tmpdir_path):
+    """Every record `snapshot_commit` writes carries exactly the six
+    keys the log readers rely on; `partitions` rides along only on
+    checkpoint ids. Append, replace, delete and de-owning commits, and a
+    commit landing on a checkpoint id, are all covered."""
+    import json
+
+    from ocr_toolkit_spark import io as tio
+
+    t = os.path.join(tmpdir_path, "t")
+    keys = {"snapshot_id", "parent_id", "run_id", "committed_ms", "delta",
+            "operation"}
+    tio.snapshot_commit(t, "a0", [0, 1])
+    tio.snapshot_commit(t, "a1", [2])
+    tio.snapshot_commit(t, "m", [3], operation="replace",
+                        remove_partition_ids=[0, 1])
+    tio.snapshot_commit(t, "gc", [2], operation="delete")
+    while tio.latest_snapshot_id(t) < tio.CHECKPOINT_EVERY + 1:
+        tio.snapshot_commit(t, "fill", [4])
+    ops = set()
+    d = os.path.join(t, "_snapshots")
+    for sid in range(1, tio.latest_snapshot_id(t) + 1):
+        with open(os.path.join(d, f"snap-{sid:08d}.json")) as f:
+            rec = json.load(f)
+        ops.add(rec["operation"])
+        if sid % tio.CHECKPOINT_EVERY == 0:
+            assert set(rec) == keys | {"partitions"}, sid
+            assert rec["partitions"] == tio.partitions_as_of(t, sid)
+        else:
+            assert set(rec) == keys, sid
+    assert ops == {"append", "replace", "delete"}
+    assert tio.snapshots(t)[2]["delta"] == {"3": "m", "0": None, "1": None}

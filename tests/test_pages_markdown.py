@@ -75,9 +75,8 @@ class TestPageSelection:
 
 
 class TestMarkdownRender:
-    def test_matches_oracle_render(self, spark):
+    def test_matches_oracle_render(self, spark, tmpdir_path):
         import os
-        import tempfile
 
         import pyarrow.parquet as pq
 
@@ -85,7 +84,7 @@ class TestMarkdownRender:
         from ocr_toolkit_spark.pipeline import render_markdown_col
 
         docs = generate_documents(120, 42)
-        d = tempfile.mkdtemp()
+        d = tmpdir_path
         pq.write_table(to_arrow(docs), os.path.join(d, "docs.parquet"))
         out = extract_spans(
             spark.read.parquet(os.path.join(d, "docs.parquet"))

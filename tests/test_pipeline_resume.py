@@ -272,8 +272,9 @@ def test_crash_between_snapshot_and_lineage_commit(spark, tmpdir_path):
 def test_snapshot_log_checkpoint_fold_and_commit_cost(tmpdir_path):
     """Delta-log scaling (r3 verdict #4): state reconstruction folds from
     the nearest checkpoint (≤ CHECKPOINT_EVERY + 1 file reads however long
-    the log), non-checkpoint commits read ZERO snapshot files, and every
-    as-of view equals the prefix fold across checkpoint boundaries."""
+    the log), non-checkpoint commits read ZERO snapshot files, every
+    as-of view equals the prefix fold across checkpoint boundaries, and a
+    record without a delta is refused rather than folded."""
     from ocr_toolkit_spark import io as tio
 
     table = os.path.join(tmpdir_path, "ckptlog")
@@ -317,38 +318,25 @@ def test_snapshot_log_checkpoint_fold_and_commit_cost(tmpdir_path):
     finally:
         tio._read_snap = real
 
-    # legacy cumulative-format records (pre-r4) still fold correctly
-    legacy = os.path.join(tmpdir_path, "legacylog")
-    d = os.path.join(legacy, "_snapshots")
-    os.makedirs(d)
+    # one on-disk format: a record without `delta` is refused by every
+    # log reader, never folded as some other layout
+    odd = os.path.join(tmpdir_path, "oddlog")
+    tio.snapshot_commit(odd, "r1", [3])
     import json as _json
 
-    with open(os.path.join(d, "snap-00000001.json"), "w") as f:
-        _json.dump({"snapshot_id": 1, "parent_id": None, "run_id": "old",
-                    "committed_ms": 0, "partitions": {"3": "old"}}, f)
-    tio.snapshot_commit(legacy, "new", [4])
-    assert tio.partitions_as_of(legacy, 2) == {"3": "old", "4": "new"}
-    assert tio.snapshots(legacy)[-1]["partitions"] == {"3": "old", "4": "new"}
-    # a legacy record's incremental claim set is the DIFF vs prior state,
-    # not its full cumulative map (r4 review #2); here a second legacy
-    # record re-asserts "3": "old" and adds "5"
-    with open(os.path.join(d, "snap-00000003.json"), "w") as f:
-        _json.dump({"snapshot_id": 3, "parent_id": 2, "run_id": "old2",
-                    "committed_ms": 0,
-                    "partitions": {"3": "old", "4": "new", "5": "old2"}}, f)
-    assert tio.changed_partitions_between(legacy, 2, 3) == {"5": "old2"}
-    assert tio.changed_partitions_between(legacy, 0, 3) == {
-        "3": "old", "4": "new", "5": "old2"}
+    with open(os.path.join(odd, "_snapshots", "snap-00000002.json"),
+              "w") as f:
+        _json.dump({"snapshot_id": 2, "parent_id": 1, "run_id": "r2",
+                    "committed_ms": 0, "operation": "append",
+                    "partitions": {"3": "r1", "4": "r2"}}, f)
+    import pytest
 
-    # a legacy base with an EMPTY partitions map folds to {}, not KeyError
-    # (r4 review #4)
-    empty = os.path.join(tmpdir_path, "emptylegacy")
-    d2 = os.path.join(empty, "_snapshots")
-    os.makedirs(d2)
-    with open(os.path.join(d2, "snap-00000001.json"), "w") as f:
-        _json.dump({"snapshot_id": 1, "parent_id": None, "run_id": "old",
-                    "committed_ms": 0, "partitions": {}}, f)
-    assert tio.partitions_as_of(empty, 1) == {}
+    for read, args in ((tio.partitions_as_of, (2,)), (tio.snapshots, ()),
+                       (tio.retained_partitions, ()),
+                       (tio.changed_partitions_between, (1, 2)),
+                       (tio.find_run_snapshot, ("r1",))):
+        with pytest.raises(ValueError, match="not a record this engine"):
+            read(odd, *args)
 
 
 def test_incremental_read_and_snapshot_expiry(spark, tmpdir_path):

@@ -66,70 +66,29 @@ def test_similarity_queries_broadcast(spark):
     assert_broadcast_join(out)
 
 
-def test_large_query_set_not_broadcast(spark):
+def test_large_query_set_not_broadcast(spark, monkeypatch):
     """r2 review #4: the query-side broadcast must be gated on a provable
     size bound — a query set above the ceiling gets NO broadcast hint (AQE
     picks the join), instead of a forced broadcast that would OOM the
     driver at 10M queries."""
+    from ocr_toolkit_spark.operators import similarity
     from ocr_toolkit_spark.operators.similarity import (
         brute_force_topk,
         ivf_topk,
         lsh_topk,
     )
 
+    monkeypatch.setattr(similarity, "MAX_BROADCAST_QUERIES", 2)
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     dim = len(e.select("embedding").first()[0])
     big_q = e.filter("vec_id < 8")  # 8 queries > ceiling of 2 → no hint
     for out in (
-        brute_force_topk(e, big_q, k=2, max_broadcast_queries=2),
-        lsh_topk(e, big_q, dim=dim, k=2, max_broadcast_queries=2),
-        ivf_topk(e, big_q, dim=dim, k=2, n_centroids=4,
-                 max_broadcast_queries=2),
+        brute_force_topk(e, big_q, k=2),
+        lsh_topk(e, big_q, dim=dim, k=2),
+        ivf_topk(e, big_q, dim=dim, k=2, n_centroids=4),
     ):
         analyzed = out._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed
-
-
-def test_assume_small_queries_skips_probe_and_broadcasts(spark):
-    """r3 verdict #9: assume_small_queries=True must (a) run ZERO jobs at
-    query construction — the size probe is the caller's asserted contract —
-    and (b) still carry the broadcast hint even above the gate ceiling."""
-    import pyspark.sql.dataframe as pdf
-
-    from ocr_toolkit_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_topk,
-    )
-
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dim = len(e.select("embedding").first()[0])
-    big_q = e.filter("vec_id < 8")  # 8 queries > ceiling of 2
-
-    real_count = pdf.DataFrame.count
-
-    def boom(self):
-        raise AssertionError("size probe ran despite assume_small_queries")
-
-    pdf.DataFrame.count = boom
-    try:
-        outs = [
-            brute_force_topk(e, big_q, k=2, max_broadcast_queries=2,
-                             assume_small_queries=True),
-            lsh_topk(e, big_q, dim=dim, k=2, max_broadcast_queries=2,
-                     assume_small_queries=True),
-            ivf_topk(e, big_q, dim=dim, k=2, n_centroids=4,
-                     max_broadcast_queries=2, assume_small_queries=True),
-        ]
-    finally:
-        pdf.DataFrame.count = real_count
-    for out in outs:
-        analyzed = out._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" in analyzed
-    # and the asserted contract still computes the same rows
-    gated = brute_force_topk(e, big_q, k=2)
-    assert sorted(map(tuple, outs[0].collect())) == \
-        sorted(map(tuple, gated.collect()))
 
 
 def test_lsh_bucket_frames_materialized(spark):

@@ -434,7 +434,7 @@ def test_gc_replay_returns_persisted_repair(spark, tmpdir_path):
     assert _pairset(again) == first_set
     assert tio.latest_snapshot_id(state) == tip
 
-    # a pre-persistence (legacy) committed GC cannot be replayed: loud
+    # a committed GC whose _gc repair dir is gone cannot be replayed: loud
     shutil.rmtree(os.path.join(state, "_gc"))
     with pytest.raises(ValueError, match="repair pairs were not persisted"):
         gc_signature_state(spark, empty_tomb, live, state, "gc-1")

@@ -112,8 +112,8 @@ def test_streaming_table_compact_and_report(spark, tmpdir_path):
     out = os.path.join(tmpdir_path, "out")
     ckpt = os.path.join(tmpdir_path, "ckpt")
 
-    # crash-before-commit simulation: batch 0's first attempt left legacy
-    # nested files the flat retry would never overwrite — the sink must
+    # crash-before-commit simulation: batch 0's first attempt left debris
+    # in a sub-dir the flat retry would never overwrite — the sink must
     # rmtree the uncommitted batch dir first
     stale = os.path.join(out, "batch_id=0", "partition_id=999")
     os.makedirs(stale)
@@ -177,54 +177,6 @@ def test_streaming_table_compact_and_report(spark, tmpdir_path):
                                      partition_col="batch_id")
     assert inc.count() == 5
     assert inc.filter("doc_id like 'post-%'").count() == 5
-
-
-def test_legacy_nested_streaming_table_compaction_migrates(spark, tmpdir_path):
-    """Tables written by the pre-r5 nested sink (batch_id=N/partition_id=M):
-    compaction refuses a partial rewrite (mixed depths would break
-    partition discovery) and a full rewrite migrates to the flat layout
-    with identical rows."""
-    import pytest
-
-    from ocr_toolkit_spark import io as tio
-    from ocr_toolkit_spark.pipeline import with_partition_id
-    from ocr_toolkit_spark.operators.extract import extract_spans
-    from ocr_toolkit_spark.fixtures import generate_documents as gen
-
-    out = os.path.join(tmpdir_path, "legacy")
-    for b, seed in ((0, 1), (1, 2)):
-        docs = gen(30, seed)
-        df = spark.createDataFrame(
-            [(f"b{b}-{did}", spans) for did, spans in docs],
-            "doc_id string, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>")
-        from pyspark.sql import functions as F
-        ext = with_partition_id(extract_spans(df), 4).withColumn(
-            "batch_id", F.lit(b))
-        (ext.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "partition_id").parquet(out))
-        tio.snapshot_commit(out, f"legacy-{b}", [b])
-
-    # nested layout present → partial rewrite refuses
-    with pytest.raises(ValueError, match="ALL committed batches"):
-        tio.compact_extracted(spark, out, run_id="c-bad", partition_ids=[0])
-
-    before = sorted(
-        (r["doc_id"], r["batch_id"], r["partition_id"])
-        for r in spark.read.parquet(out)
-        .select("doc_id", "batch_id", "partition_id").collect())
-    res = tio.compact_extracted(spark, out, run_id="c-mig")
-    assert res["files_after"] == 2
-    after = sorted(
-        (r["doc_id"], r["batch_id"], r["partition_id"])
-        for r in spark.read.parquet(out)
-        .select("doc_id", "batch_id", "partition_id").collect())
-    assert after == before
-    for name in os.listdir(out):
-        if name.startswith("batch_id="):
-            inner = os.listdir(os.path.join(out, name))
-            assert not any(i.startswith("partition_id=") for i in inner)
 
 
 def test_committed_sink_r6c_guards(spark, tmpdir_path):
