@@ -842,13 +842,13 @@ def q_extract_counts(spark, sf_dir):
     )
 
 
-def _caps_summary(bucketed, key_cols):
+def _caps_summary(bucketed):
     """One-row capped-bucket totals (buckets_capped, pairs_avoided) of a
-    bucket frame, so starred coverage is visible in the output, never silent
-    (skew.oversized_bucket_stats)."""
+    (band, band_hash) bucket frame, so starred coverage is visible in the
+    output, never silent (skew.oversized_bucket_stats)."""
     from ocr_toolkit_spark.operators.skew import oversized_bucket_stats
 
-    return oversized_bucket_stats(bucketed, key_cols).agg(
+    return oversized_bucket_stats(bucketed, ["band", "band_hash"]).agg(
         F.count("*").alias("buckets_capped"),
         F.coalesce(F.sum("pairs_avoided"), F.lit(0)).alias("pairs_avoided"),
     )
@@ -862,9 +862,8 @@ def q_minhash_dedup(spark, sf_dir):
     from ocr_toolkit_spark.operators.dedup import (
         jaccard_verify,
         minhash_banded_frame,
-        minhash_pairs_from_banded,
     )
-    from ocr_toolkit_spark.operators.skew import spread
+    from ocr_toolkit_spark.operators.skew import delta_candidate_pairs, spread
 
     # spread (r7): shingle build + 32 per-seed hash minima run map-side
     # before the per-doc aggregation — one task on a single-row-group
@@ -872,7 +871,7 @@ def q_minhash_dedup(spark, sf_dir):
     # candidate set and verified pairs are unchanged.
     d = spread(_docs(spark, sf_dir))
     banded = minhash_banded_frame(d, "doc_id", "text", k=5, n_hashes=32, bands=8)
-    cand = minhash_pairs_from_banded(banded)
+    cand = delta_candidate_pairs(banded)
     verified = jaccard_verify(cand, d, "doc_id", "text", k=5, threshold=0.5)
     return verified.agg(
         F.count("*").alias("near_dup_pairs"),
@@ -880,7 +879,7 @@ def q_minhash_dedup(spark, sf_dir):
         F.round(F.coalesce(F.min("jaccard"), F.lit(1.0)), 4).alias("min_jaccard"),
         F.lit(0.5).alias("jaccard_threshold"),
         (F.coalesce(F.min("jaccard"), F.lit(1.0)) >= 0.5).alias("meets_threshold"),
-    ).crossJoin(_caps_summary(banded, ["band", "band_hash"]))
+    ).crossJoin(_caps_summary(banded))
 
 
 def q_delta_dedup(spark, sf_dir):
@@ -955,7 +954,7 @@ def q_simhash_dedup(spark, sf_dir):
         F.coalesce(F.max("hamming"), F.lit(0)).alias("max_hamming_observed"),
         F.lit(3).alias("hamming_cutoff"),
         (F.coalesce(F.max("hamming"), F.lit(0)) <= 3).alias("within_cutoff"),
-    ).crossJoin(_caps_summary(pieces, ["chunk", "val"]))
+    ).crossJoin(_caps_summary(pieces))
 
 
 def _ann_recall_report(ann, bf, k, floor):
@@ -1077,7 +1076,7 @@ def q_embedding_near_dups(spark, sf_dir):
             (F.coalesce(F.min("sim"), F.lit(1.0)) >= 0.9).alias(
                 "meets_threshold"),
         )
-        .crossJoin(_caps_summary(v, ["bucket"]))
+        .crossJoin(_caps_summary(v))
         .crossJoin(slice_counts)
     )
 
@@ -1145,7 +1144,7 @@ def q_delta_embedding_dedup(spark, sf_dir):
     ip = inc_pairs.select("id_a", "id_b").distinct()
     fp = full.select("id_a", "id_b").distinct()
     pair_sym = ip.exceptAll(fp).unionAll(fp.exceptAll(ip))
-    caps = _caps_summary(bucketed, ["bucket"]).select("buckets_capped")
+    caps = _caps_summary(bucketed).select("buckets_capped")
     return (
         base.agg(F.count("*").alias("base_vecs"))
         .crossJoin(delta.agg(F.count("*").alias("delta_vecs")))

@@ -129,14 +129,16 @@ def _snapshot_dir(table_path: str) -> str:
 
 
 def _read_snap(d: str, snapshot_id: int) -> dict:
-    """One log record. A record without `delta` was not written by
-    `snapshot_commit`: it is refused, never folded as some other layout."""
+    """One log record. A record without `delta` or `operation` was not
+    written by `snapshot_commit`: it is refused, never folded as some other
+    layout."""
     with open(os.path.join(d, f"snap-{snapshot_id:08d}.json")) as f:
         rec = json.load(f)
-    if "delta" not in rec:
+    missing = [k for k in ("delta", "operation") if k not in rec]
+    if missing:
         raise ValueError(
-            f"snapshot {snapshot_id} in {d} has no delta: not a record "
-            "this engine writes"
+            f"snapshot {snapshot_id} in {d} has no {'/'.join(missing)}: "
+            "not a record this engine writes"
         )
     return rec
 

@@ -11,7 +11,11 @@ All scale paths are shuffle-aware DataFrame compositions:
 - SimHash: 64-bit signature via a vectorized Arrow-batched pandas UDF
   (NumPy bit ops — the per-bit aggregate is not efficiently expressible in
   column algebra); near-dups = identical signatures or Hamming ≤ r by
-  bucketed join on signature chunks.
+  bucketed join on signature chunks (band = chunk index, band_hash =
+  chunk value).
+- Both bucket frames go through the one candidate generator,
+  skew.delta_candidate_pairs over an empty state; verification joins its
+  payload (shingles, signatures) back by id.
 - n-gram Jaccard verification for candidate pairs via array_intersect /
   array_union sizes (JVM-side).
 """
@@ -29,15 +33,14 @@ from pyspark.sql.functions import pandas_udf
 from .skew import (
     DEFAULT_MAX_BUCKET,
     broadcast_build_fits,
+    delta_candidate_pairs,
     materialize,
     spread,
-    star_capped_pairs,
 )
 
-# conservative per-row estimates for the broadcast-build decision (r7):
-# banded minhash row = (id, band, band_hash) longs; simhash pieces row =
-# (id, sig, chunk, val) longs — padded generously for JVM row overhead.
-BANDED_ROW_BYTES = 64
+# conservative per-row estimate for the SimHash verify's broadcast
+# decision (r7): pieces row = (id, sig, band, band_hash) longs, padded
+# generously for JVM row overhead.
 PIECES_ROW_BYTES = 72
 
 
@@ -223,22 +226,6 @@ def minhash_banded_frame(
     return materialize(banded)
 
 
-def minhash_pairs_from_banded(
-    banded: DataFrame, max_bucket: int = DEFAULT_MAX_BUCKET
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b) from a prebuilt, materialized banded
-    frame (minhash_banded_frame) — the MinHash twin of
-    simhash_pairs_from_pieces. The self-join build side is broadcast when
-    the band frame provably fits the budget (r7, skew.broadcast_build_fits):
-    the materialized frame has no stats, so without the hint the planner
-    picks a sort-merge join whose tiny shuffle AQE coalesces to ~1 task."""
-    bcast = broadcast_build_fits(banded, BANDED_ROW_BYTES)
-    return star_capped_pairs(
-        banded, ["band", "band_hash"], "id", max_bucket=max_bucket,
-        broadcast_build=bcast,
-    ).distinct()
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -254,7 +241,7 @@ def minhash_lsh_candidates(
     instead of all-paired (see operators/skew.py). The banded frame is
     materialized, so the signature pipeline runs once (r3 review #8)."""
     banded = minhash_banded_frame(df, id_col, text_col, k, n_hashes, bands)
-    return minhash_pairs_from_banded(banded, max_bucket)
+    return delta_candidate_pairs(banded, None, max_bucket)
 
 
 def jaccard_verify(
@@ -361,9 +348,10 @@ def simhash_pieces_frame(
     text_col: str = "text",
     chunks: int = 4,
 ) -> DataFrame:
-    """(id, sig, chunk, val) — the pigeonhole bucket frame, one row per
-    (doc, signature chunk). Materialized: its lineage holds the vectorized
-    SimHash UDF, and both the candidate self-join and the
+    """(id, sig, band, band_hash) — the pigeonhole bucket frame, one row
+    per (doc, signature chunk): band = chunk index, band_hash = chunk
+    value. Materialized: its lineage holds the vectorized SimHash UDF, and
+    the candidate self-join, the verify's signature lookup and the
     oversized_bucket_stats report re-reference it."""
     sig = df.select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sig")
@@ -389,7 +377,7 @@ def simhash_pieces_frame(
                     for i in range(chunks)
                 ]
             )
-        ).alias("chunk", "val"),
+        ).alias("band", "band_hash"),
     )
     return materialize(pieces)
 
@@ -401,15 +389,17 @@ def simhash_pairs_from_pieces(
 ) -> DataFrame:
     """Hamming-verified near-dup pairs from a prebuilt, materialized pieces
     frame (simhash_pieces_frame) — exact bit_count(xor) on candidates only.
-    The self-join build side is broadcast when the pieces frame provably
-    fits the budget (skew.broadcast_build_fits)."""
-    bcast = broadcast_build_fits(pieces, PIECES_ROW_BYTES)
-    cand = star_capped_pairs(
-        pieces, ["chunk", "val"], "id", payload_cols=("sig",),
-        max_bucket=max_bucket, broadcast_build=bcast,
-    ).distinct()
+    Each pair's signatures come from the pieces frame's chunk-0 rows, one
+    per doc; that side is broadcast when the pieces frame provably fits
+    the budget (skew.broadcast_build_fits)."""
+    cand = delta_candidate_pairs(pieces, None, max_bucket)
+    sig = pieces.filter(F.col("band") == 0).select("id", "sig")
+    if broadcast_build_fits(pieces, PIECES_ROW_BYTES):
+        sig = F.broadcast(sig)
     return (
-        cand.withColumn(
+        cand.join(sig.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a")
+        .join(sig.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
+        .withColumn(
             "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         )
         .filter(F.col("hamming") <= max_hamming)

@@ -11,9 +11,10 @@ machinery as the extraction output — io.py); each ingest round:
    only state rows in TOUCHED buckets flow further (the state side is
    scanned narrow — three columns — but never shuffled: the new side's
    distinct bucket keys are broadcast);
-3. emits candidate pairs new×(old ∪ new) within each touched bucket,
-   with the same oversized-bucket star guard as the batch path
-   (operators/skew.py), then Jaccard-verifies ONLY those candidates
+3. emits candidate pairs new×(old ∪ new) within each touched bucket
+   through the one candidate generator, skew.delta_candidate_pairs — the
+   batch paths are the same call over an empty state, so batch and delta
+   share its star guard — then Jaccard-verifies ONLY those candidates
    (jaccard_verify semi-joins the corpus to candidate ids, so text is
    read for candidate docs only);
 4. appends the new banded rows as the next ingest partition + snapshot.
@@ -58,7 +59,8 @@ from pyspark.sql import functions as F
 
 from .. import io as tio
 from .dedup import jaccard_verify, minhash_banded_frame
-from .skew import DEFAULT_MAX_BUCKET, broadcast_build_fits, materialize, spread
+from .similarity import _norm, cosine_pairs, make_srp_bucketer
+from .skew import DEFAULT_MAX_BUCKET, delta_candidate_pairs, materialize, spread
 
 META_FILE = "_dedup_meta.json"
 
@@ -162,84 +164,6 @@ def append_signatures(banded: DataFrame, state_path: str, run_id: str) -> int:
     )
     tio.snapshot_commit(state_path, run_id, [nxt])
     return nxt
-
-
-def delta_candidate_pairs(
-    new_banded: DataFrame,
-    state_banded: DataFrame | None,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Candidate pairs touching at least one NEW doc: new×(old ∪ new)
-    within each bucket, star-capped like the batch path.
-
-    Shuffle shape: the state table is reduced to touched buckets by a
-    broadcast left-semi join on the new side's distinct bucket keys (the
-    delta is small by definition), so the per-round join cost is
-    O(touched-bucket rows × new rows per bucket), never O(state²) and
-    never a state-table shuffle. With an empty state this degenerates to
-    exactly star_capped_pairs over the new frame (round 0 == batch run).
-
-    `new_banded` is read three times, so callers hand over a materialized
-    frame (see skew.materialize) — the rounds build it materialized and
-    append_signatures reuses the same rows. The union of touched state
-    rows and new rows is materialized here (its checkpoint job carries
-    the broadcast semi-join), and so is the tiny oversized-bucket frame."""
-    new_t = new_banded.select(
-        "id", "band", "band_hash", F.lit(True).alias("_new")
-    )
-    if state_banded is None:
-        allb = new_t
-    else:
-        new_buckets = new_banded.select("band", "band_hash").distinct()
-        # replay safety (ADVICE r5 #2): on a re-run of an already-committed
-        # round the state already holds the new docs' bands; keep exactly
-        # one copy of each (id, band, band_hash) — the _new=true one — or
-        # the doubled rows inflate bucket-size stats and can spuriously
-        # trip the star guard, changing the replayed round's pair set.
-        # Broadcast anti-join on the delta's ids: small by definition,
-        # never shuffles the state.
-        new_ids = new_banded.select("id").distinct()
-        touched_old = state_banded.join(
-            F.broadcast(new_buckets), ["band", "band_hash"], "left_semi"
-        ).join(F.broadcast(new_ids), ["id"], "left_anti")
-        allb = touched_old.select(
-            "id", "band", "band_hash", F.lit(False).alias("_new")
-        ).unionByName(new_t)
-    allb = materialize(allb)
-
-    stats = allb.groupBy("band", "band_hash").agg(
-        F.count("*").alias("_n"),
-        F.min("id").alias("_rep"),
-        F.min(F.when(~F.col("_new"), F.col("id"))).alias("_old_rep"),
-    )
-    # tiny; referenced three times below
-    big = materialize(stats.filter(F.col("_n") > max_bucket))
-
-    big_keys = big.select("band", "band_hash")
-    small_all = allb.join(big_keys, ["band", "band_hash"], "left_anti")
-    small_new = small_all.filter("_new")
-    pairs_small = (
-        small_new.alias("n")
-        .join(small_all.alias("t"), ["band", "band_hash"])
-        .filter(F.col("t.id") != F.col("n.id"))
-        .select(
-            F.least(F.col("n.id"), F.col("t.id")).alias("id_a"),
-            F.greatest(F.col("n.id"), F.col("t.id")).alias("id_b"),
-        )
-    )
-    # oversized: each NEW member links to the bucket's min-id rep; when the
-    # rep itself is new (backfill with smaller ids), bridge it to the old
-    # rep so prior rounds' star/clique stays in the same component
-    big_members = allb.join(big, ["band", "band_hash"]).filter(
-        F.col("_new") & (F.col("id") != F.col("_rep"))
-    )
-    pairs_star = big_members.select(
-        F.col("_rep").alias("id_a"), F.col("id").alias("id_b")
-    )
-    bridges = big.filter(
-        F.col("_old_rep").isNotNull() & (F.col("_old_rep") != F.col("_rep"))
-    ).select(F.col("_rep").alias("id_a"), F.col("_old_rep").alias("id_b"))
-    return pairs_small.unionByName(pairs_star).unionByName(bridges).distinct()
 
 
 def _empty_pairs(banded: DataFrame, score_col: str) -> DataFrame:
@@ -383,8 +307,6 @@ def srp_banded_frame(
     like similarity.embedding_near_dups; >1 unions independently-seeded
     tables for recall (each is one more Arrow-batched matmul pass over
     the DELTA only — old vectors are never re-bucketed)."""
-    from .similarity import make_srp_bucketer
-
     parts = [
         vectors.select(
             F.col(id_col).alias("id"),
@@ -411,15 +333,15 @@ def cosine_verify(
 ) -> DataFrame:
     """Exact-cosine verification of candidate pairs — the embedding
     jaccard_verify: the vector table is semi-joined down to candidate ids
-    first (only candidate embeddings are ever read), then one JVM-side
-    cosine per pair. Returns (id_a, id_b, sim) with sim ≥ threshold.
+    first (only candidate embeddings are ever read), then
+    similarity.cosine_pairs scores each pair, as the batch
+    embedding_near_dups does. Returns (id_a, id_b, sim) with
+    sim ≥ threshold.
 
     The pair joins are INNER: a candidate id missing from `vectors` drops
     its pairs. That is the contract for REPLAY rounds, which verify
     against their own round's corpus and return a subset
     (test_embedding_delta_union_equals_full)."""
-    from .similarity import _norm, cosine_precomputed
-
     candidates = materialize(candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias("cid"))
@@ -427,13 +349,8 @@ def cosine_verify(
         .distinct()
     )
     # spread (r7): the semi-join output inherits the vector scan's
-    # partitioning (one task for a single-row-group local file), and the
-    # per-vector norm is hoisted out of the per-pair cosine — the verify
-    # stage pays ONE dot traversal per pair instead of three.
-    # cosine_precomputed is bit-identical to cosine (similarity.py), so the
-    # verified pair set and sims are unchanged. The decision reads the
-    # vector table's partition count; only the semi-join output is
-    # repartitioned (skew.spread `source`).
+    # partitioning (one task for a single-row-group local file); the
+    # decision reads the vector table's partition count (skew.spread).
     v = spread(
         vectors.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
@@ -442,31 +359,7 @@ def cosine_verify(
     )
     v = materialize(
         v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>"))))
-    # broadcast the (candidate-touched) vector side when provably small
-    # (r7, skew.broadcast_build_fits — a bounded early-stop probe):
-    # checkpointed frames have no stats, so without the hint both pair
-    # joins are sort-merge joins whose tiny shuffles AQE coalesces to ~1
-    # task — serializing the per-pair dot.
-    hint = (F.broadcast if broadcast_build_fits(v, dim * 4 + 96)
-            else lambda df: df)
-    return (
-        candidates.join(
-            hint(v.select(F.col("id").alias("id_a"), F.col("vec").alias("_va"),
-                          F.col("_nrm").alias("_na"))),
-            "id_a",
-        )
-        .join(
-            hint(v.select(F.col("id").alias("id_b"), F.col("vec").alias("_vb"),
-                          F.col("_nrm").alias("_nb"))),
-            "id_b",
-        )
-        .withColumn("sim", cosine_precomputed(
-            F.col("_va").cast("array<double>"),
-            F.col("_vb").cast("array<double>"),
-            F.col("_na"), F.col("_nb")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
+    return cosine_pairs(candidates, v, threshold, dim)
 
 
 def incremental_embedding_round(

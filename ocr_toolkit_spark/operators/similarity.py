@@ -10,6 +10,8 @@
   batch); candidates come from equi-joins on bucket id (optionally with
   multi-probe neighbor buckets), then exact cosine re-ranking on the
   candidate set only.
+- Embedding near-dups: SRP buckets `(id, band=0, band_hash)` through
+  skew.delta_candidate_pairs, then `cosine_pairs` verifies by id.
 """
 
 from __future__ import annotations
@@ -25,10 +27,10 @@ from pyspark.sql.functions import pandas_udf
 from .skew import (
     DEFAULT_MAX_BUCKET,
     broadcast_build_fits,
+    delta_candidate_pairs,
     materialize,
     rows_at_most,
     spread,
-    star_capped_pairs,
 )
 
 # Input-query-count ceiling for the forced broadcast of the query side.
@@ -91,6 +93,36 @@ def with_vec_norm(df: DataFrame, vec_col: str, d_col: str, n_col: str) -> DataFr
     `cosine_precomputed` needs), computed ONCE per row."""
     return df.withColumn(d_col, F.col(vec_col).cast("array<double>")).withColumn(
         n_col, _norm(F.col(d_col))
+    )
+
+
+def cosine_pairs(
+    candidates: DataFrame, v: DataFrame, threshold: float, dim: int
+) -> DataFrame:
+    """Exact-cosine verification of candidate pairs (id_a, id_b) against a
+    MATERIALIZED (id, vec, _nrm) frame: one JVM-side dot per pair, norms
+    hoisted per vector. Returns (id_a, id_b, sim) with sim ≥ threshold.
+
+    `v` is broadcast when provably small (r7, skew.broadcast_build_fits —
+    the checkpoint's exact row count × float vec + id/_nrm + row overhead):
+    without the hint, a checkpoint whose estimated size is over the
+    planner's threshold gets sort-merge pair joins whose tiny shuffles AQE
+    coalesces to ~1 task — serializing the per-pair dot."""
+    w = v.select("id", "vec", "_nrm")
+    if broadcast_build_fits(v, dim * 4 + 96):
+        w = F.broadcast(w)
+    return (
+        candidates
+        .join(w.withColumnsRenamed({"id": "id_a", "vec": "_va", "_nrm": "_na"}),
+              "id_a")
+        .join(w.withColumnsRenamed({"id": "id_b", "vec": "_vb", "_nrm": "_nb"}),
+              "id_b")
+        .withColumn("sim", cosine_precomputed(
+            F.col("_va").cast("array<double>"),
+            F.col("_vb").cast("array<double>"),
+            F.col("_na"), F.col("_nb")))
+        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", "sim")
     )
 
 
@@ -374,8 +406,8 @@ def embedding_near_dups(
     instead of all-paired (operators/skew.py).
 
     `return_bucketed=True` returns `(pairs, bucketed)` where `bucketed`
-    is the MATERIALIZED (id, vec, bucket) frame the pairs were built
-    from — a caller that also needs bucket-level reporting
+    is the MATERIALIZED (id, vec, band, band_hash, _nrm) frame the pairs
+    were built from — a caller that also needs bucket-level reporting
     (oversized_bucket_stats in the driver entry) reuses it instead of
     re-bucketing (r6b review: the entry had grown an inline copy of
     this operator's whole body just to share that frame, and the two
@@ -386,29 +418,15 @@ def embedding_near_dups(
     # ONE task — r7, skew.spread). `_nrm` hoists the norm per VECTOR: the
     # per-pair verify then pays one dot traversal instead of three
     # (dot + both norms) — `cosine_precomputed` is bit-identical to
-    # `cosine`, so the pair set and sims are unchanged.
+    # `cosine`, so the pair set and sims are unchanged. band 0 = one table.
     v = spread(vectors).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        bucketer(F.col(vec_col)).alias("bucket"),
+        F.lit(0).alias("band"),
+        bucketer(F.col(vec_col)).alias("band_hash"),
     )
     v = v.withColumn("_nrm", _norm(F.col("vec").cast("array<double>")))
     v = materialize(v)  # compute SRP signatures ONCE for all uses
-    # Broadcast the self-join build side when the materialized frame is
-    # provably small: the checkpoint erased size stats, so without the hint
-    # the planner picks a sort-merge join whose small shuffle AQE coalesces
-    # to ~1 task — serializing every per-pair cosine. Above the budget, keep
-    # the shuffle join: the honest 100-TB shape. Row estimate: float vec +
-    # id/bucket/_nrm + row overhead.
-    bcast = broadcast_build_fits(v, dim * 4 + 96)
-    pairs = (
-        star_capped_pairs(v, ["bucket"], "id", payload_cols=("vec", "_nrm"),
-                          max_bucket=max_bucket, broadcast_build=bcast)
-        .withColumn("sim", cosine_precomputed(
-            F.col("vec_a").cast("array<double>"),
-            F.col("vec_b").cast("array<double>"),
-            F.col("_nrm_a"), F.col("_nrm_b")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
+    cand = delta_candidate_pairs(v, None, max_bucket)
+    pairs = cosine_pairs(cand, v, threshold, dim)
     return (pairs, v) if return_bucketed else pairs

@@ -3,28 +3,34 @@ this module, three questions.
 
 - **Materialize?** `materialize(df)` computes a multiply-referenced frame
   once and stores its rows (`localCheckpoint(eager=True)`); no other module
-  checkpoints.
+  checkpoints. The checkpoint job also counts the rows.
 - **Spread?** `spread(df, source=None)` repartitions a map-heavy frame to
   the session's default parallelism when its source scans as at most
   half that many partitions.
 - **Broadcast?** `broadcast_build_fits(df, est_row_bytes)` gates the
-  build-side hint of the LSH bucket self-joins; it and the top-k query
-  gate both decide from `rows_at_most(df, n)`, a bounded
-  `limit(n + 1).count() <= n` probe.
+  build-side hint of the LSH verify joins from a materialized frame's
+  exact row count, which its checkpoint job already filled; the top-k
+  query gate decides from `rows_at_most(df, n)`, a bounded
+  `limit(n + 1).count() <= n` probe of a frame never materialized.
 
-It also owns the degenerate-bucket guard for LSH-family candidate
-self-joins. Every bucketed near-dup scheme here (MinHash bands, SimHash
-chunks, SRP embedding buckets) generates candidates with a self-equi-join
-on bucket keys. That is the right 100-TB shape — EXCEPT when one bucket is
-degenerate: a boilerplate band shared by m documents yields m² pairs inside
-a single join key.  At web scale m can be millions, so one hot key melts
-the stage while every other task finishes in seconds (classic skew: AQE can
-split the partition, but not the m² row explosion itself).
+It also owns the one LSH-family candidate generator and its
+degenerate-bucket guard. Every bucketed near-dup scheme here (MinHash
+bands, SimHash chunks, SRP embedding buckets) writes the same bucket frame
+`(id, band, band_hash)` and generates candidates with a self-equi-join on
+`(band, band_hash)`. That is the right 100-TB shape — EXCEPT when one
+bucket is degenerate: a boilerplate band shared by m documents yields m²
+pairs inside a single join key.  At web scale m can be millions, so one
+hot key melts the stage while every other task finishes in seconds
+(classic skew: AQE can split the partition, but not the m² row explosion
+itself).
 
-`star_capped_pairs` bounds this without losing the dedup semantics:
+`delta_candidate_pairs(new, state, max_bucket)` bounds this without losing
+the dedup semantics. A batch run is a round over an empty state
+(`state=None`); an incremental round adds the state rows of the buckets
+its new rows touch.
 
 - buckets with ≤ `max_bucket` members: ordinary all-pairs (id_a < id_b).
-- oversized buckets: every member pairs with the bucket's min-id
+- oversized buckets: every new member pairs with the bucket's min-id
   REPRESENTATIVE only — O(m) pairs instead of O(m²).  For duplicate
   clustering this preserves the connected component (members stay linked
   through the rep), and all pairs are still verified downstream (Jaccard /
@@ -33,29 +39,26 @@ split the partition, but not the m² row explosion itself).
   threshold — acceptable for degenerate buckets, which are overwhelmingly
   boilerplate clones of one text.
 
-No driver-side counting: bucket sizes come from one hash aggregation on the
-same keys as the join (map-side partial agg), so the guard adds no new
-shuffle key.  Use `oversized_bucket_stats` to report what was starred —
-"no silent caps".
+No driver-side counting: bucket size and rep are window columns over the
+join key, computed by the generator's one checkpoint (a degenerate
+bucket's m rows in one task — O(m) rows, never O(m²) pairs).  Use
+`oversized_bucket_stats` to report what was starred — "no silent caps".
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 DEFAULT_MAX_BUCKET = 256
 
-# Build-side byte budget for the LSH-family bucket self-joins (r7, guide
-# §3.1): materialized frames carry NO size statistics, so the planner can
-# never pick the broadcast join itself; when a bounded probe of the
-# materialized frame proves the build side fits well under executor
-# memory, the operator hints it explicitly (star_capped_pairs
-# broadcast_build) and the pair-generate+verify stage runs shuffle-free at
-# the probe side's parallelism. Above the budget the shuffle self-join
-# stays — the honest 100-TB shape.
+# Build-side byte budget for the LSH-family verify joins (r7, guide §3.1):
+# a materialized frame's size statistics are the planner's estimate of the
+# plan it replaced, not a bound; when the checkpoint's exact row count
+# proves the payload frame fits well under executor memory, the verify
+# hints it explicitly and the per-pair scoring runs shuffle-free at the
+# candidate side's parallelism. Above the budget the shuffle join stays —
+# the honest 100-TB shape.
 BROADCAST_BUILD_MAX_BYTES = 128 * 1024 * 1024
 
 
@@ -70,12 +73,11 @@ def rows_at_most(df: DataFrame, n: int) -> bool:
 
 
 def broadcast_build_fits(materialized_df: DataFrame, est_row_bytes: int) -> bool:
-    """True when a MATERIALIZED frame provably fits the broadcast-build
-    budget (`rows_at_most` the budget's row count). Only call on
-    materialized frames: the probe then scans stored rows, not a recompute
-    of the signature pipeline."""
+    """True when a frame returned by `materialize` fits the broadcast-build
+    budget: its exact row count, counted by the checkpoint job, is at most
+    the budget's row count. No job runs here."""
     cap = BROADCAST_BUILD_MAX_BYTES // max(1, est_row_bytes)
-    return rows_at_most(materialized_df, cap)
+    return materialized_df._rows <= cap
 
 
 def spread(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
@@ -118,8 +120,8 @@ def materialize(df: DataFrame) -> DataFrame:
     """Cut the plan: compute `df` once and reuse the rows for every
     downstream reference.
 
-    `star_capped_pairs` references its input four ways (bucket-size agg,
-    anti-join, self-join a/b, members join); left unmaterialized, Catalyst
+    `delta_candidate_pairs` references its bucket frame several ways
+    (self-join n/t, star and bridge filters); left unmaterialized, Catalyst
     re-executes the whole upstream subtree per reference — r2 review: the
     MinHash signature aggregation ran ~6× inside minhash_dedup with zero
     ReusedExchange. `localCheckpoint(eager=True)` runs the subtree exactly
@@ -132,74 +134,88 @@ def materialize(df: DataFrame) -> DataFrame:
     ~bands× the doc count) a from-scratch retry costs the same as one
     lineage recompute, so the trade is right; for frames where it is not,
     swap this for persist(StorageLevel.DISK_ONLY) or a reliable
-    checkpoint dir — the call sites do not change."""
-    return df.localCheckpoint(eager=True)
+    checkpoint dir — the call sites do not change.
+
+    The returned frame carries its row count as `_rows`: an `Observation`
+    on the checkpointed plan is filled by the checkpoint job itself, so
+    `broadcast_build_fits` reads an exact count without a probe job."""
+    rows = Observation()
+    out = df.observe(rows, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True)
+    out._rows = rows.get["rows"]
+    return out
 
 
-def star_capped_pairs(
-    df: DataFrame,
-    key_cols: list[str],
-    id_col: str = "id",
-    payload_cols: tuple[str, ...] = (),
+def delta_candidate_pairs(
+    new_banded: DataFrame,
+    state_banded: DataFrame | None = None,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    broadcast_build: bool = False,
 ) -> DataFrame:
-    """Candidate pairs (id_a < id_b) from a bucket self-join with the
-    oversized-bucket star guard.  Payload columns are carried through as
-    `<name>_a` / `<name>_b` (e.g. signatures for Hamming verification).
+    """Candidate pairs (id_a < id_b) touching at least one NEW row:
+    new×(old ∪ new) within each `(band, band_hash)` bucket, star-capped.
+    With `state_banded=None` every row is new, so this is the batch
+    candidate set of `new_banded` (round 0 == batch run).
 
-    This function fans `df` out four ways, so callers hand it a
-    materialized frame (see `materialize`) — every LSH-family bucket frame
-    carries the expensive signature pipeline in its lineage.
+    Shuffle shape: the state table is reduced to touched buckets by a
+    broadcast left-semi join on the new side's distinct bucket keys (the
+    delta is small by definition), so the per-round join cost is
+    O(touched-bucket rows × new rows per bucket), never O(state²) and
+    never a state-table shuffle.
 
-    `broadcast_build=True` (r7, guide §3.1): hint the b-side of the
-    self-join for broadcast. A materialized input has NO size statistics,
-    so the planner treats it as huge and picks a sort-merge join whose
-    tiny shuffle AQE then coalesces down to a handful of tasks —
-    serializing the per-pair verify work that runs inside the join stage.
-    With the build side broadcast, pair generation AND verification run at
-    the probe side's parallelism with no exchange at all. Operators enable
-    it only when `broadcast_build_fits` proved the frame small; the
-    default stays the shuffle join — the honest 100-TB shape."""
-    # One aggregation finds the oversized buckets; its output is TINY
-    # (≤ rows/max_bucket keys), so both the anti-join (drop big-bucket rows
-    # from the all-pairs side) and the star join run as broadcast joins under
-    # AQE — the only full-table shuffle left is the self-join itself.
-    big = (
-        df.groupBy(*key_cols)
-        .agg(
-            F.count("*").alias("_bucket_n"),
-            # min over (id, payload...) structs == min-id row, payload intact
-            F.min(F.struct(id_col, *payload_cols)).alias("_rep"),
+    `new_banded` may carry extra columns (SimHash's `sig`); only
+    `(id, band, band_hash)` is read. It is read up to three times, so
+    callers hand over a materialized frame (see `materialize`). The union
+    of touched state rows and new rows, with its bucket size `_n`, min-id
+    rep `_rep` and min old id `_old_rep`, is the one checkpoint taken
+    here; its job carries the broadcast semi-join."""
+    cols = ["id", "band", "band_hash"]
+    allb = new_banded.select(*cols, F.lit(True).alias("_new"))
+    if state_banded is not None:
+        # replay safety (ADVICE r5 #2): on a re-run of an already-committed
+        # round the state already holds the new docs' bands; keep exactly
+        # one copy of each (id, band, band_hash) — the _new=true one — or
+        # the doubled rows inflate bucket-size stats and can spuriously
+        # trip the star guard, changing the replayed round's pair set.
+        # Broadcast anti-join on the delta's ids: small by definition,
+        # never shuffles the state.
+        touched_old = state_banded.join(
+            F.broadcast(new_banded.select("band", "band_hash").distinct()),
+            ["band", "band_hash"], "left_semi",
+        ).join(F.broadcast(new_banded.select("id").distinct()), ["id"],
+               "left_anti")
+        allb = touched_old.select(
+            *cols, F.lit(False).alias("_new")
+        ).unionByName(allb)
+    bucket = Window.partitionBy("band", "band_hash")
+    allb = materialize(allb.select(
+        "*",
+        F.count("*").over(bucket).alias("_n"),
+        F.min("id").over(bucket).alias("_rep"),
+        F.min(F.when(~F.col("_new"), F.col("id"))).over(bucket)
+        .alias("_old_rep"),
+    ))
+
+    small = allb.filter(F.col("_n") <= max_bucket)
+    n, t = small.filter("_new").alias("n"), small.alias("t")
+    pairs_small = (
+        n.join(t, ["band", "band_hash"])
+        # new×old once per old row, new×new once per unordered pair
+        .filter(~F.col("t._new") | (F.col("n.id") < F.col("t.id")))
+        .select(
+            F.least(F.col("n.id"), F.col("t.id")).alias("id_a"),
+            F.greatest(F.col("n.id"), F.col("t.id")).alias("id_b"),
         )
-        .filter(F.col("_bucket_n") > max_bucket)
     )
-
-    small = df.join(big.select(*key_cols), key_cols, "left_anti")
-    a, b = small.alias("a"), small.alias("b")
-    cond = reduce(
-        lambda x, y: x & y,
-        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols],
-    ) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    if broadcast_build:
-        b = F.broadcast(b)
-    pairs_small = a.join(b, cond).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        *[F.col(f"a.{p}").alias(f"{p}_a") for p in payload_cols],
-        *[F.col(f"b.{p}").alias(f"{p}_b") for p in payload_cols],
-    )
-
-    members = df.join(big.select(*key_cols, "_rep"), key_cols).filter(
-        F.col(id_col) != F.col(f"_rep.{id_col}")
-    )
-    pairs_big = members.select(
-        F.col(f"_rep.{id_col}").alias("id_a"),  # rep = min id → id_a < id_b
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_rep.{p}").alias(f"{p}_a") for p in payload_cols],
-        *[F.col(p).alias(f"{p}_b") for p in payload_cols],
-    )
-    return pairs_small.unionByName(pairs_big)
+    # oversized: each NEW member links to the bucket's min-id rep; when the
+    # rep itself is new (backfill with smaller ids), bridge it to the old
+    # rep so prior rounds' star/clique stays in the same component
+    big = allb.filter(F.col("_n") > max_bucket)
+    pairs_star = big.filter(
+        F.col("_new") & (F.col("id") != F.col("_rep"))
+    ).select(F.col("_rep").alias("id_a"), F.col("id").alias("id_b"))
+    bridges = big.filter(F.col("_old_rep") != F.col("_rep")).select(
+        F.col("_rep").alias("id_a"), F.col("_old_rep").alias("id_b"))
+    return pairs_small.unionByName(pairs_star).unionByName(bridges).distinct()
 
 
 def oversized_bucket_stats(

@@ -13,13 +13,13 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # measured on local[8] (the test session's master)
 JOBS_AT_SF001 = {
-    "minhash_dedup": 25,
-    "simhash_dedup": 16,
+    "minhash_dedup": 21,
+    "simhash_dedup": 13,
     "embedding_near_dups": 21,
-    "delta_dedup": 139,
-    "delta_embedding_dedup": 87,
+    "delta_dedup": 109,
+    "delta_embedding_dedup": 74,
     "ivf_index_delta": 53,
-    "near_dup_components": 32,
+    "near_dup_components": 22,
 }
 
 

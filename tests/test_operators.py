@@ -117,11 +117,11 @@ class TestConnectedComponents:
     def test_star_guard_output_is_a_star(self, spark):
         """skew.py invariant the hash-min fast-converge claim rests on: an
         oversized bucket emits ONLY rep↔member pairs (diameter 2)."""
-        from ocr_toolkit_spark.operators.skew import star_capped_pairs
+        from ocr_toolkit_spark.operators.skew import delta_candidate_pairs
 
-        rows = [(1, i) for i in range(100)]  # one bucket, 100 members
-        df = spark.createDataFrame(rows, "bucket int, id int")
-        pairs = star_capped_pairs(df, ["bucket"], "id", max_bucket=10)
+        rows = [(0, 1, i) for i in range(100)]  # one bucket, 100 members
+        df = spark.createDataFrame(rows, "band int, band_hash long, id int")
+        pairs = delta_candidate_pairs(df, None, max_bucket=10)
         got = [(r.id_a, r.id_b) for r in pairs.collect()]
         assert sorted(got) == [(0, i) for i in range(1, 100)]
 
@@ -550,7 +550,8 @@ class TestR3ReviewFixes:
         with open(_os.path.join(d, "snap-00000002.json"), "w") as f:
             _json.dump({"snapshot_id": 2, "parent_id": 1,
                         "run_id": "race-winner", "committed_ms": 0,
-                        "delta": {"7": "race-winner"}}, f)
+                        "delta": {"7": "race-winner"},
+                        "operation": "append"}, f)
         real = tio.latest_snapshot_id
         stale_once = []
 

@@ -338,6 +338,19 @@ def test_snapshot_log_checkpoint_fold_and_commit_cost(tmpdir_path):
         with pytest.raises(ValueError, match="not a record this engine"):
             read(odd, *args)
 
+    # a record with `delta` but no `operation` is refused the same way by
+    # the readers that branch on `operation`
+    noop = os.path.join(tmpdir_path, "noop_log")
+    tio.snapshot_commit(noop, "r1", [3])
+    with open(os.path.join(noop, "_snapshots", "snap-00000002.json"),
+              "w") as f:
+        _json.dump({"snapshot_id": 2, "parent_id": 1, "run_id": "r2",
+                    "committed_ms": 0, "delta": {"4": "r2"}}, f)
+    for read, args in ((tio.changed_partitions_between, (1, 2)),
+                       (tio.find_run_snapshot, ("r1",))):
+        with pytest.raises(ValueError, match="no operation: not a record"):
+            read(noop, *args)
+
 
 def test_incremental_read_and_snapshot_expiry(spark, tmpdir_path):
     """Iceberg-parity additions (r4): read_extracted_changes returns

@@ -92,7 +92,7 @@ def test_large_query_set_not_broadcast(spark, monkeypatch):
 
 
 def test_lsh_bucket_frames_materialized(spark):
-    """r2 review #1: star_capped_pairs fans its input out four ways, so the
+    """r2 review #1: delta_candidate_pairs fans its input out, so the
     expensive signature pipeline (shingle explode + 32-seed hash agg for
     MinHash; the Arrow-batched simhash UDF) must execute ONCE, upstream of
     an eager localCheckpoint — not per reference. Downstream, every

@@ -99,8 +99,9 @@ def main() -> int:
     sections.append((
         "MinHash LSH dedup",
         "explode→hash-agg signatures (map-side partial agg), band-bucket "
-        "self-join guarded by star_capped_pairs (oversized buckets link to "
-        "a representative — no O(m²) hot key); no O(n²) pair scan.",
+        "self-join guarded by skew.delta_candidate_pairs over an empty "
+        "state (oversized buckets link to a representative — no O(m²) hot "
+        "key); no O(n²) pair scan.",
         formatted_plan(em.q_minhash_dedup(spark, sf_dir)),
     ))
 
@@ -163,9 +164,9 @@ def main() -> int:
         "the state table is scanned (3 narrow columns) but never "
         "shuffled, so per-ingest cost tracks the delta; candidates come "
         "from the per-bucket join with the star guard. Executed plans, in "
-        "order: the checkpoint of the touched-state ∪ new-rows frame "
-        "(where the semi-join runs), the oversized-bucket checkpoint, and "
-        "the candidate pairs.",
+        "order: the one checkpoint of the touched-state ∪ new-rows frame "
+        "with its bucket size and reps as window columns (where the "
+        "semi-join runs), and the candidate pairs.",
         cand_plans,
     ))
 
@@ -240,7 +241,7 @@ def main() -> int:
            "`advisoryPartitionSizeInBytes=32KB` (production keeps Spark "
            "defaults: factor 5, 256 MB, 64 MB). AQE handles the "
            "partition-size half of skew; the m² row-explosion half inside "
-           "one bucket key is what `operators/skew.star_capped_pairs` "
+           "one bucket key is what `operators/skew.delta_candidate_pairs` "
            "bounds — the two guards compose, they do not substitute.\n"]
     for title, note, plan in sections:
         out.append(f"\n## {title}\n\n{note}\n\n```\n{plan}```\n")
