@@ -77,7 +77,7 @@ def broadcast_build_fits(materialized_df: DataFrame, est_row_bytes: int) -> bool
     budget: its exact row count, counted by the checkpoint job, is at most
     the budget's row count. No job runs here."""
     cap = BROADCAST_BUILD_MAX_BYTES // max(1, est_row_bytes)
-    return materialized_df._rows <= cap
+    return materialized_df._rows.get["rows"] <= cap
 
 
 def spread(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
@@ -136,13 +136,15 @@ def materialize(df: DataFrame) -> DataFrame:
     swap this for persist(StorageLevel.DISK_ONLY) or a reliable
     checkpoint dir — the call sites do not change.
 
-    The returned frame carries its row count as `_rows`: an `Observation`
-    on the checkpointed plan is filled by the checkpoint job itself, so
-    `broadcast_build_fits` reads an exact count without a probe job."""
+    The returned frame carries its row count as `_rows`, an `Observation`
+    on the checkpointed plan that the checkpoint job itself fills, so
+    `broadcast_build_fits` reads an exact count without a probe job. It is
+    read only there: the count reaches the driver through the listener
+    bus, and a caller that never needs it should not wait for it."""
     rows = Observation()
     out = df.observe(rows, F.count(F.lit(1)).alias("rows")).localCheckpoint(
         eager=True)
-    out._rows = rows.get["rows"]
+    out._rows = rows
     return out
 
 

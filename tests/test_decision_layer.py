@@ -65,8 +65,8 @@ def test_materialize_counts_rows_and_the_broadcast_gate_runs_no_job(spark):
         BROADCAST_BUILD_MAX_BYTES, broadcast_build_fits, materialize)
 
     m = materialize(spark.range(0, 70, 1, 3))
-    assert m._rows == 70
-    assert materialize(spark.range(0))._rows == 0
+    assert m._rows.get["rows"] == 70
+    assert materialize(spark.range(0))._rows.get["rows"] == 0
     sc = spark.sparkContext
     group = "test-broadcast-gate"
     sc.setJobGroup(group, "gate")
