@@ -5,22 +5,29 @@ This sandbox ships no Iceberg runtime jar and has no network, so the seam
 isolates every table operation behind functions whose Parquet implementation
 emulates the needed semantics:
 
-- `write_extracted` uses dynamic partition overwrite (the Parquet analog of
-  Iceberg `overwritePartitions()`): re-running a partition replaces its files
-  instead of duplicating them → idempotent per-partition commits.
-- a commit runs data write → `snapshot_commit` → `append_lineage`. A crash
-  after the data write re-processes the partition on resume (safe under
-  overwrite semantics); a crash between snapshot and lineage leaves a
+- the extraction table is written by the kernel's own Python workers:
+  each task streams its rows into parquet files under a dot-prefixed
+  staging directory (`staging_dir`, `write_parquet_file`) and reports them
+  in a manifest; the driver then publishes exactly the listed files
+  (`publish_partition_files`), clearing each listed `partition_id=N`
+  directory first — the Parquet analog of Iceberg `overwritePartitions()`:
+  re-running a partition replaces its files instead of duplicating them →
+  idempotent per-partition commits. `write_extracted` is the same layout
+  written by Spark's dynamic partition overwrite.
+- a commit runs data publish → `snapshot_commit` → `append_lineage`. A
+  crash after the publish re-processes the partition on resume (its
+  directory is replaced); a crash between snapshot and lineage leaves a
   snapshot-owned partition with no lineage row, which
-  `pipeline.reconcile_committed` treats as committed and heals.
+  `pipeline.reconcile_committed` treats as committed and heals. Lineage
+  rows are written from the driver as one parquet file per append.
 
 Every snapshot-committed table (extraction output, streaming sink, dedup
 signature states, IVF index) runs the same commit protocol, and its steps
 live here only: claim a partition id (`next_partition_id`, replay via
 `find_run_snapshot`), write it (`write_new_partition` /
-`overwrite_partitions`), publish (`snapshot_commit`, `publish_exclusive` for
-pinned side files), read committed partitions only (`owned_partitions`,
-`read_extracted_as_of`).
+`overwrite_partitions` / `publish_partition_files`), publish
+(`snapshot_commit`, `publish_exclusive` for pinned side files), read
+committed partitions only (`owned_partitions`, `read_extracted_as_of`).
 
 With an Iceberg catalog configured, swap these for `writeTo(...).overwrite...`
 / `.append()`; nothing else in the engine changes.
@@ -28,15 +35,20 @@ With an Iceberg catalog configured, swap these for `writeTo(...).overwrite...`
 
 from __future__ import annotations
 
+import contextlib
+import datetime
 import json
 import os
 import shutil
 import time
 import uuid
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import DOCUMENTS_SCHEMA, LINEAGE_SCHEMA
 
@@ -86,8 +98,131 @@ def read_extracted(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def append_lineage(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+# --- the extraction table's own writer ---------------------------------------
+#
+# The kernel's Python workers write the extraction table themselves: the
+# batches are Arrow already, so no JVM row conversion and no Spark file
+# commit runs. A task writes into a staging directory inside the table and
+# returns a manifest; the driver publishes the listed files.
+
+# dot-prefixed: Spark's file listing skips it, so readers never see staged
+# files; sweep_orphan_partitions reclaims one a killed driver left behind
+STAGING_PREFIX = ".staging-"
+# Spark's `spark.sql.parquet.compression.codec` names that pyarrow spells
+# differently (pyarrow's "lz4" is the raw LZ4 block format)
+_PYARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
+# parquet-mr's default zstd level; pyarrow's own default (1) wrote ~5 %
+# larger extraction files
+ZSTD_LEVEL = 3
+# a file's batches are buffered up to this many Arrow bytes per row group:
+# one row group per batch would cut the dictionaries and compression short,
+# and the cap bounds a worker's memory whatever the partition's size
+ROW_GROUP_BYTES = 64 << 20
+
+
+@contextlib.contextmanager
+def staging_dir(table_path: str) -> Iterator[str]:
+    """A fresh staging directory inside `table_path`, removed on exit
+    whether the write succeeded or raised."""
+    d = os.path.join(table_path, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    os.makedirs(d)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def write_parquet_file(
+    path: str, batches: Iterable[pa.RecordBatch], codec: str
+) -> None:
+    """Stream `batches` (one schema) into one parquet file at `path`, with
+    Spark's codec name `codec`. Runs inside a Python worker. Column
+    statistics stay on: readers prune row groups with them."""
+    codec = _PYARROW_CODECS.get(codec.lower(), codec.lower())
+    writer, buf, size = None, [], 0
+    try:
+        for b in batches:
+            if writer is None:
+                writer = pq.ParquetWriter(
+                    path, b.schema, compression=codec,
+                    compression_level=ZSTD_LEVEL if codec == "zstd" else None,
+                    store_schema=False,
+                )
+            buf.append(b)
+            size += b.nbytes
+            if size >= ROW_GROUP_BYTES:
+                writer.write_table(pa.Table.from_batches(buf))
+                buf, size = [], 0
+        if buf:
+            writer.write_table(pa.Table.from_batches(buf))
+    finally:
+        if writer is not None:
+            writer.close()
+
+
+def publish_partition_files(
+    table_path: str, staging: str, files: Iterable[tuple[int, str]]
+) -> list[int]:
+    """Move the staged files `(partition_id, name)` into their
+    `partition_id=N` directories; returns the sorted partition ids. Each
+    listed directory is cleared first and then holds exactly its listed
+    files: dynamic partition overwrite, decided by the manifest. A staged
+    file that is not listed (a failed or speculative task attempt's) is
+    never moved. The listed partitions are uncommitted (resume skips
+    committed ones), so the clear only removes a crashed run's files."""
+    by_pid: dict[int, list[str]] = {}
+    for pid, name in files:
+        by_pid.setdefault(int(pid), []).append(name)
+    for pid, names in sorted(by_pid.items()):
+        pdir = os.path.join(table_path, f"partition_id={pid}")
+        shutil.rmtree(pdir, ignore_errors=True)
+        os.makedirs(pdir)
+        for name in names:
+            os.replace(os.path.join(staging, name), os.path.join(pdir, name))
+    return sorted(by_pid)
+
+
+def _replace_via_tmp(path: str, write: Callable[[str], None]) -> None:
+    """Create or replace `path` whole: `write` fills a dot-prefixed tmp
+    name beside it (readers and Spark listings skip it), then `os.replace`
+    puts it in place. A crash leaves at most the tmp file."""
+    d, base = os.path.split(path)
+    tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex}.tmp")
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
+def replace_json(path: str, obj: object) -> None:
+    """Write a JSON side file atomically: readers see the old content or
+    the whole new one, never a truncated file."""
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+
+    _replace_via_tmp(path, write)
+
+
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
+
+def append_lineage(rows: Iterable[tuple], path: str) -> None:
+    """Append lineage rows `(run_id, partition_id, doc_count, span_count,
+    byte_count, failure_count)`, stamped with one `committed_at`, as one
+    parquet file written from the driver (`_replace_via_tmp`)."""
+    now = datetime.datetime.now(datetime.timezone.utc)
+    names = _LINEAGE_ARROW.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, (*r, now))) for r in rows], schema=_LINEAGE_ARROW
+    )
+    os.makedirs(path, exist_ok=True)
+    _replace_via_tmp(
+        os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
+        lambda tmp: pq.write_table(table, tmp),
+    )
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
@@ -543,8 +678,10 @@ def sweep_orphan_partitions(
     been expired. Reads already exclude such partitions
     (read_extracted_as_of, read_signature_state, read_ivf_index all
     filter to committed ids); the sweep reclaims the disk. Also removes
-    a stale Spark `_temporary` staging dir (a write that died mid-job).
-    Returns the removed partition suffixes.
+    stale staging directories of writes that died mid-job (`_is_staging`):
+    Spark's `_temporary` and `.spark-staging-*` (dynamic partition
+    overwrite stages under the latter), and this module's `.staging-*`.
+    Returns the removed partition suffixes and staging directory names.
 
     The reclaim boundary is `retained_partitions` — the UNION over all
     retained snapshots — not the tip's ownership map (r6b review: using
@@ -599,7 +736,7 @@ def sweep_orphan_partitions(
     swept = []
     for name in sorted(os.listdir(table_path)):
         full = os.path.join(table_path, name)
-        if name == "_temporary" and os.path.isdir(full):
+        if _is_staging(name) and os.path.isdir(full):
             if newest_mtime(full) < cutoff:
                 shutil.rmtree(full, ignore_errors=True)
                 swept.append(name)
@@ -614,6 +751,13 @@ def sweep_orphan_partitions(
         shutil.rmtree(full, ignore_errors=True)
         swept.append(suffix)
     return swept
+
+
+def _is_staging(name: str) -> bool:
+    """A writer's staging directory name: Spark's `_temporary` and
+    `.spark-staging-<job>`, or this module's `staging_dir`."""
+    return name == "_temporary" or name.startswith(
+        (".spark-staging-", STAGING_PREFIX))
 
 
 def detect_partition_col(path: str) -> str:
@@ -747,11 +891,16 @@ def compact_extracted(
 
 def table_report(path: str) -> dict:
     """Driver-side maintenance report: per-partition file count + bytes,
-    totals, and snapshot-log depth — what an operator checks before
-    deciding to compact or expire. Pure filesystem walk, no Spark job."""
+    totals, snapshot-log depth and leftover staging directories — what an
+    operator checks before deciding to compact, expire or sweep. Pure
+    filesystem walk, no Spark job."""
     parts = {}
+    staging = []
     if os.path.isdir(path):
         for name in sorted(os.listdir(path)):
+            if _is_staging(name):
+                staging.append(name)
+                continue
             if "=" not in name:
                 continue
             pdir = os.path.join(path, name)
@@ -791,6 +940,8 @@ def table_report(path: str) -> dict:
         "snapshots": tip,
         "orphan_partitions": orphans,
         "historical_partitions": historical,
+        # a live write's own, or a dead one's that the sweep reclaims
+        "staging_dirs": staging,
         "by_partition": parts,
     }
 

@@ -31,6 +31,8 @@ characters except U+001C..U+001F — documented in docs/SPANS.md §2.1.
 
 from __future__ import annotations
 
+import itertools
+import os
 import time
 from collections.abc import Iterator
 from typing import Callable
@@ -40,11 +42,14 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import io as tio
 from ..functions.cells import format_cells
 from ..functions.html import HtmlBudgetExceeded, extract_blocks
-from ..schema import EXTRACTED_SCHEMA
+from ..schema import EXTRACT_MANIFEST_SCHEMA, EXTRACTED_SCHEMA
 
 KNOWN_KINDS = ("text", "heading", "html", "image", "table_row", "page_break", "bytes")
 _MD_HEADER_RE = "^#{1,6} "
@@ -849,6 +854,102 @@ def make_extract_fn(
     return fn
 
 
+def _pages(pages: frozenset[int] | str | None) -> frozenset[int] | None:
+    """A page spec string like "1-5,10" (reference `--pages`,
+    page_selection.py:20-68) as 1-based page numbers; sets pass through."""
+    if isinstance(pages, str):
+        from ..functions.pages import parse_pages
+
+        return parse_pages(pages)
+    return pages
+
+
+_MANIFEST_ARROW = to_arrow_schema(EXTRACT_MANIFEST_SCHEMA)
+
+
+def write_partition_files(
+    df: DataFrame,
+    staging: str,
+    codec: str,
+    with_images: bool,
+    pages: frozenset[int] | str | None,
+    doc_budget_ms: float | None,
+) -> DataFrame:
+    """documents(doc_id, spans, partition_id) → one manifest row
+    (schema.EXTRACT_MANIFEST_SCHEMA) per parquet file written: the kernel
+    and the table write in ONE Python stage, with nothing but the manifest
+    returned to the JVM.
+
+    Each task sorts its rows by partition_id (a spillable JVM sort in the
+    same stage), runs `_process_batch` on each batch and streams each
+    partition's rows into one file under `staging` (io.write_parquet_file,
+    codec `codec`), so one file is open at a time. A file holds
+    EXTRACTED_SCHEMA's columns; its partition_id is the directory
+    io.publish_partition_files moves it into. File names carry the task
+    attempt id, so a retried or speculative attempt never overwrites
+    another attempt's file; only the files of the manifest that reaches
+    the driver get published."""
+    pages = _pages(pages)
+
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ctx = TaskContext.get()
+        prefix = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
+        for pid, runs in itertools.groupby(
+            _partition_runs(batches, with_images, pages, doc_budget_ms),
+            key=lambda run: run[0],
+        ):
+            name = f"{prefix}-{pid}.parquet"
+            counts = [0, 0, 0, 0]
+            tio.write_parquet_file(
+                os.path.join(staging, name),
+                _counted((out for _, out in runs), counts), codec)
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(_MANIFEST_ARROW.names, (pid, name, *counts)))],
+                schema=_MANIFEST_ARROW,
+            )
+
+    return (
+        df.sortWithinPartitions("partition_id")
+        .select("doc_id", "spans", "partition_id")
+        .mapInArrow(write, EXTRACT_MANIFEST_SCHEMA)
+    )
+
+
+def _counted(
+    outs: Iterator[pa.RecordBatch], counts: list[int]
+) -> Iterator[pa.RecordBatch]:
+    """Pass extracted batches through, adding their (docs, spans, chars,
+    failures) into `counts`."""
+    for out in outs:
+        ok = pc.sum(out.column("success")).as_py() or 0
+        counts[0] += out.num_rows
+        counts[1] += pc.sum(out.column("n_spans")).as_py() or 0
+        counts[2] += pc.sum(out.column("n_chars")).as_py() or 0
+        counts[3] += out.num_rows - ok
+        yield out
+
+
+def _partition_runs(
+    batches: Iterator[pa.RecordBatch],
+    with_images: bool,
+    pages: frozenset[int] | None,
+    doc_budget_ms: float | None,
+) -> Iterator[tuple[int, pa.RecordBatch]]:
+    """(partition_id, extracted rows) for each run of one partition_id in
+    each batch of a partition_id-sorted input: `_process_batch` returns one
+    row per input doc in input order, so its output slices like its
+    input."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        out = _process_batch(batch, with_images, pages,
+                             doc_budget_ms=doc_budget_ms)
+        pids = batch.column("partition_id").to_numpy()
+        cuts = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
+        for a, b in zip(cuts, cuts[1:]):
+            yield int(pids[a]), out.slice(a, b - a)
+
+
 def extract_spans(
     df: DataFrame,
     with_images: bool = True,
@@ -883,10 +984,7 @@ def extract_spans(
     mid-parse and abort at ~budget; the per-span bytes-decode loop checks
     between spans (see _process_batch). None disables the check
     (default: containment without a budget)."""
-    if isinstance(pages, str):
-        from ..functions.pages import parse_pages
-
-        pages = parse_pages(pages)
+    pages = _pages(pages)
     from ..schema import EXTRACTED_STATS_SCHEMA
     from pyspark.sql import types as T
 

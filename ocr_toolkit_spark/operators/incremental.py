@@ -700,11 +700,8 @@ def gc_signature_state(
         )
         # atomic publish (r7, ADVICE r6): a crash mid-write must leave the
         # pids file ABSENT (resume recomputes), never truncated (resume
-        # would die in json.load forever) — write-to-tmp + os.replace.
-        tmp_pids = pids_file + ".tmp"
-        with open(tmp_pids, "w") as f:
-            json.dump(pids, f)
-        os.replace(tmp_pids, pids_file)
+        # would die in json.load forever).
+        tio.replace_json(pids_file, pids)
         _apply_gc_rewrite(spark, state, tomb, state_path, pids)
         tio.snapshot_commit(state_path, run_id, pids, operation="delete")
     return repair

@@ -17,39 +17,31 @@ mechanics the reference lacks (SURVEY.md §2.5 E5 — no checkpointing there):
    `spark.sql.shuffle.partitions` small ones, while a large run keeps the
    initial count. The coalesced tasks are balanced by bytes, so the salted
    giants still spread. `run_extraction(parallelism=N)` pins the count.
-4. **Extract**: ONE Arrow-batched stage (operators/extract.py).
-5. **Commit**: dynamic-partition-overwrite data write with run metrics
-   OBSERVED during the write (`Dataset.observe` — the Iceberg snapshot-
-   summary analog), then lineage append: per-partition rows (presence +
-   exact doc_count, from a doc_id-only pruned input scan) plus one
-   run-summary row (partition_id = -1) carrying doc/span/byte/failure
-   totals. The written output is never re-read — idempotent per partition.
+4. **Extract and write**: ONE Arrow-batched Python stage
+   (operators/extract.write_partition_files): each task sorts its rows by
+   partition_id, runs the kernel and streams each partition's rows into a
+   parquet file under a staging directory inside the table, returning one
+   manifest row per file (partition, file, doc/span/byte/failure counts).
+   No extracted row is converted to a JVM row.
+5. **Commit** (driver-side, no further Spark job): publish exactly the
+   manifest's files into their `partition_id=N` directories, clearing each
+   first (dynamic-overwrite semantics: io.publish_partition_files), then
+   the snapshot, then the lineage append: per-partition rows (presence +
+   exact doc_count) plus one run-summary row (partition_id = -1) carrying
+   doc/span/byte/failure totals, all sums over the manifest. The written
+   output is never re-read — idempotent per partition.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import io as tio
-from .operators.extract import extract_spans
-
-# lineage row minus the commit timestamp (added via current_timestamp at
-# append time). span/byte/failure are NULL on per-partition rows and exact
-# on the run-summary row (partition_id = -1).
-LINEAGE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("span_count", T.LongType(), True),
-        T.StructField("byte_count", T.LongType(), True),
-        T.StructField("failure_count", T.LongType(), True),
-    ]
-)
+from .operators.extract import write_partition_files
 
 DEFAULT_BUCKETS = 64
 # span-count threshold above which a document is considered oversized; the
@@ -65,7 +57,7 @@ class RunStats:
     run_id: str
     partitions_processed: int
     partitions_skipped: int
-    # run-level extraction metrics, observed during the write job itself
+    # run-level extraction metrics, summed over the write's file manifest
     doc_count: int = 0
     span_count: int = 0
     byte_count: int = 0
@@ -164,13 +156,13 @@ def kernel_input(
     parallelism: int | None = None,
 ) -> DataFrame:
     """The extraction kernel's input: salt oversized docs, repartition on
-    (partition_id, salt) and keep (doc_id, spans). Without `parallelism` the
-    exchange has no count, so AQE coalesces it to the data (module docstring,
-    step 3); `parallelism` pins the task count."""
+    (partition_id, salt) and keep (doc_id, spans, partition_id). Without
+    `parallelism` the exchange has no count, so AQE coalesces it to the data
+    (module docstring, step 3); `parallelism` pins the task count."""
     docs = salt_oversized(docs, salt_threshold, salt_k)
     keys = ("partition_id", "salt")
     docs = docs.repartition(parallelism, *keys) if parallelism else docs.repartition(*keys)
-    return docs.select("doc_id", "spans")
+    return docs.select("doc_id", "spans", "partition_id")
 
 
 def run_extraction(
@@ -188,9 +180,10 @@ def run_extraction(
     doc_budget_ms: float | None = None,
 ) -> RunStats:
     """Extract the uncommitted partitions of `input_path` into `output_path`
-    and commit them (module docstring, steps 1-5). `parallelism` pins the
-    kernel stage's task count; by default AQE sizes it from the shuffle
-    bytes (`kernel_input`)."""
+    and commit them (module docstring, steps 1-5): one Spark job (two with
+    its shuffle-map stage) writes the files, the driver commits them.
+    `parallelism` pins the kernel stage's task count; by default AQE sizes
+    it from the shuffle bytes (`kernel_input`)."""
     docs = with_partition_id(tio.read_documents(spark, input_path), n_buckets)
 
     # committed = lineage ∪ snapshot-owned (reconcile_committed docstring:
@@ -213,14 +206,11 @@ def run_extraction(
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        heal = spark.createDataFrame(
-            [
-                (owner, pid, cnts.get(pid, 0), None, None, None)
-                for pid, owner in sorted(orphans.items())
-            ],
-            schema=LINEAGE_ROW_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        tio.append_lineage(heal, lineage_path)
+        tio.append_lineage(
+            [(owner, pid, cnts.get(pid, 0), None, None, None)
+             for pid, owner in sorted(orphans.items())],
+            lineage_path,
+        )
     skipped = len(done_pids)
     if done_pids:
         done = spark.createDataFrame(
@@ -229,87 +219,46 @@ def run_extraction(
         # broadcast anti-join: the committed set is tiny (≤ n_buckets rows)
         docs = docs.join(F.broadcast(done), "partition_id", "left_anti")
 
-    # Per-partition doc counts for the lineage manifest, captured BEFORE
-    # salting/repartitioning: salt needs F.size(spans), so counting the
-    # post-salt frame would re-scan the heavy spans column and replay the
-    # repartition (ADVICE r2). This projection keeps the count job a
-    # doc_id-only pruned scan (partition_id is a function of doc_id).
-    part_counts = docs.select("partition_id")
-
-    extracted = extract_spans(
-        kernel_input(docs, salt_threshold, salt_k, parallelism),
-        with_images, pages, doc_budget_ms=doc_budget_ms,
-    )
-    # partition_id is recomputed from doc_id (deterministic hash) rather than
-    # threaded through the Arrow stage — keeps the UDF schema minimal
-    out = with_partition_id(extracted, n_buckets)
-
-    # Run-level extraction metrics are OBSERVED during the write job itself
-    # (the Iceberg snapshot-summary analog) — no second action ever touches
-    # the written output (r1 review item #6: the old post-write
-    # read_extracted + groupBy re-listed and re-read the output per run).
-    obs = Observation(f"extract-metrics-{run_id}")
-    out = out.observe(
-        obs,
-        F.count(F.lit(1)).alias("doc_count"),
-        F.sum("n_spans").cast("long").alias("span_count"),
-        F.sum("n_chars").cast("long").alias("byte_count"),
-        F.sum(F.when(~F.col("success"), 1).otherwise(0))
-        .cast("long")
-        .alias("failure_count"),
-    )
-    tio.write_extracted(out, output_path)
-    m = obs.get  # already collected by the write action — zero extra jobs
-
-    # Per-partition lineage rows (the manifest analog): partition presence +
-    # exact doc_count from the PRE-salt input projection — a doc_id-only
-    # pruned scan (partition_id is a function of doc_id). Extraction is
-    # strictly 1 doc → 1 row (error docs still produce rows), so input
-    # doc_count equals output doc_count. ≤ n_buckets rows → collected to the
-    # driver and appended as a local DataFrame; the append reads nothing.
-    parts = sorted(
-        (int(r["partition_id"]), int(r["n"]))
-        for r in part_counts.groupBy("partition_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    n_new = len(parts)
-    rows = [(run_id, pid, n, None, None, None) for pid, n in parts]
-    # run-summary record: partition_id = -1, full run metrics from observe
-    rows.append(
-        (
-            run_id,
-            -1,
-            int(m["doc_count"] or 0),
-            int(m["span_count"] or 0),
-            int(m["byte_count"] or 0),
-            int(m["failure_count"] or 0),
+    # Extraction is strictly 1 doc → 1 row (error docs still produce
+    # rows), so the manifest's per-file counts are the run's metrics: the
+    # per-partition doc_count and the summary totals are sums over it.
+    codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    with tio.staging_dir(output_path) as staging:
+        manifest = write_partition_files(
+            kernel_input(docs, salt_threshold, salt_k, parallelism),
+            staging, codec, with_images, pages, doc_budget_ms,
+        ).collect()
+        pids = tio.publish_partition_files(
+            output_path, staging, ((m["partition_id"], m["file"]) for m in manifest)
         )
-    )
-    lineage = spark.createDataFrame(
-        rows, schema=LINEAGE_ROW_SCHEMA
-    ).withColumn("committed_at", F.current_timestamp())
-    # Commit ORDER: data write → snapshot → lineage. A crash between
+    per_pid: Counter[int] = Counter()
+    for m in manifest:
+        per_pid[m["partition_id"]] += m["doc_count"]
+    totals = {
+        k: sum(m[k] for m in manifest)
+        for k in ("doc_count", "span_count", "byte_count", "failure_count")
+    }
+    rows = [(run_id, pid, per_pid[pid], None, None, None) for pid in pids]
+    rows.append((run_id, -1, *totals.values()))  # the run-summary record
+    # Commit ORDER: data publish → snapshot → lineage. A crash between
     # snapshot and lineage leaves a snapshot whose partitions all have
-    # written data (the write already happened) but no lineage row — the
-    # next run's reconcile_committed treats snapshot-owned partitions as
-    # committed (NOT re-processed: a rewrite would replace the files the
-    # pre-crash snapshot's time-travel read pins — r3 ADVICE, medium) and
-    # heals the missing lineage rows. The reverse order would leave
-    # lineage rows whose partitions never reach any snapshot: resume
-    # would skip them forever while snapshot reads silently miss
-    # committed data (r3 review #1).
-    if n_new:
-        tio.snapshot_commit(output_path, run_id, [pid for pid, _ in parts])
-    tio.append_lineage(lineage, lineage_path)
+    # published data but no lineage row — the next run's
+    # reconcile_committed treats snapshot-owned partitions as committed
+    # (NOT re-processed: a rewrite would replace the files the pre-crash
+    # snapshot's time-travel read pins — r3 ADVICE, medium) and heals the
+    # missing lineage rows. The reverse order would leave lineage rows
+    # whose partitions never reach any snapshot: resume would skip them
+    # forever while snapshot reads silently miss committed data (r3
+    # review #1). A crash before the snapshot leaves published but
+    # uncommitted directories, which the next run replaces.
+    if pids:
+        tio.snapshot_commit(output_path, run_id, pids)
+    tio.append_lineage(rows, lineage_path)
     return RunStats(
         run_id=run_id,
-        partitions_processed=n_new,
+        partitions_processed=len(pids),
         partitions_skipped=skipped,
-        doc_count=int(m["doc_count"] or 0),
-        span_count=int(m["span_count"] or 0),
-        byte_count=int(m["byte_count"] or 0),
-        failure_count=int(m["failure_count"] or 0),
+        **totals,
     )
 
 

@@ -69,9 +69,24 @@ OUTPUT_KINDS = frozenset({"heading", "text", "table", "image"})
 # return contract is the full schema, so the JVM row-converts every
 # returned column even if downstream reads none of them — measured 3.5×
 # the whole stats query at 1M docs, BENCH/BASELINE.md write-tax section).
-# Stats/QA consumers ask the kernel to not return spans at all.
+# Stats/QA consumers that read extract_spans' rows ask the kernel to not
+# return spans at all; pipeline.run_extraction returns no rows to the JVM.
 EXTRACTED_STATS_SCHEMA = T.StructType(
     [f for f in EXTRACTED_SCHEMA.fields if f.name != "out_spans"]
+)
+
+# One row per parquet file the extraction writer pass wrote
+# (operators/extract.write_partition_files): what the driver publishes and
+# sums into lineage. Nothing else of the extracted rows reaches the JVM.
+EXTRACT_MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("partition_id", T.IntegerType(), False),
+        T.StructField("file", T.StringType(), False),
+        T.StructField("doc_count", T.LongType(), False),
+        T.StructField("span_count", T.LongType(), False),
+        T.StructField("byte_count", T.LongType(), False),
+        T.StructField("failure_count", T.LongType(), False),
+    ]
 )
 
 # Driver `events` table shape (TESTDATA.md) — used by the streaming

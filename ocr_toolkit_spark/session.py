@@ -13,14 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-# docs per Arrow batch into the extract stage. 512 measured best end-to-end:
-# the JVM-side Arrow→row conversion of the returned span column allocates
-# per batch, and smaller batches keep GC pressure off the critical path at
-# high core counts (1024 → 2x slower at local[32]); below ~512 the per-batch
-# fixed costs dominate. AQE sizes the kernel stage (pipeline.kernel_input), so
-# a small run's tasks hold hundreds of docs and its batches fill to 512: on a
-# 2 000-doc local[3] run that measured ~4 % more peak RSS than 32 tasks of ~62
-# docs each.
+# docs per Arrow batch into the extract stage. 512 measured best end-to-end
+# when extract_spans returns its rows to the JVM: the Arrow→row conversion
+# of the returned span column allocates per batch, and smaller batches kept
+# GC pressure off the critical path at high core counts (1024 → 2x slower at
+# local[32]); below ~512 the per-batch fixed costs dominate.
+# pipeline.run_extraction returns only a file manifest, so there the value
+# bounds the kernel's per-batch Arrow memory instead. AQE sizes the kernel
+# stage (pipeline.kernel_input), so a small run's tasks hold hundreds of docs
+# and its batches fill to 512: on a 2 000-doc local[3] run that measured ~4 %
+# more peak RSS than 32 tasks of ~62 docs each.
 ARROW_MAX_RECORDS = 512
 
 

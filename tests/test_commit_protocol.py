@@ -28,6 +28,55 @@ def test_publish_and_overwrite_live_only_in_io():
         assert holders == [IO.relative_to(ROOT).as_posix()], (needle, holders)
 
 
+# builds the input corpora with pyarrow; it writes no engine table
+CORPUS_BUILDER = PKG / "fixtures.py"
+
+
+def test_renames_and_pyarrow_table_writes_live_only_in_io():
+    """Moving files into partition directories and writing parquet from
+    Python are commit-protocol steps: the extraction kernel's worker calls
+    io.write_parquet_file, and the driver io.publish_partition_files."""
+    srcs = _sources()
+    for needle in ("os.replace", "os.rename", "shutil.move", "ParquetWriter",
+                   "write_table"):
+        outside = [p.relative_to(ROOT).as_posix()
+                   for p, s in srcs.items()
+                   if needle in s and p not in (IO, CORPUS_BUILDER)]
+        assert outside == [], (needle, outside)
+    for needle in ("os.replace", "ParquetWriter", "write_table"):
+        assert needle in srcs[IO], needle
+
+
+def test_sweep_reclaims_and_report_lists_dead_staging_dirs(tmpdir_path):
+    """A write that died leaves its staging directory inside the table:
+    Spark's dynamic partition overwrite stages under `.spark-staging-<job>`
+    and io.staging_dir under `.staging-<id>`. The sweep reclaims both past
+    its age guard, and table_report lists them until then."""
+    import time
+
+    from ocr_toolkit_spark import io as tio
+
+    t = os.path.join(tmpdir_path, "t")
+    tio.snapshot_commit(t, "r0", [0])
+    dead = [".spark-staging-0f1e", f"{tio.STAGING_PREFIX}9a8b"]
+    for name in dead:
+        inner = os.path.join(t, name, "_temporary", "0", "partition_id=3")
+        os.makedirs(inner)
+        with open(os.path.join(inner, "part-0.parquet"), "wb") as f:
+            f.write(b"x")
+    assert tio.table_report(t)["staging_dirs"] == sorted(dead)
+    assert tio.sweep_orphan_partitions(t, older_than_s=3600) == []  # young
+
+    old = time.time() - 7200
+    for name in dead:
+        for root, dirs, files in os.walk(os.path.join(t, name)):
+            for n in dirs + files + [""]:
+                os.utime(os.path.join(root, n), (old, old))
+    assert tio.sweep_orphan_partitions(t, older_than_s=3600) == sorted(dead)
+    assert tio.table_report(t)["staging_dirs"] == []
+    assert sorted(os.listdir(t)) == ["_snapshots"]
+
+
 def test_operators_do_not_fold_the_snapshot_log():
     callers = []
     for p in sorted((PKG / "operators").rglob("*.py")):

@@ -34,32 +34,52 @@ def _run(spark, corpus, root, **kwargs):
     return out, lineage
 
 
+def _group_jobs(sc, group: str) -> list[int]:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _stage_task_counts(sc, group: str) -> list[int]:
     """Tasks run by each stage of the group's jobs (skipped stages run 0)."""
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     stages = {
         sid
-        for jid in tracker.getJobIdsForGroup(group)
+        for jid in _group_jobs(sc, group)
         for sid in tracker.getJobInfo(jid).stageIds
     }
     return [tracker.getStageInfo(sid).numCompletedTasks for sid in stages]
 
 
+def _run_in_group(spark, corpus, root, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_extraction")
+    try:
+        _run(spark, corpus, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_kernel_stage_is_sized_to_the_data(spark, corpus, tmpdir_path):
     sc = spark.sparkContext
     group = "test-kernel-sizing"
-    sc.setJobGroup(group, "run_extraction, AQE-sized kernel stage")
-    try:
-        _run(spark, corpus, tmpdir_path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _run_in_group(spark, corpus, tmpdir_path, group)
     counts = _stage_task_counts(sc, group)
     assert counts, "no stages recorded for the job group"
     # the kernel stage is the widest stage of the run; a pinned
     # repartition(shuffle.partitions) would run SHUFFLE_PARTITIONS tasks
     assert SHUFFLE_PARTITIONS > 2 * sc.defaultParallelism
     assert max(counts) <= 2 * sc.defaultParallelism, counts
+
+
+def test_fresh_run_is_one_write_job_and_its_shuffle(spark, corpus,
+                                                     tmpdir_path):
+    """The kernel writes the files and returns a manifest, and the driver
+    commits from it: the shuffle-map job of the salt repartition and the
+    kernel's own job are the whole run — no partition count, no Spark
+    write or lineage job."""
+    group = "test-run-jobs"
+    _run_in_group(spark, corpus, tmpdir_path, group)
+    assert len(_group_jobs(spark.sparkContext, group)) == 2
 
 
 def test_pinned_parallelism_writes_the_same_rows(spark, corpus, tmpdir_path):
