@@ -13,6 +13,7 @@ are present without oracle entries → driver records rows-only checks.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -882,6 +883,35 @@ def q_minhash_dedup(spark, sf_dir):
     ).crossJoin(_caps_summary(banded))
 
 
+def _side_tagged(frames, cols):
+    """The union of `frames`' `cols`, tagged with each frame's index `side`."""
+    return reduce(DataFrame.unionByName, (
+        f.select(*cols, F.lit(i).alias("side")) for i, f in enumerate(frames)))
+
+
+def _pair_proof(sided):
+    """(inc_pairs, full_pairs, pair_sym_diff) = (Σi, Σf, Σ|i − f|) over per-pair
+    side counts i, f; Σ|i − f| is the `exceptAll`-both-ways size on multisets."""
+    per_pair = sided.groupBy("id_a", "id_b").agg(*(
+        F.count_if(F.col("side") == s).alias(c) for s, c in ((0, "i"), (1, "f"))))
+    return per_pair.agg(*(F.coalesce(F.sum(c), F.lit(0)).alias(n) for c, n in (
+        (F.col("i"), "inc_pairs"), (F.col("f"), "full_pairs"),
+        (F.abs(F.col("i") - F.col("f")), "pair_sym_diff"))))
+
+
+def _loser_flags(d, sided):
+    """`d` with lose0/lose1: does keep-first dedup under side 0's / 1's pairs
+    drop the row? One CC run labels both graphs, apart by (id, side) keys."""
+    from ocr_toolkit_spark.operators.cc import connected_components
+
+    cc = connected_components(sided.select(*(
+        F.struct(F.col(c).alias("id"), "side").alias(c) for c in ("id_a", "id_b"))))
+    lose = cc.filter(F.col("node") != F.col("component")).groupBy(
+        F.col("node.id").alias("doc_id")
+    ).agg(*(F.max(F.col("node.side") == s).alias(f"lose{s}") for s in (0, 1)))
+    return d.join(lose, "doc_id", "left").fillna(False, ["lose0", "lose1"])
+
+
 def q_delta_dedup(spark, sf_dir):
     """Incremental (delta) near-dedup, SELF-VALIDATING (r4 verdict #2): the
     driver docs split 80/20 into a base ingest and a delta ingest; the
@@ -889,50 +919,40 @@ def q_delta_dedup(spark, sf_dir):
     banded state (operators/incremental.py), and the output carries the
     equivalence proof itself — pair_sym_diff and keep_sym_diff vs a full
     re-run on the union corpus, both must be 0."""
+    import shutil
     import tempfile
 
-    from ocr_toolkit_spark.operators.cc import near_dedup_keep_first
     from ocr_toolkit_spark.operators.dedup import (
         jaccard_verify,
         minhash_lsh_candidates,
     )
     from ocr_toolkit_spark.operators.incremental import incremental_dedup_round
+    from ocr_toolkit_spark.operators.skew import materialize
 
     d = _docs(spark, sf_dir)
-    base = d.filter(F.col("doc_id") % 10 < 8)
-    delta = d.filter(F.col("doc_id") % 10 >= 8)
+    is_base = F.col("doc_id") % 10 < 8
+    base, delta = d.filter(is_base), d.filter(~is_base)
     state = tempfile.mkdtemp(prefix="delta_dedup_state_")
     cfg = dict(k=5, n_hashes=32, bands=8, threshold=0.5)
 
     p0 = incremental_dedup_round(spark, base, base, state, "base", **cfg)
     p1 = incremental_dedup_round(spark, delta, d, state, "delta", **cfg)
-    inc_pairs = p0.unionByName(p1)
     # rounds materialize their pairs, so the returned plan never reads the
     # state dir — safe to drop the scratch state now
-    import shutil
-
     shutil.rmtree(state, ignore_errors=True)
 
     full_cand = minhash_lsh_candidates(d, k=5, n_hashes=32, bands=8)
     full_pairs = jaccard_verify(full_cand, d, k=5, threshold=0.5)
-
-    ip = inc_pairs.select("id_a", "id_b")
-    fp = full_pairs.select("id_a", "id_b")
-    pair_sym = ip.exceptAll(fp).unionAll(fp.exceptAll(ip))
-    keep_inc = near_dedup_keep_first(d, inc_pairs).select("doc_id")
-    keep_full = near_dedup_keep_first(d, full_pairs).select("doc_id")
-    keep_sym = keep_inc.exceptAll(keep_full).unionAll(
-        keep_full.exceptAll(keep_inc)
-    )
-    return (
-        base.agg(F.count("*").alias("base_docs"))
-        .crossJoin(delta.agg(F.count("*").alias("delta_docs")))
-        .crossJoin(ip.agg(F.count("*").alias("inc_pairs")))
-        .crossJoin(fp.agg(F.count("*").alias("full_pairs")))
-        .crossJoin(pair_sym.agg(F.count("*").alias("pair_sym_diff")))
-        .crossJoin(keep_inc.agg(F.count("*").alias("keep_docs")))
-        .crossJoin(keep_sym.agg(F.count("*").alias("keep_sym_diff")))
-    )
+    # materialized: the pair grouping and the labelling both read it
+    sided = materialize(
+        _side_tagged([p0.unionByName(p1), full_pairs], ["id_a", "id_b"]))
+    return _loser_flags(d, sided).agg(
+        F.count_if(is_base).alias("base_docs"),
+        F.count_if(~is_base).alias("delta_docs"),
+        F.count_if(~F.col("lose0")).alias("keep_docs"),
+        F.count_if(F.col("lose0") != F.col("lose1")).alias("keep_sym_diff"),
+    ).crossJoin(_pair_proof(sided)).select("base_docs", "delta_docs",
+        "inc_pairs", "full_pairs", "pair_sym_diff", "keep_docs", "keep_sym_diff")
 
 
 def q_simhash_dedup(spark, sf_dir):
@@ -957,29 +977,31 @@ def q_simhash_dedup(spark, sf_dir):
     ).crossJoin(_caps_summary(pieces))
 
 
-def _ann_recall_report(ann, bf, k, floor):
-    """Self-validating ANN output (r2 review #6): recall@k of the ANN
-    result against the in-query exact brute force, plus the asserted
-    floor — the driver's rows-only record carries the quality bound in
-    the output itself (the corpus_qa pattern). Per-query recall divides
-    by the brute-force result COUNT, not the constant k, so a corpus with
-    fewer than k neighbors still scores a perfect ANN as 1.0."""
-    hits = (
-        ann.join(bf.select("query_id", "neighbor_id"),
-                 ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id").agg(F.count("*").alias("hits"))
-    )
+def _ann_recall_report(anns, bf, k, floor):
+    """Self-validating ANN output (r2 review #6): recall@k of each ANN result in
+    `anns` (columns suffixed _i after the first) against the in-query exact
+    brute force, plus the asserted floor — the driver's rows-only record
+    carries the quality bound in the output itself (the corpus_qa pattern).
+    Per-query recall divides by the brute-force result COUNT, not the constant
+    k, so a corpus with fewer than k neighbors still scores a perfect ANN as 1.0."""
+    key = ["query_id", "neighbor_id"]
+    sfx = [f"_{i}" if i else "" for i in range(len(anns))]
+    # side 0 is the brute force itself, which its own semi-join keeps whole
     per_q = (
-        bf.groupBy("query_id").agg(F.count("*").alias("n_bf"))
-        .join(hits, "query_id", "left").fillna(0, ["hits"])
+        _side_tagged([bf, *anns], key)
+        .join(bf.select(*key), key, "left_semi")
+        .groupBy("query_id")
+        .agg(*(F.count_if(F.col("side") == i).alias(f"n{i}")
+               for i in range(len(anns) + 1)))
     )
-    recall = F.col("hits") / F.col("n_bf")
+    recall = [(F.avg(F.col(f"n{i}") / F.col("n0")), x)
+              for i, x in enumerate(sfx, 1)]
     return per_q.agg(
         F.count("*").alias("queries"),
         F.lit(k).alias("k"),
-        F.round(F.avg(recall), 4).alias("mean_recall"),
+        *(F.round(r, 4).alias(f"mean_recall{x}") for r, x in recall),
         F.lit(floor).alias("recall_floor"),
-        (F.avg(recall) >= floor).alias("meets_floor"),
+        *((r >= floor).alias(f"meets_floor{x}") for r, x in recall),
     )
 
 
@@ -991,7 +1013,7 @@ def q_lsh_topk(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 5)
     ann = lsh_topk(e, q, dim=dim, k=10, n_bits=4, n_probe=3, n_tables=4)
     bf = brute_force_topk(e, q, k=10)
-    return _ann_recall_report(ann, bf, k=10, floor=0.65)
+    return _ann_recall_report([ann], bf, k=10, floor=0.65)
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -1002,7 +1024,7 @@ def q_ivf_topk(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 5)
     ann = ivf_topk(e, q, dim=dim, k=10, n_centroids=16, n_probe=8)
     bf = brute_force_topk(e, q, k=10)
-    return _ann_recall_report(ann, bf, k=10, floor=0.65)
+    return _ann_recall_report([ann], bf, k=10, floor=0.65)
 
 
 def q_embedding_near_dups(spark, sf_dir):
@@ -1115,8 +1137,8 @@ def q_delta_embedding_dedup(spark, sf_dir):
         ).alias("embedding"),
     )
     e = e.select("vec_id", "embedding").unionByName(planted)
-    base = e.filter(F.col("vec_id") % 10 < 8)
-    delta = e.filter(F.col("vec_id") % 10 >= 8)
+    is_base = F.col("vec_id") % 10 < 8
+    base, delta = e.filter(is_base), e.filter(~is_base)
     state = tempfile.mkdtemp(prefix="delta_embed_state_")
     # 14 bits → 16,384 buckets: the sym-diff==0 contract below holds only
     # while no bucket exceeds skew.DEFAULT_MAX_BUCKET (under capping the
@@ -1141,25 +1163,15 @@ def q_delta_embedding_dedup(spark, sf_dir):
         e, dim=dim, threshold=0.9, n_bits=cfg["n_bits"], seed=cfg["seed"],
         id_col="vec_id", vec_col="embedding", return_bucketed=True,
     )
-    ip = inc_pairs.select("id_a", "id_b").distinct()
-    fp = full.select("id_a", "id_b").distinct()
-    pair_sym = ip.exceptAll(fp).unionAll(fp.exceptAll(ip))
-    caps = _caps_summary(bucketed).select("buckets_capped")
+    ip, fp = (p.select("id_a", "id_b").distinct() for p in (inc_pairs, full))
+    min_sim = F.coalesce(F.min("sim"), F.lit(1.0))
     return (
-        base.agg(F.count("*").alias("base_vecs"))
-        .crossJoin(delta.agg(F.count("*").alias("delta_vecs")))
-        .crossJoin(ip.agg(F.count("*").alias("inc_pairs")))
-        .crossJoin(fp.agg(F.count("*").alias("full_pairs")))
-        .crossJoin(pair_sym.agg(F.count("*").alias("pair_sym_diff")))
-        .crossJoin(
-            inc_pairs.agg(
-                F.round(F.coalesce(F.min("sim"), F.lit(1.0)), 4).alias(
-                    "min_sim"),
-                (F.coalesce(F.min("sim"), F.lit(1.0)) >= 0.9).alias(
-                    "meets_threshold"),
-            )
-        )
-        .crossJoin(caps)
+        e.agg(F.count_if(is_base).alias("base_vecs"),
+              F.count_if(~is_base).alias("delta_vecs"))
+        .crossJoin(_pair_proof(_side_tagged([ip, fp], ["id_a", "id_b"])))
+        .crossJoin(inc_pairs.agg(F.round(min_sim, 4).alias("min_sim"),
+                                 (min_sim >= 0.9).alias("meets_threshold")))
+        .crossJoin(_caps_summary(bucketed).select("buckets_capped"))
     )
 
 
@@ -1200,9 +1212,9 @@ def q_ivf_index_delta(spark, sf_dir):
     (quantizer trained once, pinned) and a delta append (assigned with
     the FROZEN quantizer — O(delta), drift-gated). The output carries the
     equivalence proof: recall@10 vs in-query exact brute force for BOTH
-    the delta-appended index and a full union rebuild, their difference,
-    and the delta's quantization-error ratio (must sit under the pinned
-    drift trigger)."""
+    the delta-appended index and a full union rebuild (both from one
+    _ann_recall_report pass), their difference, and the delta's
+    quantization-error ratio (must sit under the pinned drift trigger)."""
     import shutil
     import tempfile
 
@@ -1216,8 +1228,8 @@ def q_ivf_index_delta(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
-    base = e.filter(F.col("vec_id") % 10 < 8)
-    delta = e.filter(F.col("vec_id") % 10 >= 8)
+    is_base = F.col("vec_id") % 10 < 8
+    base, delta = e.filter(is_base), e.filter(~is_base)
     q = e.filter(F.col("vec_id") < 5)
 
     root = tempfile.mkdtemp(prefix="ivf_index_delta_")
@@ -1230,35 +1242,22 @@ def q_ivf_index_delta(spark, sf_dir):
         bf = brute_force_topk(e, q, k=10)
         ann_d = ivf_index_topk(spark, q, idx, k=10, n_probe=8)
         ann_f = ivf_index_topk(spark, q, idx_full, k=10, n_probe=8)
-        rep = (
-            _ann_recall_report(ann_d, bf, k=10, floor=0.65)
+        # the report reads the scratch index dirs — pin its rows before
+        # deleting them (the q_delta_dedup precedent)
+        rep = materialize(
+            _ann_recall_report([ann_d, ann_f], bf, k=10, floor=0.65)
             .select(
                 "queries", "k",
                 F.col("mean_recall").alias("recall_delta_index"),
                 F.col("meets_floor").alias("delta_meets_floor"),
+                F.col("mean_recall_1").alias("recall_full_rebuild"),
+                (F.abs(F.col("mean_recall") - F.col("mean_recall_1"))
+                 <= 0.05).alias("recall_parity_ok"),
             )
-            .crossJoin(
-                _ann_recall_report(ann_f, bf, k=10, floor=0.65).select(
-                    F.col("mean_recall").alias("recall_full_rebuild")
-                )
-            )
-            .withColumn(
-                "recall_parity_ok",
-                F.abs(
-                    F.col("recall_delta_index")
-                    - F.col("recall_full_rebuild")
-                ) <= 0.05,
-            )
-            .crossJoin(
-                base.agg(F.count("*").alias("base_vecs")).crossJoin(
-                    delta.agg(F.count("*").alias("delta_vecs"))
-                )
-            )
+            .crossJoin(e.agg(F.count_if(is_base).alias("base_vecs"),
+                             F.count_if(~is_base).alias("delta_vecs")))
             .withColumn("delta_qerr_ratio", F.lit(arep["qerr_ratio"]))
         )
-        # the report still reads the scratch index dirs — pin the rows
-        # before deleting them (the q_delta_dedup precedent)
-        rep = materialize(rep)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return rep

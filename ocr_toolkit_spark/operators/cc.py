@@ -17,11 +17,13 @@ regardless of corpus size.
 Chains are not this workload's shape: a graph whose diameter exceeds
 `max_iter` raises instead of returning wrong labels.
 
-Scale shape per round: one shuffle join (edges ⋈ labels on dst) + one hash
-agg (min per src) + one join back — all on node-id keys. `skew.materialize`
-every round truncates the growing lineage so round N's plan does not
-re-execute rounds 1..N-1, and the same checkpoint job counts the changed
-labels (an `Observation`), so the convergence test runs no job.
+Scale shape: one checkpoint of the symmetric edge set, then per round one
+shuffle join (edges ⋈ labels on dst) + one hash agg (min per src) + one join
+back — on node keys of any orderable type (struct `(id, side)` keys label
+two disjoint graphs in one run). `skew.materialize` every round truncates the
+growing lineage so round N's plan does not re-execute rounds 1..N-1, and
+the same checkpoint job counts the changed labels (an `Observation`), so
+the convergence test runs no job.
 """
 
 from __future__ import annotations
@@ -47,20 +49,15 @@ def connected_components(
     convergence, so calling it executes the full upstream lineage
     (unlike the dedup candidate generators, which are plan-only until an
     action; r4 review #3)."""
-    # one materialization of the (src, dst) projection: the symmetric edge
-    # union references it twice, and `pairs` may carry an expensive
-    # unmaterialized LSH/verify lineage (r4 review pass 2, #1)
-    e = materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    )
-    edges = materialize(e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct())
-
-    labels = materialize(
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-    )
+    # one checkpoint: the symmetric distinct edge set, exploded from a
+    # single reference to `pairs` (which may carry an unmaterialized
+    # LSH/verify lineage); the initial labels derive from it
+    edges = materialize(pairs.select(F.explode(F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+    )).alias("e")).select("e.src", "e.dst").distinct())
+    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
+        "label", F.col("node"))
 
     for _ in range(max_iter):
         nbr_min = (

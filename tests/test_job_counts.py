@@ -5,7 +5,8 @@ not compute, are the cost; a new barrier, probe or second pass shows up
 here as a higher count. Counts are read per job group through
 `statusTracker`, as in test_kernel_sizing.py, over the entry's call and the
 driver's `toPandas()` collect. When a change lowers a count, lower its
-figure here with it."""
+figure here with it. The collected rows must also pass the entries' own
+proofs: every self-validating column that an entry emits holds."""
 
 import pytest
 
@@ -16,10 +17,21 @@ JOBS_AT_SF001 = {
     "minhash_dedup": 21,
     "simhash_dedup": 13,
     "embedding_near_dups": 21,
-    "delta_dedup": 109,
-    "delta_embedding_dedup": 74,
-    "ivf_index_delta": 53,
-    "near_dup_components": 22,
+    "delta_dedup": 76,
+    "delta_embedding_dedup": 68,
+    "ivf_index_delta": 47,
+    "near_dup_components": 21,
+}
+
+# the self-validating columns and the value each must hold
+PROOFS = {
+    "pair_sym_diff": lambda v: v == 0,
+    "keep_sym_diff": lambda v: v == 0,
+    "meets_threshold": bool,
+    "within_cutoff": bool,
+    "slice_recall_ok": bool,
+    "delta_meets_floor": bool,
+    "recall_parity_ok": bool,
 }
 
 
@@ -31,10 +43,13 @@ def test_entry_job_count_does_not_rise(spark, name):
     group = f"test-job-count-{name}"
     sc.setJobGroup(group, name)
     try:
-        em.queries()[name](spark, SF_DIR).toPandas()
+        rows = em.queries()[name](spark, SF_DIR).toPandas()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= JOBS_AT_SF001[name], (
         f"{name} ran {jobs} jobs; budget {JOBS_AT_SF001[name]}")
+    for col, holds in PROOFS.items():
+        if col in rows:
+            assert rows[col].map(holds).all(), (name, col, list(rows[col]))

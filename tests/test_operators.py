@@ -586,7 +586,7 @@ class TestR3ReviewFixes:
             [(i, [float(i), 1.0]) for i in range(4)],
             "vec_id int, embedding array<float>")
         bf = brute_force_topk(vecs, vecs, k=10)  # ≤3 neighbors per query
-        rep = em._ann_recall_report(bf, bf, k=10, floor=0.9).collect()[0]
+        rep = em._ann_recall_report([bf], bf, k=10, floor=0.9).collect()[0]
         assert rep["mean_recall"] == 1.0 and rep["meets_floor"]
 
 
